@@ -56,9 +56,9 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
     } else {
       val all = catalog.prunedPaths(db, table, None)
       if (all.isEmpty) spark.emptyDataFrame
-      else { // empty result with the table's real schema (quirk §2.3-6 fix)
-        val schema = Tables.readEvolving(
-          spark, all, Seq("ts", "time", timeCol).distinct).schema
+      else { // empty result with the table's real schema (quirk §2.3-6 fix),
+        // from memoized footers: no scan or listing of the whole table
+        val schema = Tables.evolvingSchema(spark, all, Seq("ts", "time", timeCol).distinct)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       }
     }
@@ -112,10 +112,10 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
             // zone maps are int64-ns by the lake contract; a table whose
             // time column is TimestampType would scan to timestamps, so
             // the LongType answer would be wrong — verify the type from
-            // ONE parquet footer (metadata read, still no data scan)
+            // ONE memoized parquet footer (no data scan, no Spark job)
             val boundsTypeOk = !needBounds ||
               catalog.prunedPaths(d, t, None).headOption.forall { p =>
-                scala.util.Try(spark.read.parquet(p).schema).toOption
+                scala.util.Try(Tables.footerSchema(spark, p)).toOption
                   .flatMap(_.fields.find(_.name.equalsIgnoreCase(timeCol)))
                   .exists(_.dataType == org.apache.spark.sql.types.LongType)
               }

@@ -62,8 +62,9 @@ object Tables {
         .exists(_.rules.exists(_ eq plans.NsTimeFilterPushdown)))
 
   // Memoize per (session, path, file fingerprint): a DataFrame is just a
-  // plan, but building it costs a file listing + footer schema read —
-  // per-query that dominates small-query latency when ~150 queries share
+  // plan, but building it costs a file listing plus a footer-schema
+  // lookup (a footer read the first time a file is seen, see
+  // [[footerSchema]]) — per query that adds up when ~150 queries share
   // 10 tables. The fingerprint (mtime+length of the path) keys out
   // in-place regenerations, the LRU bound ages out dropped lakes, and a
   // per-load sweep drops every entry belonging to a stopped session — a
@@ -81,8 +82,8 @@ object Tables {
     * (one listing for a directory-backed table: a dir's own mtime does
     * NOT change when a same-named child is rewritten in place, so the
     * child (name, len, mtime) triples are mixed in), strictly cheaper
-    * than the footer read it guards. 0 when the path is not yet
-    * statable (the read itself will surface the error). */
+    * than the plan it guards. 0 when the path is not yet statable (the
+    * read itself will surface the error). */
   private def fingerprint(spark: SparkSession, path: String): Long =
     try {
       val p = new org.apache.hadoop.fs.Path(path)
@@ -105,12 +106,12 @@ object Tables {
       val hit = cache.get(key)
       if (hit != null) return hit
     }
-    // plan construction (file listing + footer schema read — seconds on
-    // a remote lake) happens OUTSIDE the lock so one slow first load
-    // cannot stall every other session's cache hits; a concurrent
-    // duplicate build is harmless (the plans are identical) and the
-    // second put wins
-    val df = normalizeTs(spark.read.parquet(path))
+    // plan construction (file listing, and a footer read on a file's
+    // first sight — seconds on a remote lake) happens OUTSIDE the lock
+    // so one slow first load cannot stall every other session's cache
+    // hits; a concurrent duplicate build is harmless (the plans are
+    // identical) and the second put wins
+    val df = normalizeTs(spark.read.schema(footerSchema(spark, path)).parquet(path))
     cache.synchronized { cache.put(key, df) }
     df
   }
@@ -180,12 +181,34 @@ object Tables {
    * (CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE), so files are grouped by
    * footer schema, each group is read once, casts are applied to the
    * widened union schema, and groups union by name with nulls for
-   * missing columns. One driver-side footer pass — the data itself is
-   * still read exactly once, distributed.
+   * missing columns. Schemas come from the driver-side footer memo
+   * ([[footerSchema]]) and are handed to each group's scan, so
+   * resolving them launches no Spark job — the data itself is still
+   * read exactly once, distributed.
    */
   def readEvolving(spark: SparkSession, paths: Seq[String],
-                   timeCols: Seq[String] = Seq("ts", "time")): DataFrame = {
+                   timeCols: Seq[String] = Seq("ts", "time")): DataFrame =
+    readGroups(spark, schemaGroups(spark, paths), timeCols)
+
+  /** The schema [[readEvolving]] gives `paths`, from the footer memo
+    * and one file per schema group: the full file set is never listed
+    * or scanned (the empty-window answer over a whole table). */
+  def evolvingSchema(spark: SparkSession, paths: Seq[String],
+                     timeCols: Seq[String]): StructType =
+    readGroups(spark, schemaGroups(spark, paths).map { case (s, ps) => (s, ps.take(1)) },
+      timeCols).schema
+
+  /** `paths` grouped by memoized footer schema, path order kept within a group. */
+  private def schemaGroups(spark: SparkSession,
+                           paths: Seq[String]): Seq[(StructType, Seq[String])] = {
     configure(spark)
+    val conf = spark.sessionState.newHadoopConf()
+    paths.map(p => (footerSchema(spark, p, conf), p))
+      .groupBy(_._1).view.mapValues(_.map(_._2)).toSeq
+  }
+
+  private def readGroups(spark: SparkSession, groups: Seq[(StructType, Seq[String])],
+                         timeCols: Seq[String]): DataFrame = {
     // The int64-ns normalization must happen PER RAW-SCHEMA GROUP,
     // before widening: a table holding both a NANOS-annotated file
     // (LongType via nanosAsLong) and a µs-timestamp file would
@@ -194,28 +217,101 @@ object Tables {
     // keyed by the RAW footer schema (mixed-annotation files must not
     // share one parquet scan), while the widened union runs over the
     // POST-normalization types.
-    def norm(df: DataFrame): DataFrame = timeCols.foldLeft(df)(normalizeTs)
-    def normType(f: StructField): DataType =
-      if (timeCols.exists(_.equalsIgnoreCase(f.name)) &&
-        (f.dataType == TimestampType || f.dataType == TimestampNTZType)) LongType
-      else f.dataType
-    val bySchema = paths.map(p => (spark.read.parquet(p).schema, p))
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toSeq
-    if (bySchema.size == 1)
-      return norm(spark.read.parquet(paths: _*))
+    val dfs = groups.map { case (schema, ps) =>
+      timeCols.foldLeft(spark.read.schema(schema).parquet(ps: _*))(normalizeTs)
+    }
+    if (dfs.size == 1) return dfs.head
     // widened union-by-name schema over all file groups
     val merged = scala.collection.mutable.LinkedHashMap[String, DataType]()
-    bySchema.foreach { case (schema, _) =>
-      schema.fields.foreach { f =>
-        merged(f.name) = merged.get(f.name).map(widen(_, normType(f))).getOrElse(normType(f))
-      }
-    }
-    bySchema.map { case (schema, ps) =>
-      val have = schema.fieldNames.toSet
-      norm(spark.read.parquet(ps: _*)).select(merged.toSeq.map { case (name, dt) =>
+    dfs.foreach(_.schema.fields.foreach { f =>
+      merged(f.name) = merged.get(f.name).map(widen(_, f.dataType)).getOrElse(f.dataType)
+    })
+    dfs.map { df =>
+      val have = df.schema.fieldNames.toSet
+      df.select(merged.toSeq.map { case (name, dt) =>
         if (have(name)) col(name).cast(dt).as(name)
         else lit(null).cast(dt).as(name)
       }: _*)
     }.reduce(_.unionByName(_))
   }
+
+  // ---- footer-schema memo ----------------------------------------------
+
+  import org.apache.hadoop.conf.Configuration
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  import org.apache.parquet.schema.MessageType
+  import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetReadSupport, ParquetToSparkSchemaConverter}
+
+  private val SparkRowMetaKey = ParquetReadSupport.SPARK_METADATA_KEY
+
+  /** What Spark's schema inference reads from a footer, and nothing
+    * that depends on a session conf: the parquet schema and Spark's
+    * row-metadata JSON (absent in files other writers produced). */
+  private final case class FooterMeta(parquet: MessageType, sparkRowMeta: Option[String])
+
+  // Keyed by (file, length, mtime), so an in-place rewrite misses and a
+  // compaction's new files are read fresh; LRU-bounded like `cache`.
+  private val MaxFooters = 4096
+  private val footers =
+    new java.util.LinkedHashMap[(String, Long, Long), FooterMeta](256, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, Long, Long), FooterMeta]): Boolean =
+        size() > MaxFooters
+    }
+
+  /**
+   * The Spark schema of one parquet path, converted by the function
+   * Spark's own inference uses (`ParquetFileFormat.readSchemaFromFooter`)
+   * under the session's current confs (`nanosAsLong`, `binaryAsString`,
+   * …), so `spark.read.schema(footerSchema(spark, p)).parquet(p)`
+   * has exactly the schema of `spark.read.parquet(p)`. The footer
+   * itself is read on the driver at most once per (file, length,
+   * mtime); a concurrent duplicate read is harmless. No Spark job. A
+   * directory resolves to the file Spark's inference would read. A
+   * missing path throws `FileNotFoundException`.
+   */
+  def footerSchema(spark: SparkSession, path: String): StructType =
+    footerSchema(spark, path, spark.sessionState.newHadoopConf())
+
+  private def footerSchema(spark: SparkSession, path: String, conf: Configuration): StructType = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.metadata.{FileMetaData, ParquetMetadata}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val st = inferenceFile(path, conf)
+    val key = (st.getPath.toString, st.getLen, st.getModificationTime)
+    val meta = Option(footers.synchronized(footers.get(key))).getOrElse {
+      val fm = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(st, conf), SKIP_ROW_GROUPS)
+        .getFileMetaData
+      val m = FooterMeta(fm.getSchema, Option(fm.getKeyValueMetaData.get(SparkRowMetaKey)))
+      footers.synchronized(footers.put(key, m))
+      m
+    }
+    val kv = new java.util.HashMap[String, String]()
+    meta.sparkRowMeta.foreach(kv.put(SparkRowMetaKey, _))
+    ParquetFileFormat.readSchemaFromFooter(
+      new Footer(st.getPath, new ParquetMetadata(
+        new FileMetaData(meta.parquet, kv, null), java.util.Collections.emptyList())),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** `path` itself, or for a directory the file Spark's non-merging
+    * inference reads: the first data file of its recursive listing in
+    * path order (hidden `_`/`.` names skipped, `_k=v` partition dirs
+    * kept). */
+  private def inferenceFile(path: String, conf: Configuration): FileStatus = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val st = fs.getFileStatus(p)
+    if (!st.isDirectory) return st
+    def visible(n: String) = !(n.startsWith(".") || (n.startsWith("_") && !n.contains("=")))
+    def leaves(d: FileStatus): Seq[FileStatus] =
+      fs.listStatus(d.getPath).toSeq.filter(c => visible(c.getPath.getName))
+        .flatMap(c => if (c.isDirectory) leaves(c) else Seq(c))
+    leaves(st).minByOption(_.getPath.toString)
+      .getOrElse(throw new java.io.FileNotFoundException(s"no parquet file under $path"))
+  }
+
+  /** Test hook: number of memoized footers. */
+  private[graft] def footerCount: Int = footers.synchronized(footers.size())
 }

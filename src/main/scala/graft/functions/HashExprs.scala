@@ -191,7 +191,7 @@ object HashExprs {
     * value, and both compare position by position), so sorting or
     * range-partitioning by this column is order-identical to sorting
     * by [[graft.operators.Sampling.rankKey]]'s hex string at half
-    * the key bytes — pinned in ShingleParitySpec. */
+    * the key bytes — pinned in Round20OptSpec. */
   def md5DigestBytes(s: UTF8String): Array[Byte] = md5Bytes(s)
 
   def md5_bytes(c: Column): Column =

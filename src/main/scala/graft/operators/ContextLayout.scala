@@ -189,7 +189,7 @@ object ContextLayout {
    * checkpoint to re-derive an order the first pass already had in
    * hand (§2). One [[Packing.prefixByKey2]] pass computes both
    * cumulative sums; rows are exactly the composition's (pinned in
-   * ContextLayoutSpec).
+   * Round20OptSpec).
    *
    * `docs` must cover every node id (the [[inContextLayout]]
    * contract — ids match); rows are inner-joined, so the ordinal

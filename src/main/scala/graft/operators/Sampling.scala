@@ -38,7 +38,7 @@ object Sampling {
 
   /** [[rankKey]] as the raw 16 digest bytes — the SAME total order as
     * the 32-char hex string (lowercase hex is ASCII-monotone in the
-    * nibble value, position by position; pinned in ShingleParitySpec)
+    * nibble value, position by position; pinned in Round20OptSpec)
     * at half the sort-key bytes, with no hex render at all. Use for
     * ORDERING; keep [[rankKey]] where the hex string itself is the
     * contract (value comparisons against hex literals, emitted

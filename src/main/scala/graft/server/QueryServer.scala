@@ -24,6 +24,7 @@ class QueryServer(engine: Engine, port: Int = 8080,
                   disableUi: Boolean = false) {
   private val mapper = new ObjectMapper()
   private var server: HttpServer = _
+  private var executor: java.util.concurrent.ExecutorService = _
 
   private def cors(ex: HttpExchange): Unit = {
     val h = ex.getResponseHeaders
@@ -130,11 +131,18 @@ class QueryServer(engine: Engine, port: Int = 8080,
       finally ex.close()
     })
 
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
+    executor = java.util.concurrent.Executors.newFixedThreadPool(8)
+    server.setExecutor(executor)
     server.start()
   }
 
-  def stop(): Unit = if (server != null) server.stop(0)
+  /** Close the listener and release the request threads (in-flight
+    * requests finish first). */
+  def stop(): Unit = {
+    if (server != null) server.stop(0)
+    if (executor != null) executor.shutdown()
+  }
+  private[graft] def requestExecutor: java.util.concurrent.ExecutorService = executor
   def boundPort: Int = server.getAddress.getPort
 }
 

@@ -97,9 +97,14 @@ class CatalogEngineSpec extends AnyFunSuite {
   }
 
   test("engine: empty pruned set → empty DataFrame with schema (quirk §2.3-6 fix)") {
-    val df = engine.query(
-      "SELECT * FROM mydb.meas WHERE time >= '2030-01-01T00:00:00Z'", "")
-    assert(df.schema.fieldNames.contains("temperature"))
+    // the schema comes from memoized footers: no Spark job before execution
+    val (df, jobs) = SparkJobCounter(spark)(engine.query(
+      "SELECT * FROM mydb.meas WHERE time >= '2030-01-01T00:00:00Z'", ""))
+    assert(jobs == 0, s"empty-window query launched $jobs Spark job(s) before execution")
+    assert(df.schema.map(f => (f.name, f.dataType)) == Seq(
+      "time" -> org.apache.spark.sql.types.LongType,
+      "location" -> org.apache.spark.sql.types.StringType,
+      "temperature" -> org.apache.spark.sql.types.DoubleType))
     assert(df.count() == 0)
   }
 

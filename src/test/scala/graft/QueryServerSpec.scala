@@ -141,6 +141,21 @@ class QueryServerSpec extends AnyFunSuite {
     } finally s.stop()
   }
 
+  test("stop() shuts down the request executor") {
+    val engine = new Engine(spark, new Catalog(
+      Files.createTempDirectory(new File("target").toPath.toAbsolutePath,
+        "stoplake").toFile.getAbsolutePath))
+    val s = new QueryServer(engine, 0)
+    s.start()
+    val r = client.send(HttpRequest.newBuilder(
+      URI.create(s"http://localhost:${s.boundPort}/health")).GET().build(),
+      HttpResponse.BodyHandlers.ofString())
+    assert(r.statusCode() == 200)
+    s.stop()
+    assert(s.requestExecutor.isShutdown)
+    assert(s.requestExecutor.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS))
+  }
+
   test("error contract: bad SQL and missing query") {
     val bad = post("/query", """{"query":"SELEKT"}""")
     assert(bad.statusCode() == 400 && bad.body().contains("\"error\""))

@@ -108,6 +108,22 @@ class TsEncodingSpec extends AnyFunSuite {
     }
   }
 
+  test("footer memo resolves every encoding exactly as Spark inference does") {
+    dirs.foreach { case (enc, dir) =>
+      // NANOS is a bare file; the Spark-written encodings are directories
+      val table = s"$dir/events.parquet"
+      val files = Seq(table) ++ Option(new java.io.File(table).listFiles()).toSeq.flatten
+        .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
+      files.foreach { p =>
+        val inferred = spark.read.parquet(p).schema
+        assert(spark.read.schema(Tables.footerSchema(spark, p)).parquet(p).schema == inferred,
+          s"encoding $enc: $p")
+        assert(Tables.footerSchema(spark, p).map(_.dataType) == inferred.map(_.dataType),
+          s"encoding $enc: $p")
+      }
+    }
+  }
+
   test("mixed annotations WITHIN one table read as the unified ns contract") {
     // the drift landing mid-table: one plain-int64 file + one µs file
     // in the same directory. readEvolving must normalize per schema
