@@ -1,8 +1,7 @@
 package graft
 
 import java.io.File
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import scala.jdk.CollectionConverters._
+import graft.CatalogBackend.{FileStat, isParquet, skipDir}
 
 /**
  * Lake catalog: resolves `db.table` to a minimal list of parquet files
@@ -22,6 +21,11 @@ import scala.jdk.CollectionConverters._
  *    pruning, correctness preserved — pruning is an optimization
  *    only, quirk §2.3-7).
  *
+ * Everything here comes from ONE recursive walk ([[files]]): the
+ * on-disk parquet files, each with its sidecar entry attached. The
+ * listing decides which files exist (a sidecar entry whose file is
+ * gone counts nowhere); the sidecar supplies their stats.
+ *
  * This is driver-side path pruning BEFORE `spark.read.parquet`, the
  * Spark-idiomatic analog of the reference's scan planning: at 100 TB
  * the file listing is O(metadata), and everything that survives
@@ -29,135 +33,55 @@ import scala.jdk.CollectionConverters._
  * min/max pushdown below it.
  */
 class Catalog(val root: String) extends CatalogBackend {
-  private val mapper = new ObjectMapper()
-
-  case class FileEntry(path: String, minTime: Option[Long], maxTime: Option[Long])
 
   private def subdirs(f: File): Seq[File] =
-    Option(f.listFiles()).map(_.toSeq.filter(d => d.isDirectory &&
-      !d.getName.startsWith("_") && !d.getName.startsWith("."))).getOrElse(Nil)
+    Option(f.listFiles()).toSeq.flatten.filter(d => d.isDirectory && !skipDir(d.getName))
 
   def databases: Seq[String] = subdirs(new File(root)).map(_.getName).sorted
 
   def tables(db: String): Seq[String] =
     subdirs(new File(root, db)).map(_.getName).sorted
 
-  /** Overlap test on inclusive zone-map bounds (missing stats ⇒ keep). */
-  private def overlaps(min: Option[Long], max: Option[Long],
-                       range: Option[(Long, Long)]): Boolean = range match {
-    case None => true
-    case Some((start, end)) =>
-      max.forall(_ >= start) && min.forall(_ <= end)
-  }
+  private def tableDir(db: String, table: String) = new File(new File(root, db), table)
 
-  private def parseMeta(dir: File): Option[JsonNode] = {
-    val f = new File(dir, "metadata.json")
-    if (f.isFile) scala.util.Try(mapper.readTree(f)).toOption else None
-  }
-
-  private def optLong(n: JsonNode, field: String): Option[Long] =
-    Option(n.get(field)).filter(_.isNumber).map(_.asLong())
-
-  /** Recursively list parquet files under a table dir, zone-map-pruned. */
-  def files(db: String, table: String,
-            range: Option[(Long, Long)] = None): Seq[FileEntry] = {
-    def walk(dir: File): Seq[FileEntry] = {
-      // tmp/ = half-written data (reference convention); _/. prefixes =
-      // hidden sidecars (Hadoop convention — Spark's own FileIndex
-      // ignores them too, e.g. the _signatures dedup store)
-      if (dir.getName == "tmp" || dir.getName.startsWith("_") ||
-          dir.getName.startsWith(".")) return Nil
-      val meta = parseMeta(dir)
-      // folder-level skip
-      if (meta.exists(m => !overlaps(optLong(m, "min_time"), optLong(m, "max_time"), range)))
-        return Nil
-      val withStats: Map[String, (Option[Long], Option[Long])] = meta match {
-        case Some(m) if m.has("files") =>
-          m.get("files").elements().asScala.map { fn =>
-            val p = Option(fn.get("path")).map(_.asText()).getOrElse("")
-            new File(p).getName -> (optLong(fn, "min_time"), optLong(fn, "max_time"))
-          }.toMap
-        case _ => Map.empty
-      }
-      val here = Option(dir.listFiles()).map(_.toSeq).getOrElse(Nil)
-      val parquets = here.filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        .flatMap { f =>
-          val (mn, mx) = withStats.getOrElse(f.getName, (None, None))
-          if (overlaps(mn, mx, range)) Some(FileEntry(f.getAbsolutePath, mn, mx))
-          else None
-        }
-      parquets ++ here.filter(_.isDirectory).flatMap(walk)
+  /** The walk: every parquet file under the table dir with its sidecar
+    * entry (an all-None [[FileStat]] when none covers it), zone-map
+    * pruned when `range` is given — a folder whose sidecar bounds miss
+    * the range is skipped without listing it. None for a missing table. */
+  private def walk(db: String, table: String,
+                   range: Option[(Long, Long)]): Option[Seq[FileStat]] = {
+    def visit(dir: File): Seq[FileStat] = {
+      val sidecar = CatalogBackend.readSidecar(dir)
+      if (sidecar.exists(!_._1.overlaps(range))) return Nil // folder-level skip
+      val entries = sidecar.toSeq.flatMap(_._2).map(e => new File(e.path).getName -> e).toMap
+      val here = Option(dir.listFiles()).toSeq.flatten
+      here.filter(isParquet).map { f =>
+        entries.getOrElse(f.getName, FileStat("", None, None)).copy(path = f.getAbsolutePath)
+      }.filter(_.overlaps(range)) ++
+        here.filter(d => d.isDirectory && !skipDir(d.getName)).flatMap(visit)
     }
-    val tableDir = new File(new File(root, db), table)
-    if (!tableDir.isDirectory) Nil else walk(tableDir)
+    Some(tableDir(db, table)).filter(_.isDirectory).map(visit)
   }
+
+  /** Parquet files of `db.table` with their zone-map stats, pruned to `range`. */
+  def files(db: String, table: String,
+            range: Option[(Long, Long)] = None): Seq[FileStat] =
+    walk(db, table, range).getOrElse(Nil)
 
   def prunedPaths(db: String, table: String,
                   range: Option[(Long, Long)]): Seq[String] =
     files(db, table, range).map(_.path).sorted
 
-  def tableExists(db: String, table: String): Boolean =
-    new File(new File(root, db), table).isDirectory
+  def tableExists(db: String, table: String): Boolean = tableDir(db, table).isDirectory
 
-  /**
-   * Both metadata aggregates — row count and zone-map time bounds —
-   * from ONE recursive pass over the metadata.json sidecars (they sit
-   * on the request hot path; walking twice would double the listing +
-   * parsing). Metadata is AUTHORITATIVE for the files it lists; the
-   * directory listing only proves no uncovered parquet file exists
-   * (an uncovered file holds rows/times the sums would miss). Each
-   * side is independently provable: an entry with row_count but no
-   * min/max fails only the bounds. Empty table ⇒ count Some(0) but
-   * bounds None (min/max of no rows is NULL — let a scan produce it).
-   * `tmp/` dirs are skipped as always.
-   */
-  /**
-   * All metadata entries (row_count, time bounds per file) from ONE
-   * recursive pass over the metadata.json sidecars, or None if any
-   * on-disk parquet file is not covered by an entry (an uncovered
-   * file holds rows/times the sums would miss). Metadata is
-   * AUTHORITATIVE for the files it lists; `tmp/` dirs are skipped.
-   */
-  private def metaEntries(db: String, table: String)
-      : Option[Seq[(Option[Long], Option[(Long, Long)])]] = {
-    def walk(dir: File): Option[Seq[(Option[Long], Option[(Long, Long)])]] = {
-      if (dir.getName == "tmp" || dir.getName.startsWith("_") ||
-          dir.getName.startsWith(".")) return Some(Nil)
-      val entries: Seq[(String, Option[Long], Option[(Long, Long)])] =
-        parseMeta(dir) match {
-          case Some(m) if m.has("files") =>
-            m.get("files").elements().asScala.flatMap { fn =>
-              Option(fn.get("path")).map(_.asText()).map { p =>
-                (new File(p).getName, optLong(fn, "row_count"),
-                  for (mn <- optLong(fn, "min_time"); mx <- optLong(fn, "max_time"))
-                    yield (mn, mx))
-              }
-            }.toSeq
-          case _ => Nil
-        }
-      val names = entries.map(_._1).toSet
-      val here = Option(dir.listFiles()).map(_.toSeq).getOrElse(Nil)
-      val uncovered = here.exists(f => f.isFile &&
-        f.getName.endsWith(".parquet") && !names(f.getName))
-      if (uncovered) None
-      else here.filter(_.isDirectory)
-        .foldLeft(Option(entries.map(e => (e._2, e._3)))) { (acc, d) =>
-          for (a <- acc; c <- walk(d)) yield a ++ c
-        }
-    }
-    val tableDir = new File(new File(root, db), table)
-    if (!tableDir.isDirectory) None else walk(tableDir)
-  }
-
+  // An uncovered file's all-None entry already makes both aggregates
+  // unprovable; a missing table is unprovable, not empty.
   override def metadataStats(db: String, table: String)
       : (Option[Long], Option[(Long, Long)]) =
-    metaEntries(db, table) match {
-      case None => (None, None)
-      case Some(es) => CatalogBackend.statsOf(es)
-    }
+    walk(db, table, None).fold[(Option[Long], Option[(Long, Long)])]((None, None))(
+      CatalogBackend.statsOf)
 
   override def metadataRangeCount(db: String, table: String,
                                   range: (Long, Long)): Option[Long] =
-    metaEntries(db, table)
-      .flatMap(CatalogBackend.rangeCountOf(_, range))
+    walk(db, table, None).flatMap(CatalogBackend.rangeCountOf(_, range))
 }

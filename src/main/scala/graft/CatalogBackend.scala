@@ -1,5 +1,13 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
 /**
  * Catalog backend abstraction — the reference selects its metadata
  * index implementation by config (`json` → filesystem metadata.json
@@ -36,19 +44,14 @@ trait CatalogBackend {
                entries: Seq[CatalogBackend.FileStat]): Unit = ()
 
   /**
-   * Exact row count for `db.table` when the backend can PROVE it from
-   * metadata alone — i.e. every file of the table carries a row_count
-   * stat. None ⇒ the caller must scan (a single stat-less file makes
-   * the metadata sum unprovable). Lets the engine answer unfiltered
-   * `count(*)` without touching a byte of parquet.
-   */
-  def metadataRowCount(db: String, table: String): Option[Long] =
-    metadataStats(db, table)._1
-
-  /**
    * Both metadata aggregates from ONE metadata pass:
    * (provable row count, provable (min_time, max_time)). Each side is
-   * independently None when unprovable.
+   * independently None when unprovable: the count when any file lacks
+   * a row_count stat, the bounds when any file lacks time stats (it
+   * could extend the range) or the table is empty (min/max of no rows
+   * is NULL; let the scan produce it). Lets the engine answer
+   * unfiltered `count(*)`/`min(time)`/`max(time)` without touching a
+   * byte of parquet.
    */
   def metadataStats(db: String, table: String)
       : (Option[Long], Option[(Long, Long)]) = (None, None)
@@ -63,15 +66,6 @@ trait CatalogBackend {
    */
   def metadataRangeCount(db: String, table: String,
                          range: (Long, Long)): Option[Long] = None
-
-  /**
-   * Exact (min_time, max_time) over `db.table` when every file carries
-   * time stats — a stat-less file could extend the range, so one makes
-   * the bounds unprovable ⇒ None. Empty table ⇒ None (min/max of no
-   * rows is NULL; let the scan produce it).
-   */
-  def metadataTimeBounds(db: String, table: String): Option[(Long, Long)] =
-    metadataStats(db, table)._2
 
   /**
    * Writer-side hook: drop specific file entries (a compactor removing
@@ -92,18 +86,99 @@ trait CatalogBackend {
 }
 
 object CatalogBackend {
-  /** One file's registration payload: path + zone-map stats. */
+  /** One file's zone-map entry: path + stats, each None when unknown.
+    * The one in-memory form of a `metadata.json` file entry, a redis
+    * stats-hash value and a writer's per-file aggregate. */
   case class FileStat(path: String, minTime: Option[Long],
-                      maxTime: Option[Long], rowCount: Option[Long] = None)
+                      maxTime: Option[Long], rowCount: Option[Long] = None) {
+    def bounds: Option[(Long, Long)] =
+      for (mn <- minTime; mx <- maxTime) yield (mn, mx)
 
-  /** (provable count, provable bounds) over per-file metadata entries
-    * — each side independently None when any entry lacks its stat.
-    * Empty entries ⇒ count 0 but no bounds (min/max of no rows is
-    * NULL; a scan must produce it). */
-  def statsOf(es: Seq[(Option[Long], Option[(Long, Long)])])
-      : (Option[Long], Option[(Long, Long)]) = {
-    val cnt = if (es.exists(_._1.isEmpty)) None else Some(es.flatMap(_._1).sum)
-    val bs = es.map(_._2)
+    /** Overlap test on inclusive zone-map bounds (missing stats ⇒ keep:
+      * pruning is an optimization, never a filter). */
+    def overlaps(range: Option[(Long, Long)]): Boolean = range.forall {
+      case (start, end) => maxTime.forall(_ >= start) && minTime.forall(_ <= end)
+    }
+  }
+
+  /** Directories no lake walk enters: `tmp/` holds half-written data
+    * (reference convention, queryClient.go:496-499); `_`/`.` prefixes
+    * are hidden sidecars (Hadoop convention — Spark's own FileIndex
+    * ignores them too, e.g. the `_signatures` dedup store). */
+  def skipDir(name: String): Boolean =
+    name == "tmp" || name.startsWith("_") || name.startsWith(".")
+
+  def isParquet(f: File): Boolean = f.isFile && f.getName.endsWith(".parquet")
+
+  // ---- zone-map JSON: sidecar file entries and redis stats-hash values ----
+
+  private[graft] val json = new ObjectMapper()
+
+  /** Entry encoder, fields in the sidecar's order
+    * `path,row_count,min_time,max_time`; an empty path and each unknown
+    * stat are left out. */
+  def toJson(e: FileStat): ObjectNode = {
+    val n = json.createObjectNode()
+    if (e.path.nonEmpty) n.put("path", e.path)
+    e.rowCount.foreach(n.put("row_count", _))
+    e.minTime.foreach(n.put("min_time", _))
+    e.maxTime.foreach(n.put("max_time", _))
+    n
+  }
+
+  /** Entry decoder: an absent path is "", an absent or non-numeric stat None. */
+  def fromJson(n: JsonNode): FileStat = {
+    def stat(f: String) = Option(n.get(f)).filter(_.isNumber).map(_.asLong())
+    FileStat(Option(n.get("path")).map(_.asText()).getOrElse(""),
+      stat("min_time"), stat("max_time"), stat("row_count"))
+  }
+
+  /** A folder's `metadata.json` sidecar: the folder-level zone map and
+    * the file entries (paths as written: bare file names). None when
+    * the folder has no readable sidecar. */
+  def readSidecar(dir: File): Option[(FileStat, Seq[FileStat])] = {
+    val f = new File(dir, "metadata.json")
+    if (!f.isFile) None
+    else scala.util.Try(json.readTree(f)).toOption.map { m =>
+      (fromJson(m), Option(m.get("files")).toSeq.flatMap(_.elements().asScala).map(fromJson))
+    }
+  }
+
+  /** Write a folder's sidecar over `entries` (bare file names) as
+    * `{type,row_count,min_time,max_time,files}`: the folder row_count
+    * sums the known counts, the folder bounds span the entries that
+    * have them. */
+  def writeSidecar(dir: File, entries: Seq[FileStat]): Unit = {
+    val bs = entries.flatMap(_.bounds)
+    val doc = json.createObjectNode().put("type", "parquet")
+    doc.setAll[ObjectNode](toJson(FileStat("", bs.map(_._1).minOption,
+      bs.map(_._2).maxOption, Some(entries.flatMap(_.rowCount).sum))))
+    doc.putArray("files").addAll(entries.map(toJson).asJava)
+    Files.writeString(new File(dir, "metadata.json").toPath, json.writeValueAsString(doc))
+  }
+
+  /** Per-file zone-map entries of the files `df` reads: one
+    * min/max/count aggregate over `input_file_name()`, collecting
+    * O(#files) rows — metadata, not data. Paths are
+    * [[LakeWriter.catalogPath]]s; a file whose time values are ALL
+    * NULL gets no bounds (kept unpruned) instead of an NPE after its
+    * data is already on disk. */
+  def fileStats(df: DataFrame, timeCol: String): Seq[FileStat] =
+    df.select(col(timeCol), input_file_name().as("file"))
+      .groupBy(col("file"))
+      .agg(min(timeCol), max(timeCol), count(lit(1)))
+      .collect().toSeq.map { r =>
+        def opt(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
+        FileStat(LakeWriter.catalogPath(r.getString(0)), opt(1), opt(2), Some(r.getLong(3)))
+      }
+
+  /** (provable count, provable bounds) over per-file entries — each
+    * side independently None when any entry lacks its stat. Empty
+    * entries ⇒ count 0 but no bounds (min/max of no rows is NULL; a
+    * scan must produce it). */
+  def statsOf(es: Seq[FileStat]): (Option[Long], Option[(Long, Long)]) = {
+    val cnt = if (es.exists(_.rowCount.isEmpty)) None else Some(es.flatMap(_.rowCount).sum)
+    val bs = es.map(_.bounds)
     val bounds =
       if (es.isEmpty || bs.exists(_.isEmpty)) None
       else Some((bs.flatten.map(_._1).min, bs.flatten.map(_._2).max))
@@ -113,15 +188,16 @@ object CatalogBackend {
   /** Provable row count within the INCLUSIVE range: files fully
     * inside count whole, fully outside count zero; a partial overlap
     * or a stat-less entry makes the count unprovable. */
-  def rangeCountOf(es: Seq[(Option[Long], Option[(Long, Long)])],
-                   range: (Long, Long)): Option[Long] = {
+  def rangeCountOf(es: Seq[FileStat], range: (Long, Long)): Option[Long] = {
     val (lo, hi) = range
-    es.foldLeft(Option(0L)) {
-      case (acc, (rc, Some((mn, mx)))) =>
-        if (mx < lo || mn > hi) acc // fully outside
-        else if (mn >= lo && mx <= hi) for (a <- acc; c <- rc) yield a + c
-        else None // partial overlap: the range splits this file
-      case _ => None // no time stats: can't classify the file
+    es.foldLeft(Option(0L)) { (acc, e) =>
+      e.bounds match {
+        case Some((mn, mx)) =>
+          if (mx < lo || mn > hi) acc // fully outside
+          else if (mn >= lo && mx <= hi) for (a <- acc; c <- e.rowCount) yield a + c
+          else None // partial overlap: the range splits this file
+        case None => None // no time stats: can't classify the file
+      }
     }
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import java.io.File
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /**
  * Small-file compaction for a lake measurement — the maintenance
@@ -42,18 +41,15 @@ object LakeCompactor {
     require(tableDir.isDirectory, s"no such table dir: $tableDir")
 
     def partitionFolders(dir: File): Seq[File] = {
-      val kids = Option(dir.listFiles()).map(_.toSeq).getOrElse(Nil)
-      val here = if (kids.exists(f => f.isFile && f.getName.endsWith(".parquet")))
-        Seq(dir) else Nil
-      here ++ kids.filter(d => d.isDirectory && d.getName != "tmp" &&
-          !d.getName.startsWith("_") && !d.getName.startsWith("."))
+      val kids = Option(dir.listFiles()).toSeq.flatten
+      val here = if (kids.exists(CatalogBackend.isParquet)) Seq(dir) else Nil
+      here ++ kids.filter(d => d.isDirectory && !CatalogBackend.skipDir(d.getName))
         .flatMap(partitionFolders)
     }
 
     var folders = 0; var before = 0; var after = 0
     partitionFolders(tableDir).foreach { folder =>
-      val old = folder.listFiles().filter(f =>
-        f.isFile && f.getName.endsWith(".parquet")).toSeq
+      val old = folder.listFiles().filter(CatalogBackend.isParquet).toSeq
       before += old.size
       if (old.size <= 1) { after += old.size }
       else {
@@ -65,7 +61,7 @@ object LakeCompactor {
         spark.read.parquet(old.map(_.getAbsolutePath): _*)
           .coalesce(nOut)
           .write.parquet(staging.getAbsolutePath)
-        val staged = staging.listFiles().filter(_.getName.endsWith(".parquet")).toSeq
+        val staged = staging.listFiles().filter(CatalogBackend.isParquet).toSeq
         // move staged files in (fresh names can't collide with old ones)
         val moved = staged.map { f =>
           val dst = new File(folder, f.getName)
@@ -74,26 +70,12 @@ object LakeCompactor {
         }
         org.apache.commons.io.FileUtils.deleteDirectory(staging)
         // stats for the new files only (metadata-sized collect)
-        val stats = spark.read.parquet(moved.map(_.getAbsolutePath): _*)
-          .select(col(timeCol), input_file_name().as("file"))
-          .groupBy(col("file"))
-          .agg(min(timeCol).as("mn"), max(timeCol).as("mx"), count(lit(1)).as("n"))
-          .collect()
-        val entries = stats.toSeq.map { r =>
-          val name = new File(new java.net.URI(r.getString(0)).getPath).getName
-          val s = if (r.isNullAt(1) || r.isNullAt(2)) None
-            else Some((r.getLong(1), r.getLong(2)))
-          (name, s, r.getLong(3))
-        }
+        val stats = CatalogBackend.fileStats(
+          spark.read.parquet(moved.map(_.getAbsolutePath): _*), timeCol)
         old.foreach(_.delete()) // readers switch to the compacted files
-        LakeWriter.writeFolderMeta(folder, entries) // stale entries drop
+        LakeWriter.writeFolderMeta(folder, stats) // stale entries drop
         catalog.foreach { c =>
-          c.register(db, table, stats.toSeq.map { r =>
-            val s = if (r.isNullAt(1) || r.isNullAt(2)) (None, None)
-              else (Some(r.getLong(1)), Some(r.getLong(2)))
-            CatalogBackend.FileStat(LakeWriter.catalogPath(r.getString(0)),
-              s._1, s._2, Some(r.getLong(3)))
-          })
+          c.register(db, table, stats)
           c.deregister(db, table, old.map(_.getAbsolutePath))
         }
         after += moved.size

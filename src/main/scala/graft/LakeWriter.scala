@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -87,12 +86,7 @@ object LakeWriter {
         val delta = (listParquet(localFile(tableDir)) -- before).toSeq.sorted
         if (delta.isEmpty) None else Some(spark.read.parquet(delta: _*))
       } else Some(spark.read.parquet(tableDir))
-    val written = statsSource.map {
-      _.select(col(timeCol), input_file_name().as("file"))
-        .groupBy(col("file"))
-        .agg(min(timeCol).as("mn"), max(timeCol).as("mx"), count(lit(1)).as("n"))
-        .collect() // O(#files) rows — metadata, not data
-    }.getOrElse(Array.empty[org.apache.spark.sql.Row])
+    val written = statsSource.map(CatalogBackend.fileStats(_, timeCol)).getOrElse(Nil)
     // publish to the active catalog backend too (same stats as the
     // zone maps) — a redis-indexed lake sees the new files without a
     // filesystem walk; the json backend's no-op register is covered by
@@ -101,27 +95,10 @@ object LakeWriter {
     // deleted files would otherwise survive in the index.
     catalog.foreach { c =>
       if (mode == SaveMode.Overwrite) c.clear(db, table)
-      c.register(db, table, written.map { r =>
-        val stats = if (r.isNullAt(1) || r.isNullAt(2)) (None, None)
-          else (Some(r.getLong(1)), Some(r.getLong(2)))
-        CatalogBackend.FileStat(catalogPath(r.getString(0)),
-          stats._1, stats._2, Some(r.getLong(3)))
-      }.toSeq)
+      c.register(db, table, written)
     }
-    if (local) written
-      .groupBy(r => new File(new java.net.URI(r.getString(0)).getPath).getParent)
-      .foreach { case (folder, files) =>
-        // a file whose time values are ALL NULL has null min/max — emit
-        // its entry without stats (Catalog keeps stat-less files
-        // unpruned) instead of NPE-ing after the data is already on disk
-        val entries = files.toSeq.map { r =>
-          val name = new File(new java.net.URI(r.getString(0)).getPath).getName
-          val stats = if (r.isNullAt(1) || r.isNullAt(2)) None
-            else Some((r.getLong(1), r.getLong(2)))
-          (name, stats, r.getLong(3))
-        }
-        writeFolderMeta(new File(folder), entries)
-      }
+    if (local) written.groupBy(e => new File(e.path).getParentFile)
+      .foreach { case (folder, entries) => writeFolderMeta(folder, entries) }
   }
 
   /** file: (or bare-path) URIs keep their filesystem path; any other
@@ -146,51 +123,27 @@ object LakeWriter {
 
   private def listParquet(dir: File): Set[String] =
     if (!dir.isDirectory) Set.empty
-    else Option(dir.listFiles()).map(_.toSeq).getOrElse(Nil).flatMap { f =>
+    else Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
       if (f.isDirectory) listParquet(f)
-      else if (f.isFile && f.getName.endsWith(".parquet")) Seq(f.getAbsolutePath)
+      else if (CatalogBackend.isParquet(f)) Seq(f.getAbsolutePath)
       else Nil
     }.toSet
 
   /**
-   * Write (or incrementally merge) a folder's `metadata.json`: entries
-   * for files re-written in this commit replace their old entry by
-   * name; entries for untouched files survive, so an Append publishes
-   * its delta without losing the folder's history. Folder-level
-   * min/max/row_count are recomputed over the merged set.
+   * Write (or incrementally merge) a folder's `metadata.json` from
+   * entries for files in it: entries for files re-written in this
+   * commit replace their old entry by name; entries for untouched
+   * files survive, so an Append publishes its delta without losing the
+   * folder's history. Folder-level min/max/row_count are recomputed
+   * over the merged set.
    */
   private[graft] def writeFolderMeta(folder: File,
-      newEntries: Seq[(String, Option[(Long, Long)], Long)]): Unit = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val metaFile = new File(folder, "metadata.json")
-    val prior: Seq[(String, Option[(Long, Long)], Long)] =
-      if (!metaFile.isFile) Nil
-      else scala.util.Try {
-        import scala.jdk.CollectionConverters._
-        val root = mapper.readTree(metaFile)
-        Option(root.get("files")).toSeq.flatMap(_.elements().asScala).map { fn =>
-          def l(f: String) = Option(fn.get(f)).filter(_.isNumber).map(_.asLong())
-          val stats = for (mn <- l("min_time"); mx <- l("max_time")) yield (mn, mx)
-          (Option(fn.get("path")).map(_.asText()).getOrElse(""),
-           stats, l("row_count").getOrElse(0L))
-        }
-      }.getOrElse(Nil)
-    val newNames = newEntries.map(_._1).toSet
+      newEntries: Seq[CatalogBackend.FileStat]): Unit = {
+    val named = newEntries.map(e => e.copy(path = new File(e.path).getName))
+    val newNames = named.map(_.path).toSet
     // drop prior entries whose file no longer exists (overwritten dirs)
-    val entries = prior.filterNot(e =>
-      newNames(e._1) || !new File(folder, e._1).isFile) ++ newEntries
-    val bounds = entries.flatMap(_._2)
-    val folderStats =
-      if (bounds.isEmpty) ""
-      else s""""min_time":${bounds.map(_._1).min},"max_time":${bounds.map(_._2).max},"""
-    val n = entries.map(_._3).sum
-    val filesJson = entries.map {
-      case (p, Some((fmn, fmx)), fn) =>
-        s"""{"path":"$p","row_count":$fn,"min_time":$fmn,"max_time":$fmx}"""
-      case (p, None, fn) =>
-        s"""{"path":"$p","row_count":$fn}"""
-    }.mkString("[", ",", "]")
-    Files.writeString(metaFile.toPath,
-      s"""{"type":"parquet","row_count":$n,$folderStats"files":$filesJson}""")
+    val prior = CatalogBackend.readSidecar(folder).toSeq.flatMap(_._2)
+      .filterNot(e => newNames(e.path) || !new File(folder, e.path).isFile)
+    CatalogBackend.writeSidecar(folder, prior ++ named)
   }
 }

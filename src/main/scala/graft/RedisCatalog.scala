@@ -3,7 +3,7 @@ package graft
 import java.io.{BufferedInputStream, BufferedOutputStream, EOFException}
 import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
-import com.fasterxml.jackson.databind.ObjectMapper
+import graft.CatalogBackend.{FileStat, fromJson, json, toJson}
 
 /**
  * Redis-backed catalog index — the reference's second metadata backend
@@ -24,9 +24,11 @@ import com.fasterxml.jackson.databind.ObjectMapper
  *     BY PATH: a compactor re-registering a file with new stats
  *     replaces the score instead of accumulating a second entry (which
  *     would make the scan read the file twice).
- *   - `graft:stats:{db}:{table}` HASH path → JSON
- *     `{"min_time":…,"max_time":…}` — the exact int64 bounds for the
- *     client-side overlap re-check (ZSET scores are lossy doubles).
+ *   - `graft:stats:{db}:{table}` HASH path → the file's zone-map entry
+ *     in the sidecar JSON form without its path,
+ *     `{"row_count":…,"min_time":…,"max_time":…}` — the exact int64
+ *     bounds for the client-side overlap re-check (ZSET scores are
+ *     lossy doubles) and the counts for `metadataStats`.
  *
  * The score-by-max_time layout makes the time-range lookup a
  * server-side `ZRANGEBYSCORE key {start} +inf` — files that END before
@@ -65,7 +67,6 @@ class RedisCatalog(url: String) extends CatalogBackend with AutoCloseable {
   private val socket = new Socket(host, port)
   private val in = new BufferedInputStream(socket.getInputStream)
   private val out = new BufferedOutputStream(socket.getOutputStream)
-  private val mapper = new ObjectMapper()
 
   auth.foreach(a => command("AUTH" +: a: _*))
   if (dbNum != 0) command("SELECT", dbNum.toString)
@@ -168,16 +169,8 @@ class RedisCatalog(url: String) extends CatalogBackend with AutoCloseable {
       case s: Seq[_] => s.map(Option(_).collect { case x: String => x })
       case _         => Seq.fill(paths.size)(None)
     }
-    paths.zip(statsJson).collect {
-      case (path, json) if range.isEmpty || {
-        val (start, end) = range.get
-        json.forall { j => // no stats ⇒ keep
-          val node = mapper.readTree(j)
-          val minT = Option(node.get("min_time")).filter(_.isNumber).map(_.asLong())
-          val maxT = Option(node.get("max_time")).filter(_.isNumber).map(_.asLong())
-          minT.forall(_ <= end) && maxT.forall(_ >= start)
-        }
-      } => path
+    paths.zip(statsJson).collect { // no stats ⇒ keep
+      case (path, j) if j.forall(v => fromJson(json.readTree(v)).overlaps(range)) => path
     }.sorted
   }
 
@@ -198,54 +191,30 @@ class RedisCatalog(url: String) extends CatalogBackend with AutoCloseable {
     command("SADD", "graft:dbs", db)
     command("SADD", s"graft:tables:$db", table)
     entries.foreach { e =>
-      val json = {
-        val n = mapper.createObjectNode()
-        e.minTime.foreach(n.put("min_time", _))
-        e.maxTime.foreach(n.put("max_time", _))
-        e.rowCount.foreach(n.put("row_count", _))
-        mapper.writeValueAsString(n)
-      }
       val score = e.maxTime.map(_.toString).getOrElse("+inf")
       command("ZADD", idxKey(db, table), score, e.path)
-      command("HSET", statsKey(db, table), e.path, json)
+      command("HSET", statsKey(db, table), e.path,
+        json.writeValueAsString(toJson(e.copy(path = ""))))
     }
   }
 
-  /**
-   * Metadata aggregates from the stats hash — the index IS the lake's
-   * source of truth here (no filesystem to cross-check), so coverage
-   * means "every registered entry carries the stat". An empty index
-   * answers (None, None): a table might be mid-registration, and a
-   * confidently-wrong 0 is worse than a scan.
-   */
-  /** Per-file (row_count, bounds) entries from one HGETALL — the
-    * index IS the lake's source of truth here (no filesystem to
-    * cross-check). An empty index yields no entries: a table might be
-    * mid-registration, and a confidently-wrong 0 is worse than a scan. */
-  private def metaEntries(db: String, table: String)
-      : Seq[(Option[Long], Option[(Long, Long)])] = {
-    val kv = command("HGETALL", statsKey(db, table)) match {
-      case s: Seq[_] => s.collect { case x: String => x }.grouped(2)
-        .collect { case Seq(_, v) => mapper.readTree(v) }.toSeq
-      case _ => Nil
-    }
-    def l(n: com.fasterxml.jackson.databind.JsonNode, f: String): Option[Long] =
-      Option(n.get(f)).filter(_.isNumber).map(_.asLong())
-    kv.map(n => (l(n, "row_count"),
-      for (mn <- l(n, "min_time"); mx <- l(n, "max_time")) yield (mn, mx)))
-  }
+  /** Every registered entry, from one HGETALL — the index IS the
+    * lake's source of truth here (no filesystem to cross-check). None
+    * for an empty index: a table might be mid-registration, and a
+    * confidently-wrong 0 is worse than a scan. */
+  private def registered(db: String, table: String): Option[Seq[FileStat]] =
+    Some(strings(command("HGETALL", statsKey(db, table))).grouped(2).collect {
+      case Seq(path, v) => fromJson(json.readTree(v)).copy(path = path)
+    }.toSeq).filter(_.nonEmpty)
 
   override def metadataStats(db: String, table: String)
-      : (Option[Long], Option[(Long, Long)]) = {
-    val es = metaEntries(db, table)
-    if (es.isEmpty) (None, None) else CatalogBackend.statsOf(es)
-  }
+      : (Option[Long], Option[(Long, Long)]) =
+    registered(db, table).fold[(Option[Long], Option[(Long, Long)])]((None, None))(
+      CatalogBackend.statsOf)
 
   override def metadataRangeCount(db: String, table: String,
-                                  range: (Long, Long)): Option[Long] = {
-    val es = metaEntries(db, table)
-    if (es.isEmpty) None else CatalogBackend.rangeCountOf(es, range)
-  }
+                                  range: (Long, Long)): Option[Long] =
+    registered(db, table).flatMap(CatalogBackend.rangeCountOf(_, range))
 
   /** Remove specific file entries (compaction replaced them). */
   override def deregister(db: String, table: String, paths: Seq[String]): Unit =

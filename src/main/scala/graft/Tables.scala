@@ -61,67 +61,11 @@ object Tables {
       s.sessionState.optimizer.batches
         .exists(_.rules.exists(_ eq plans.NsTimeFilterPushdown)))
 
-  // Memoize per (session, path, file fingerprint): a DataFrame is just a
-  // plan, but building it costs a file listing plus a footer-schema
-  // lookup (a footer read the first time a file is seen, see
-  // [[footerSchema]]) — per query that adds up when ~150 queries share
-  // 10 tables. The fingerprint (mtime+length of the path) keys out
-  // in-place regenerations, the LRU bound ages out dropped lakes, and a
-  // per-load sweep drops every entry belonging to a stopped session — a
-  // long-lived QueryServer must not pin stale plans or dead sessions.
-  private val MaxCached = 128
-  private[graft] def maxCachedForTest: Int = MaxCached
-  private val cache =
-    new java.util.LinkedHashMap[(SparkSession, String, Long), DataFrame](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String, Long), DataFrame]): Boolean =
-        size() > MaxCached
-    }
-
-  /** mtime+length stat of the table path — one driver-side FS call
-    * (one listing for a directory-backed table: a dir's own mtime does
-    * NOT change when a same-named child is rewritten in place, so the
-    * child (name, len, mtime) triples are mixed in), strictly cheaper
-    * than the plan it guards. 0 when the path is not yet statable (the
-    * read itself will surface the error). */
-  private def fingerprint(spark: SparkSession, path: String): Long =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val st = fs.getFileStatus(p)
-      if (!st.isDirectory) st.getModificationTime * 31L + st.getLen
-      else fs.listStatus(p).foldLeft(1125899906842597L) { (h, c) =>
-        ((h * 31L + c.getPath.getName.hashCode) * 31L + c.getLen) * 31L +
-          c.getModificationTime
-      }
-    } catch { case _: Exception => 0L }
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    configure(spark)
-    val path = s"$dir/$name.parquet"
-    val key = (spark, path, fingerprint(spark, path))
-    cache.synchronized {
-      val it = cache.keySet().iterator()
-      while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-      val hit = cache.get(key)
-      if (hit != null) return hit
-    }
-    // plan construction (file listing, and a footer read on a file's
-    // first sight — seconds on a remote lake) happens OUTSIDE the lock
-    // so one slow first load cannot stall every other session's cache
-    // hits; a concurrent duplicate build is harmless (the plans are
-    // identical) and the second put wins
-    val df = normalizeTs(spark.read.schema(footerSchema(spark, path)).parquet(path))
-    cache.synchronized { cache.put(key, df) }
-    df
-  }
-
-  /** Test hook: current cache keys (session identity, path, fingerprint). */
-  private[graft] def cachedKeys: Seq[(SparkSession, String, Long)] =
-    cache.synchronized {
-      import scala.jdk.CollectionConverters._
-      cache.keySet().asScala.toSeq
-    }
+  /** One test-lake table: a footer-memo read ([[readEvolving]]) of
+    * `{dir}/{name}.parquet`, so a rewritten file is seen by the next
+    * load and only a file's first sight costs a footer read. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    readEvolving(spark, Seq(s"$dir/$name.parquet"), Seq("ts"))
 
   /**
    * Enforce the int64-ns `ts` contract regardless of the file's
@@ -250,7 +194,7 @@ object Tables {
   private final case class FooterMeta(parquet: MessageType, sparkRowMeta: Option[String])
 
   // Keyed by (file, length, mtime), so an in-place rewrite misses and a
-  // compaction's new files are read fresh; LRU-bounded like `cache`.
+  // compaction's new files are read fresh; LRU-bounded.
   private val MaxFooters = 4096
   private val footers =
     new java.util.LinkedHashMap[(String, Long, Long), FooterMeta](256, 0.75f, true) {

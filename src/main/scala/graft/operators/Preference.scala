@@ -1964,7 +1964,9 @@ object Preference {
           s"${df.schema(c).dataType.simpleString}) — quantize scores " +
           "upstream; the all-integer decision is the point")
     }
-    val base = df.filter(col(byCol).isNotNull && col(idCol).isNotNull &&
+    // a null id is a key like any other: it draws as "null", the
+    // [[Sampling.hash40]] convention (the composable spelling's)
+    val base = df.filter(col(byCol).isNotNull &&
         col(aCol).isNotNull && col(bCol).isNotNull)
       .select(col(byCol).as("__g"), col(idCol).as("__id"),
         (col(aCol).cast("long") - col(bCol).cast("long")).as("__d"))
@@ -1974,7 +1976,7 @@ object Preference {
     val perms = base
       .select(col("__g"), col("__d"),
         explode(graft.functions.HashExprs.sign_resamples(
-          col("__id").cast("string"), salt, p)).as("__rs"))
+          coalesce(col("__id").cast("string"), lit("null")), salt, p)).as("__rs"))
       .select(col("__g"),
         (shiftright(col("__rs"), 1) - lit(2L)).as("__r"),
         ((lit(1L) - lit(2L) * col("__rs").bitwiseAND(lit(1L))) *
@@ -2352,7 +2354,9 @@ object Preference {
           s"${df.schema(c).dataType.simpleString}) — quantize scores " +
           "upstream; the exact-sum contract is the point")
     }
-    val base = df.filter(col(byCol).isNotNull && col(idCol).isNotNull &&
+    // a null id is a key like any other: it draws as "null", the
+    // [[Sampling.hash40]] convention (the composable spelling's)
+    val base = df.filter(col(byCol).isNotNull &&
         col(aCol).isNotNull && col(bCol).isNotNull)
       .select(col(byCol).as("__g"), col(idCol).as("__id"),
         (col(aCol).cast("long") - col(bCol).cast("long")).as("__d"))
@@ -2363,7 +2367,7 @@ object Preference {
     val drawn = base
       .select(col("__g"), col("__d"),
         explode(graft.functions.HashExprs.poisson_resamples(
-          col("__id").cast("string"), salt, b,
+          coalesce(col("__id").cast("string"), lit("null")), salt, b,
           PoissonThresholds40)).as("__rw"))
       .select(col("__g"),
         (shiftright(col("__rw"), 4) - lit(2L)).as("__r"),

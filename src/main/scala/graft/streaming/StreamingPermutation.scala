@@ -60,10 +60,10 @@ object StreamingPermutation {
     import spark.implicits._
     def r6(x: Double): Double =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    df.filter(col(byCol).isNotNull && col(idCol).isNotNull &&
+    df.filter(col(byCol).isNotNull &&
         col(aCol).isNotNull && col(bCol).isNotNull)
       .select(col(byCol).cast("string").as("g"),
-        col(idCol).cast("string").as("id"),
+        coalesce(col(idCol).cast("string"), lit("null")).as("id"),
         (col(aCol).cast("long") - col(bCol).cast("long")).as("d"))
       .as[(String, String, Long)]
       .groupByKey(_._1)

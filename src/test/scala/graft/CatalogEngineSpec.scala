@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * Catalog zone-map pruning (FIXTURES.md A4) + Engine end-to-end on a
  * fixture lake with an int64-ns `time` column.
  */
-class CatalogEngineSpec extends AnyFunSuite {
+class CatalogEngineSpec extends AnyFunSuite with TempLakes {
   private lazy val spark = GraftTestSession.spark
 
   private val HOUR_NS = 3600L * 1000000000L
@@ -17,8 +17,7 @@ class CatalogEngineSpec extends AnyFunSuite {
 
   /** Lake: mydb/meas/date=d/part.parquet + metadata.json, plus tmp/ junk. */
   private lazy val root: String = {
-    val dir = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "lake").toFile
+    val dir = tempDir("lake")
     import spark.implicits._
     def writeDay(day: Int): Unit = {
       val d = new File(dir, f"mydb/meas/date=2023-01-${day}%02d")
@@ -279,8 +278,7 @@ class CatalogEngineSpec extends AnyFunSuite {
 
   test("engine: unfiltered count(*) is answered from metadata, zero files read") {
     import spark.implicits._
-    val dir = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "metacount").toFile
+    val dir = tempDir("metacount")
     val d = new File(dir, "mydb/mc"); d.mkdirs()
     Seq((T0, 1.0), (T0 + HOUR_NS, 2.0)).toDF("time", "v").coalesce(1)
       .write.mode("overwrite").parquet(d.getAbsolutePath)
@@ -293,54 +291,74 @@ class CatalogEngineSpec extends AnyFunSuite {
     val eng = new Engine(spark, new Catalog(dir.getAbsolutePath))
     // auto-name must match what a real scan produces
     assert(spark.range(1).selectExpr("count(*)").columns.head == "count(1)")
-    // DELETE the data file: only a metadata answer can succeed now
-    assert(tgt.delete())
-    val df = eng.query("SELECT count(*) FROM mydb.mc", "")
-    assert(df.columns.toSeq == Seq("count(1)"))
-    assert(df.collect().head.getLong(0) == 2L)
-    assert(eng.query("SELECT count(*) AS n FROM mydb.mc", "")
-      .collect().head.getLong(0) == 2L)
+    // a metadata answer runs no Spark job end to end (query AND
+    // collect) — no file is read; an unprovable shape must scan
+    def run(sql: String) = SparkJobCounter(spark)(eng.query(sql, "").collect().head)
+    def fromMeta(sql: String) = {
+      val (row, jobs) = run(sql)
+      assert(jobs == 0, s"$sql read files: $jobs Spark job(s)")
+      row
+    }
+    def scanned(sql: String) = {
+      val (row, jobs) = run(sql)
+      assert(jobs > 0, s"$sql was answered without a scan")
+      row
+    }
+    assert(eng.query("SELECT count(*) FROM mydb.mc", "").columns.toSeq == Seq("count(1)"))
+    assert(fromMeta("SELECT count(*) FROM mydb.mc").getLong(0) == 2L)
+    assert(fromMeta("SELECT count(*) AS n FROM mydb.mc").getLong(0) == 2L)
     // min/max(time) come from the zone maps in the same fast path,
     // mixed with count in one statement
-    val stats = eng.query(
-      "SELECT count(*) AS n, min(time) AS lo, max(time) AS hi FROM mydb.mc", "")
-      .collect().head
+    val stats = fromMeta("SELECT count(*) AS n, min(time) AS lo, max(time) AS hi FROM mydb.mc")
     assert(stats.getLong(0) == 2L && stats.getLong(1) == T0 &&
       stats.getLong(2) == T0 + HOUR_NS)
     assert(eng.query("SELECT min(time) FROM mydb.mc", "")
       .columns.toSeq == Seq("min(time)"))
     // a time range that FULLY COVERS the file's zone map is still
-    // provable from metadata (day-bucketed dashboard counts) — the
-    // data file is gone, only metadata can answer
-    assert(eng.query(
-      s"SELECT count(*) AS n FROM mydb.mc WHERE time >= $T0 AND time <= ${T0 + HOUR_NS}", "")
-      .collect().head.getLong(0) == 2L)
+    // provable from metadata (day-bucketed dashboard counts)
+    assert(fromMeta(
+      s"SELECT count(*) AS n FROM mydb.mc WHERE time >= $T0 AND time <= ${T0 + HOUR_NS}")
+      .getLong(0) == 2L)
     // a range that SPLITS the file (partial overlap) is unprovable and
-    // must scan — which fails here, proving no metadata guess was made
-    assertThrows[Exception] {
-      eng.query(s"SELECT count(*) FROM mydb.mc WHERE time > $T0", "").collect()
-    }
+    // must scan
+    assert(scanned(s"SELECT count(*) FROM mydb.mc WHERE time > $T0").getLong(0) == 1L)
     // a non-time predicate must scan too
-    assertThrows[Exception] {
-      eng.query(s"SELECT count(*) FROM mydb.mc WHERE time >= $T0 AND v > 0", "")
-        .collect()
-    }
-    // a non-metadata aggregate alongside count must scan (and fail here)
-    assertThrows[Exception] {
-      eng.query("SELECT count(*), avg(v) FROM mydb.mc", "").collect()
-    }
+    assert(scanned(s"SELECT count(*) FROM mydb.mc WHERE time >= $T0 AND v > 0")
+      .getLong(0) == 2L)
+    // a non-metadata aggregate alongside count must scan
+    assert(scanned("SELECT count(*), avg(v) FROM mydb.mc").getLong(0) == 2L)
+  }
+
+  test("engine: a sidecar entry whose file is gone is not counted") {
+    val root = tempDir("stale").toString
+    // 1000 rows over 5 days: one file per date folder
+    val ev = spark.range(1000).select((lit(T0) + col("id") * (5 * 24 * HOUR_NS / 1000)).as("time"),
+      col("id").cast("double").as("value"))
+    LakeWriter.write(root, "mydb", "st", ev.coalesce(1))
+    val files = new Catalog(root).files("mydb", "st")
+    assert(files.size > 1)
+    // delete one data file; its folder's metadata.json keeps the entry
+    assert(new File(files.head.path).delete())
+    import scala.jdk.CollectionConverters._
+    val onDisk = org.apache.commons.io.FileUtils
+      .listFiles(new File(root), Array("parquet"), true).asScala.map(_.getPath).toSeq
+    val scan = spark.read.parquet(onDisk: _*).count()
+    val (meta, jobs) = SparkJobCounter(spark)(
+      new Engine(spark, new Catalog(root)).query("SELECT count(*) AS n FROM mydb.st", "")
+        .collect().head.getLong(0))
+    assert(jobs == 0, "the count must come from metadata")
+    assert(meta == scan)
   }
 
   test("engine: count(*) falls back to a scan when any file lacks row_count") {
     import spark.implicits._
-    val dir = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "metacount2").toFile
+    val dir = tempDir("metacount2")
     val d = new File(dir, "mydb/mc2"); d.mkdirs()
     Seq((T0, 1.0), (T0 + HOUR_NS, 2.0), (T0 + 2 * HOUR_NS, 3.0))
       .toDF("time", "v").coalesce(1)
       .write.mode("overwrite").parquet(d.getAbsolutePath) // no metadata.json
     val eng = new Engine(spark, new Catalog(dir.getAbsolutePath))
-    assert(new Catalog(dir.getAbsolutePath).metadataRowCount("mydb", "mc2").isEmpty)
+    assert(new Catalog(dir.getAbsolutePath).metadataStats("mydb", "mc2")._1.isEmpty)
     assert(eng.query("SELECT count(*) AS n FROM mydb.mc2", "")
       .collect().head.getLong(0) == 3L) // real scan, correct answer
   }

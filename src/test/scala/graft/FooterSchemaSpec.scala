@@ -14,14 +14,14 @@ import org.scalatest.funsuite.AnyFunSuite
  * the next query, and leave the engine with no Spark job before
  * execution.
  */
-class FooterSchemaSpec extends AnyFunSuite {
+class FooterSchemaSpec extends AnyFunSuite with TempLakes {
   private lazy val spark = GraftTestSession.spark
 
   private val HOUR_NS = 3600L * 1000000000L
   private val T0 = 1672531200000000000L // 2023-01-01T00:00:00Z
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(new File("target").toPath.toAbsolutePath, prefix).toString
+    tempDir(prefix).toString
 
   /** A parquet file with a BINARY column that carries no string
     * annotation: its Spark type depends on `binaryAsString`. */

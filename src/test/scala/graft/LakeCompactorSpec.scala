@@ -1,13 +1,12 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Small-file compaction: fewer files, identical rows, catalog intact. */
-class LakeCompactorSpec extends AnyFunSuite {
+class LakeCompactorSpec extends AnyFunSuite with TempLakes {
   private lazy val spark = GraftTestSession.spark
 
   private val DAY_NS = 86400000000000L
@@ -16,8 +15,7 @@ class LakeCompactorSpec extends AnyFunSuite {
   /** 4 appends × 2 days → 4 small files per date folder. */
   private def buildLake(cat: Option[CatalogBackend]): String = {
     import spark.implicits._
-    val root = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "clake").toString
+    val root = tempDir("clake").toString
     (0 until 4).foreach { i =>
       val rows = (0 until 25).flatMap { j =>
         Seq((T0 + i * 1000000L + j, s"a$i$j", i * 1.0),

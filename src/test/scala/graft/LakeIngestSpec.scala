@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Stream → lake append → catalog → engine query → compact, end to end. */
-class LakeIngestSpec extends AnyFunSuite {
+class LakeIngestSpec extends AnyFunSuite with TempLakes {
   private lazy val spark = GraftTestSession.spark
 
   private val DAY_NS = 86400000000000L
@@ -16,20 +16,16 @@ class LakeIngestSpec extends AnyFunSuite {
   test("signature sidecar: ingest maintains it, catalog hides it, dedup is O(batch)") {
     import spark.implicits._
     import graft.operators.Dedup
-    val stage = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "sig-src")
-    val root = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "sig-lake").toString
-    val ckpt = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "sig-ckpt").toString
+    val stage = tempDir("sig-src").toPath
+    val root = tempDir("sig-lake").toString
+    val ckpt = tempDir("sig-ckpt").toString
     val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .withColumn("time", lit(T0) + col("doc_id") * 1000000L)
       .select("time", "doc_id", "text")
     val a = docs.filter(col("doc_id") < 250)
     val b = docs.filter(col("doc_id") >= 250)
     def stageBatch(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = Files.createTempDirectory(
-        new File("target").toPath.toAbsolutePath, "sig-tmp")
+      val tmp = tempDir("sig-tmp").toPath
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = tmp.toFile.listFiles().find(_.getName.endsWith(".parquet")).get
       Files.move(part.toPath, stage.resolve(name))
@@ -90,8 +86,7 @@ class LakeIngestSpec extends AnyFunSuite {
   test("dedupThenAppend: per-label idempotence and empty-store bootstrap") {
     import spark.implicits._
     import graft.operators.Dedup
-    val root = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "sig-batch-lake").toString
+    val root = tempDir("sig-batch-lake").toString
     val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
     val a = docs.filter(col("doc_id") < 250)
     val b = docs.filter(col("doc_id") >= 250)
@@ -123,16 +118,12 @@ class LakeIngestSpec extends AnyFunSuite {
 
   test("micro-batches land catalogued, queryable, prunable; compaction folds them") {
     import spark.implicits._
-    val stage = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "ingest-src")
-    val root = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "ingest-lake").toString
-    val ckpt = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "ingest-ckpt").toString
+    val stage = tempDir("ingest-src").toPath
+    val root = tempDir("ingest-lake").toString
+    val ckpt = tempDir("ingest-ckpt").toString
 
     def stageBatch(name: String, dayOffset: Int, n: Int, tag: String): Unit = {
-      val tmp = Files.createTempDirectory(
-        new File("target").toPath.toAbsolutePath, "ingest-tmp")
+      val tmp = tempDir("ingest-tmp").toPath
       (0 until n).map(j => (T0 + dayOffset * DAY_NS + j * 1000000L, s"$tag$j", j * 1.0))
         .toDF("time", "k", "v").coalesce(1).write.mode("overwrite")
         .parquet(tmp.toString)
@@ -197,8 +188,7 @@ class LakeIngestSpec extends AnyFunSuite {
     sys.props("graft.artifacts.vacuumGraceMs") = "0"
     try {
     // an owned lake: one parquet table + a literal `_artifacts` sidecar
-    val lake = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "art-lake").toString
+    val lake = tempDir("art-lake").toString
     val tableDir = new File(lake, "docs.parquet").getAbsolutePath
     val sidecar = Some(new File(lake, "_artifacts").getAbsolutePath)
     (0L until 50L).map(i => (i, s"text $i")).toDF("doc_id", "text")
@@ -248,8 +238,7 @@ class LakeIngestSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.operators.ArtifactStore
     val prevGrace = sys.props.get("graft.artifacts.vacuumGraceMs")
-    val lake = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "art-gate").toString
+    val lake = tempDir("art-gate").toString
     val tableDir = new File(lake, "t.parquet").getAbsolutePath
     val sidecar = Some(new File(lake, "_artifacts").getAbsolutePath)
     def regen(n: Long): Unit = {
@@ -291,8 +280,7 @@ class LakeIngestSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.operators.ArtifactStore
     val prevGrace = sys.props.get("graft.artifacts.vacuumGraceMs")
-    val lake = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "art-read").toString
+    val lake = tempDir("art-read").toString
     val tableDir = new File(lake, "t.parquet").getAbsolutePath
     val sidecar = Some(new File(lake, "_artifacts").getAbsolutePath)
     def regen(n: Long): Unit = {
@@ -335,8 +323,7 @@ class LakeIngestSpec extends AnyFunSuite {
     val prevGrace = sys.props.get("graft.artifacts.vacuumGraceMs")
     sys.props("graft.artifacts.vacuumGraceMs") = "0"
     try {
-      val lake = Files.createTempDirectory(
-        new File("target").toPath.toAbsolutePath, "art-orph").toString
+      val lake = tempDir("art-orph").toString
       val tableDir = new File(lake, "t.parquet").getAbsolutePath
       val sidecar = Some(new File(lake, "_artifacts").getAbsolutePath)
       (0L until 20L).toDF("id").write.mode("overwrite").parquet(tableDir)
@@ -356,8 +343,7 @@ class LakeIngestSpec extends AnyFunSuite {
       // the compactor carries the sweep in its maintenance cycle:
       // stage an owned-lake layout (db/table/_artifacts) and bump
       build("again-v1")
-      val owned = Files.createTempDirectory(
-        new File("target").toPath.toAbsolutePath, "art-owned").toString
+      val owned = tempDir("art-owned").toString
       val tdir = new File(new File(owned, "db"), "t")
       assert(tdir.mkdirs())
       (0L until 5L).toDF("id").coalesce(1).write.mode("overwrite")
@@ -389,8 +375,7 @@ class LakeIngestSpec extends AnyFunSuite {
   test("artifact store: concurrent misses build once; in-memory inputs refused") {
     import spark.implicits._
     import graft.operators.ArtifactStore
-    val lake = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "art-conc").toString
+    val lake = tempDir("art-conc").toString
     val tableDir = new File(lake, "t.parquet").getAbsolutePath
     (0L until 20L).toDF("id").write.mode("overwrite").parquet(tableDir)
     def docs = spark.read.parquet(tableDir)
@@ -422,8 +407,7 @@ class LakeIngestSpec extends AnyFunSuite {
     // point the default store root at a temp dir (the bench lakes are
     // read-only testdata — placement note in ArtifactStore scaladoc)
     val prev = sys.props.get("graft.artifacts.root")
-    val tmpRoot = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "art-root").toString
+    val tmpRoot = tempDir("art-root").toString
     sys.props("graft.artifacts.root") = tmpRoot
     try {
       val dir = "/root/testdata/sf0.001"

@@ -7,12 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-trip: write a measurement through LakeWriter, read it back
   * through Catalog+Engine with zone-map pruning intact. */
-class LakeWriterSpec extends AnyFunSuite {
+class LakeWriterSpec extends AnyFunSuite with TempLakes {
   private lazy val spark = GraftTestSession.spark
 
   test("write → catalog prune → engine query round-trip") {
-    val root = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "wlake").toString
+    val root = tempDir("wlake").toString
     // events re-keyed to the reference contract (time as int64 ns)
     val ev = Tables.load(spark, "/root/testdata/sf0.001", "events")
       .select(col("ts").as("time"), col("event_type").as("location"),
@@ -49,8 +48,7 @@ class LakeWriterSpec extends AnyFunSuite {
     // scenario, but on the engine's own lake contract). readTable
     // normalizes it to int64 ns, so the epoch-ns literal rewrite
     // analyzes and returns the right rows.
-    val root = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "flake").toString
+    val root = tempDir("flake").toString
     val ev = Tables.load(spark, "/root/testdata/sf0.001", "events")
       .select(col("ts").as("time"), col("event_type").as("kind"), col("value"))
     Tables.configure(spark)
@@ -75,8 +73,7 @@ class LakeWriterSpec extends AnyFunSuite {
   test("write publishes to a redis backend; engine round-trips through it") {
     val srv = new FakeRedisServer
     try {
-      val root = Files.createTempDirectory(
-        new File("target").toPath.toAbsolutePath, "wlake4").toString
+      val root = tempDir("wlake4").toString
       val cat = new RedisCatalog(s"redis://localhost:${srv.port}")
       val ev = Tables.load(spark, "/root/testdata/sf0.001", "events")
         .select(col("ts").as("time"), col("event_type").as("location"),
@@ -104,8 +101,7 @@ class LakeWriterSpec extends AnyFunSuite {
 
   test("all-null time values write without stats instead of failing") {
     import spark.implicits._
-    val root = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "wlake3").toString
+    val root = tempDir("wlake3").toString
     val df = Seq((Some(1705276800000000000L), 1.0),
       (None: Option[Long], 2.0), (None, 3.0)).toDF("time", "temperature")
     LakeWriter.write(root, "mydb", "m3", df) // must not NPE on null min/max
@@ -145,8 +141,7 @@ class LakeWriterSpec extends AnyFunSuite {
   test("append registers only the delta; overwrite clears first") {
     import spark.implicits._
     import org.apache.spark.sql.SaveMode
-    val root = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "wlake5").toString
+    val root = tempDir("wlake5").toString
     val cat = new RecordingCatalog
     val day1 = Seq((1705276800000000000L, 1.0)).toDF("time", "v").coalesce(1)
     val day2 = Seq((1705363200000000000L, 2.0)).toDF("time", "v").coalesce(1)
@@ -167,8 +162,7 @@ class LakeWriterSpec extends AnyFunSuite {
 
   test("file:// root still produces zone maps and registrations") {
     import spark.implicits._
-    val bare = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "wlake7").toString
+    val bare = tempDir("wlake7").toString
     val root = "file://" + bare
     val cat = new RecordingCatalog
     LakeWriter.write(root, "mydb", "m7",
@@ -183,8 +177,7 @@ class LakeWriterSpec extends AnyFunSuite {
   test("append into an existing date folder merges metadata.json") {
     import spark.implicits._
     import org.apache.spark.sql.SaveMode
-    val root = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "wlake6").toString
+    val root = tempDir("wlake6").toString
     val t0 = 1705276800000000000L // both rows in the same date folder
     LakeWriter.write(root, "mydb", "m6",
       Seq((t0, 1.0)).toDF("time", "v").coalesce(1))
@@ -203,9 +196,57 @@ class LakeWriterSpec extends AnyFunSuite {
     assert(meta.contains(""""row_count":2,"""))
   }
 
+  test("metadata.json bytes: write, append and compact keep the sidecar format") {
+    import spark.implicits._
+    import org.apache.spark.sql.SaveMode
+    val root = tempDir("wlake8").toString
+    val h = 3600L * 1000000000L
+    val d15 = 1705276800000000000L // 2024-01-15
+    LakeWriter.write(root, "mydb", "m8",
+      Seq[(Option[Long], Double)]((Some(d15), 1.0), (Some(d15 + 2 * h), 2.0),
+        (Some(d15 + 24 * h), 3.0)).toDF("time", "v").coalesce(1))
+    // a second file in the 2024-01-15 folder, and an all-NULL-time file
+    // (its entry carries no bounds)
+    LakeWriter.write(root, "mydb", "m8",
+      Seq[(Option[Long], Double)]((Some(d15 + h), 4.0), (None, 5.0))
+        .toDF("time", "v").coalesce(1), mode = SaveMode.Append)
+
+    /** The sidecar each folder must hold, in the exact byte format
+      * (`type,row_count,min_time,max_time,files`, entries
+      * `path,row_count,min_time,max_time`), entries in the file's order. */
+    def checkSidecars(): Unit = {
+      val folders = new File(s"$root/mydb/m8").listFiles().filter(_.isDirectory)
+      assert(folders.length == 3)
+      folders.foreach { folder =>
+        val actual = new String(Files.readAllBytes(new File(folder, "metadata.json").toPath))
+        val entries = folder.listFiles().filter(CatalogBackend.isParquet).toSeq.map { f =>
+          val r = spark.read.parquet(f.getPath)
+            .agg(min("time"), max("time"), count(lit(1))).head()
+          val stats = if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
+          val json = stats match {
+            case Some((mn, mx)) =>
+              s"""{"path":"${f.getName}","row_count":${r.getLong(2)},"min_time":$mn,"max_time":$mx}"""
+            case None => s"""{"path":"${f.getName}","row_count":${r.getLong(2)}}"""
+          }
+          (json, stats, r.getLong(2))
+        }.sortBy(e => actual.indexOf(e._1))
+        val bounds = entries.flatMap(_._2)
+        val folderStats =
+          if (bounds.isEmpty) ""
+          else s""""min_time":${bounds.map(_._1).min},"max_time":${bounds.map(_._2).max},"""
+        assert(actual == s"""{"type":"parquet","row_count":${entries.map(_._3).sum},""" +
+          s"""$folderStats"files":${entries.map(_._1).mkString("[", ",", "]")}}""")
+      }
+    }
+    checkSidecars()
+    assert(new File(s"$root/mydb/m8/date=2024-01-15").listFiles()
+      .count(CatalogBackend.isParquet) == 2)
+    assert(LakeCompactor.compact(spark, root, "mydb", "m8")._1 == 1)
+    checkSidecars()
+  }
+
   test("hour-level partitioning writes date=/hour= layout") {
-    val root = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "wlake2").toString
+    val root = tempDir("wlake2").toString
     val ev = Tables.load(spark, "/root/testdata/sf0.001", "events")
       .select(col("ts").as("time"), col("value")).limit(100)
     LakeWriter.write(root, "mydb", "m2", ev, hourPartitions = true,

@@ -976,4 +976,23 @@ class PreferenceSpec extends AnyFunSuite {
     val m = mcOf(withNull)
     assert(m("w")._1 == 1L, s"null-pred row leaked in: ${m("w")}")
   }
+
+  test("pairedBootstrapCi / permutationTest: a null id draws as \"null\" (qDF/qDH)") {
+    // the composable hash40 spelling these kernels replaced hashes a
+    // null id as the string "null": a null-id row must count, and
+    // exactly like a row whose id IS "null"
+    def rows(lastId: Option[String]) =
+      ((1 to 30).map(i => ("g", Option(s"id$i"), (i * 7 % 11).toLong, (i % 5).toLong)) :+
+        (("g", lastId, 40L, 1L))).toDF("grp", "id", "a", "b")
+    val withNull = rows(None)
+    val named = rows(Some("null"))
+    def ci(df: org.apache.spark.sql.DataFrame) =
+      Preference.pairedBootstrapCi(df, "grp", "id", "a", "b", b = 50).collect().toSeq
+    def perm(df: org.apache.spark.sql.DataFrame) =
+      Preference.permutationTest(df, "grp", "id", "a", "b", p = 50).collect().toSeq
+    assert(ci(withNull).head.getLong(1) == 31L, "the null-id row must be counted")
+    assert(ci(withNull) == ci(named))
+    assert(perm(withNull).head.getLong(1) == 31L, "the null-id row must be counted")
+    assert(perm(withNull) == perm(named))
+  }
 }
