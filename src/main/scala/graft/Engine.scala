@@ -6,12 +6,17 @@ import graft.TimeRangeExtract.TimeRange
 
 /**
  * The query engine: the Spark analog of the reference's
- * `QueryClient.Query` lifecycle (/root/reference/querier/queryClient.go:713-877):
+ * `QueryClient.Query` lifecycle (reference querier/queryClient.go:713-877):
  *
  *   normalize → SHOW intercepts → parse (Catalyst, not regexes) →
- *   catalog file pruning by extracted time range → splice the pruned
- *   scan's plan into the FROM position → run the user SQL → fallback
- *   pass-through for table-free SQL.
+ *   metadata-only answers → ONE walk of the parsed plan that carries
+ *   each relation's time conjuncts down its own path and splices a
+ *   zone-map-pruned scan at every lake-table position → int64-ns
+ *   literal rewrite → run → pass-through for table-free SQL.
+ *
+ * Pruning is invisible: a conjunct reaches a scan only through nodes
+ * that commute with a filter on the raw column (TimeRangeExtract.pushDown),
+ * so the pruned plan returns exactly what an unpruned scan would.
  *
  * `query` holds NO session-global state (no temp views): each request
  * builds a self-contained plan, so the engine is safe under the HTTP
@@ -150,118 +155,52 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
           }
       }
 
-    // CTE names shadow lake tables: `WITH x AS (…) SELECT … FROM x`
-    // must resolve x to the CTE even when a lake table x exists. The
-    // shadowing is SCOPED to each UnresolvedWith's own subtree — a CTE
-    // named x inside one subquery must not suppress a lake table x
-    // referenced bare in a different scope of the same statement.
-    val seen = scala.collection.mutable.Buffer[(Seq[String], Option[String])]()
-    planOpt.foreach(Engine.rewriteScoped(_, Set.empty, (r, scope, alias) => {
-      if (!(r.multipartIdentifier.size == 1 &&
-            scope.contains(r.multipartIdentifier.head.toLowerCase)))
-        seen += ((r.multipartIdentifier, alias))
-      None
-    }))
-    def toDbTable(parts: Seq[String]): (String, String) = parts match {
-      case Seq(d, t) => (d, t)
-      case Seq(t) => (db, t)
-      case other => (other.dropRight(1).mkString("."), other.last)
-    }
-    // occurrences keep their FROM-clause alias (per-occurrence pruning
-    // for multi-occurrence tables); rels is the distinct table set
-    val occurrences = seen.toSeq
-      .map { case (parts, alias) => (toDbTable(parts), alias) }
-      .distinct
-      .filter { case ((d, t), _) => catalog.tableExists(d, t) }
-    val rels = occurrences.map(_._1).distinct
-    if (rels.isEmpty)
-      return spark.sql(sql) // table-free or non-lake SQL → pass-through (O10)
-
-    // Resolve EVERY referenced lake table to its pruned, analyzed scan
-    // plan (joins across measurements work like any single-table
-    // query). Zone-map pruning is alias-aware: `m.time >= …` tightens
-    // only the relation aliased `m`; unqualified `time` predicates
-    // attribute only in single-relation queries. Mis-attribution would
-    // drop rows; the WHERE clause still filters either way (quirk
-    // §2.3-7).
-    val perRel: Map[String, TimeRange] =
-      extractPerRelation(planOpt.get, timeCol)
-    val perAlias: Map[String, TimeRange] =
-      extractPerAlias(planOpt.get, timeCol)
-    val tableOccurrenceCount: Map[(String, String), Int] =
-      occurrences.groupBy { case ((d, t), _) => (d.toLowerCase, t.toLowerCase) }
-        .view.mapValues(_.size).toMap
-    // table (last name, lowercase) → "its time column is int64 ns";
-    // only tables that HAVE a time column appear. Same-name tables in
-    // different dbs share a key — AND'ed, so a mixed pair never gets
-    // the long-side rewrite applied to its timestamp side.
+    if (planOpt.isEmpty) return spark.sql(sql) // unparseable: Spark reports it
+    // One walk splices every lake-table occurrence (the reference's
+    // FROM-clause splice, O8, done on the parsed plan instead of the SQL
+    // text, so a 'mydb.meas' string literal or a column named `mydb` is
+    // never corrupted). Each occurrence reads its own pruned scan, bounded
+    // by the time conjuncts that reached it along its own path, wrapped in
+    // SubqueryAlias(table, db) so `events.c` and `mydb.events.c` qualify.
+    // CTE names in scope at a position shadow lake tables there. The walk
+    // records each occurrence's time type under its FROM qualifiers for
+    // the literal rewrite; same-named keys are AND'ed, so a mixed pair
+    // never gets the long-side rewrite applied to its timestamp side.
     val timeIsLong = scala.collection.mutable.Map[String, Boolean]()
-    // (db, table, alias) → pruned analyzed plan. Kept entirely
-    // query-local: no session-global temp views, so concurrent queries
-    // on one table with different time ranges can never observe each
-    // other's pruned file set (the reference is likewise safe
-    // per-request because DuckDB gets self-contained SQL —
-    // server.go:142). A single-occurrence table prunes by its
-    // per-table range (incl. unqualified attribution); each occurrence
-    // of a MULTI-occurrence table prunes by its own statement-unique
-    // alias's qualified predicates, or not at all.
-    val prunedPlans: Map[(String, String, Option[String]),
-                         org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] =
-      occurrences.map { case ((relDb, table), alias) =>
-        val key = (relDb.toLowerCase, table.toLowerCase)
-        val pruneRange =
-          if (tableOccurrenceCount(key) == 1)
-            perRel.get(table.toLowerCase).flatMap(_.asTuple)
-          else alias.flatMap(perAlias.get).flatMap(_.asTuple)
-        val tableDf = readTable(relDb, table, pruneRange)
+    var lakeTables = 0
+    val spliced = Engine.rewriteScoped(planOpt.get, timeCol, (r, scope, alias, cmps) => {
+      val parts = r.multipartIdentifier
+      val (d, t) = if (parts.size == 1) (db, parts.head)
+        else (parts.dropRight(1).mkString("."), parts.last)
+      if ((parts.size == 1 && scope.contains(t.toLowerCase)) || !catalog.tableExists(d, t)) None
+      else {
+        lakeTables += 1
+        val tableDf = readTable(d, t, TimeRange.of(cmps).asTuple)
         tableDf.schema.fields.find(_.name.equalsIgnoreCase(timeCol)).foreach { f =>
           val isLong = f.dataType == org.apache.spark.sql.types.LongType
-          val k = table.toLowerCase
-          timeIsLong(k) = timeIsLong.getOrElse(k, true) && isLong
+          val qualifiers = alias.fold(Seq(t, s"$d.$t"))(Seq(_)) ++
+            cmps.map(_.attr.nameParts.dropRight(1).mkString(".")).filter(_.nonEmpty)
+          qualifiers.map(_.toLowerCase).foreach(k =>
+            timeIsLong(k) = timeIsLong.getOrElse(k, true) && isLong)
         }
-        (relDb.toLowerCase, table.toLowerCase, alias) ->
-          tableDf.queryExecution.analyzed
-      }.toMap
-    val anyLongTime = timeIsLong.values.exists(identity)
-    // Splice each pruned plan directly into its `UnresolvedRelation`
-    // position on the PARSED PLAN — the analog of the reference's
-    // FROM-clause splice (O8), but done as a plan transform instead of
-    // regex surgery over the SQL text, so a 'mydb.meas' string literal
-    // or a column named `mydb` is never corrupted. The splice is
-    // wrapped in SubqueryAlias(table, db) so `events.c` and
-    // `mydb.events.c` qualify naturally. Subquery plans are rewritten
-    // too; CTE references are left alone. A self-join splices the same
-    // analyzed subtree twice — the analyzer's DeduplicateRelations
-    // re-aliases one side, as for `df.join(df)`.
-    def relKey(parts: Seq[String]): (String, String) =
-      if (parts.size == 1) (db.toLowerCase, parts.head.toLowerCase)
-      else (parts.dropRight(1).mkString(".").toLowerCase, parts.last.toLowerCase)
-    val renamed = Engine.rewriteScoped(planOpt.get, Set.empty, (r, scope, alias) =>
-      if (r.multipartIdentifier.size == 1 &&
-          scope.contains(r.multipartIdentifier.head.toLowerCase)) None
-      else {
-        val (d, t) = relKey(r.multipartIdentifier)
-        prunedPlans.get((d, t, alias)).map { pruned =>
-          org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias(
-            org.apache.spark.sql.catalyst.AliasIdentifier(t, Seq(d)), pruned)
-        }
-      })
+        Some(org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias(
+          org.apache.spark.sql.catalyst.AliasIdentifier(t.toLowerCase, Seq(d.toLowerCase)),
+          tableDf.queryExecution.analyzed))
+      }
+    })
+    if (lakeTables == 0)
+      return spark.sql(sql) // table-free or non-lake SQL → pass-through (O10)
     // O9 analog: if any time column is int64 ns, rewrite time-vs-
     // string/timestamp literal comparisons to long-literal form —
-    // alias-scoped so a TimestampType `time` on another relation in
-    // the same plan keeps its native literal semantics
-    val finalPlan = if (anyLongTime) {
-      val aliases = TimeRangeExtract.aliasMap(planOpt.get)
-      // unqualified `time` (or an unresolvable qualifier, e.g. a
-      // multi-table subquery alias): rewrite only when EVERY time-
-      // bearing relation in the plan is long — otherwise ambiguous
-      val allLong = timeIsLong.values.forall(identity)
-      rewriteTimeLiterals(renamed, timeCol, attributable = parts =>
-        if (parts.size >= 2) {
-          val q = parts.dropRight(1).mkString(".").toLowerCase
-          aliases.get(q).flatMap(timeIsLong.get).getOrElse(allLong)
-        } else allLong)
-    } else renamed
+    // qualifier-scoped so a TimestampType `time` on another relation in
+    // the same plan keeps its native literal semantics. An unqualified
+    // `time`, or an unknown qualifier, is rewritten only when EVERY
+    // time-bearing relation in the plan is long.
+    val allLong = timeIsLong.values.forall(identity)
+    val finalPlan =
+      if (!timeIsLong.values.exists(identity)) spliced
+      else rewriteTimeLiterals(spliced, timeCol, attributable = parts =>
+        timeIsLong.getOrElse(parts.dropRight(1).mkString(".").toLowerCase, allLong))
     org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(spark, wrap(finalPlan))
   }
 }
@@ -270,6 +209,7 @@ object Engine {
   import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
   import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
   import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
+  import graft.TimeRangeExtract.TimeCmp
 
   private[graft] sealed trait MetaAgg
   private[graft] case object MetaCount extends MetaAgg
@@ -348,19 +288,24 @@ object Engine {
   }
 
   /**
-   * Traverse `plan` (including subquery expressions) with CTE-scope
-   * tracking: `replace` is offered every `UnresolvedRelation` together
-   * with the set of CTE names in scope AT THAT POSITION and the name
-   * of its immediate `SubqueryAlias` parent (if any — the FROM-clause
-   * alias of that occurrence), and may return a substitute subtree. A
-   * CTE's names are in scope for the UnresolvedWith's child and for
-   * its own definitions (so later/recursive CTEs can reference
-   * earlier ones) — but NOT for sibling scopes, unlike a
-   * statement-global name set.
+   * The one walk over a parsed plan (including subquery expressions),
+   * with CTE-scope tracking and the time conjuncts carried down each
+   * path. `replace` is offered every `UnresolvedRelation` together with
+   * the set of CTE names in scope AT THAT POSITION, the name of its
+   * immediate `SubqueryAlias` parent (if any — the FROM-clause alias of
+   * that occurrence) and the time conjuncts that reach it
+   * (`TimeRangeExtract.pushDown`/`reaching`), and may return a
+   * substitute subtree. A CTE's names are in scope for the
+   * UnresolvedWith's child and for its own definitions (so later or
+   * recursive CTEs can reference earlier ones) — but NOT for sibling
+   * scopes, unlike a statement-global name set. CTE definitions and
+   * subquery expressions start with no carried conjuncts: a filter
+   * outside them says nothing about their rows.
    */
-  private[graft] def rewriteScoped(plan: LogicalPlan, scope: Set[String],
-      replace: (UnresolvedRelation, Set[String], Option[String]) => Option[LogicalPlan]): LogicalPlan =
-    plan match {
+  private[graft] def rewriteScoped(plan: LogicalPlan, timeCol: String,
+      replace: (UnresolvedRelation, Set[String], Option[String], Seq[TimeCmp]) =>
+        Option[LogicalPlan]): LogicalPlan = {
+    def walk(p: LogicalPlan, scope: Set[String], carried: Seq[TimeCmp]): LogicalPlan = p match {
       case w: UnresolvedWith =>
         // CTE visibility is SEQUENTIAL: a definition sees earlier
         // definitions but NOT later ones — `WITH a AS (SELECT * FROM
@@ -374,26 +319,31 @@ object Engine {
         val newDefs = w.cteRelations.zipWithIndex.map { case ((n, d, m), i) =>
           val visible = scope ++
             w.cteRelations.take(i + selfVisible).map(_._1.toLowerCase)
-          (n, rewriteScoped(d, visible, replace).asInstanceOf[SubqueryAlias], m)
+          (n, walk(d, visible, Nil).asInstanceOf[SubqueryAlias], m)
         }
-        w.copy(child = rewriteScoped(w.child, all, replace),
-          cteRelations = newDefs)
+        w.copy(child = walk(w.child, all, carried), cteRelations = newDefs)
       case sa @ SubqueryAlias(ident, r: UnresolvedRelation) =>
-        replace(r, scope, Some(ident.name.toLowerCase))
+        val cmps = TimeRangeExtract.reaching(r.multipartIdentifier,
+          TimeRangeExtract.pushDown(sa, carried, timeCol).head)
+        replace(r, scope, Some(ident.name.toLowerCase), cmps)
           .map(sub => sa.copy(child = sub)).getOrElse(sa)
       // DESCRIBE [QUERY] <q> / EXPLAIN <q> hold their query outside
       // `children`, so the generic recursion never reaches the lake
       // relations in them
       case d: org.apache.spark.sql.execution.command.DescribeQueryCommand =>
-        d.copy(plan = rewriteScoped(d.plan, scope, replace))
+        d.copy(plan = walk(d.plan, scope, Nil))
       case e: org.apache.spark.sql.execution.command.ExplainCommand =>
-        e.copy(logicalPlan = rewriteScoped(e.logicalPlan, scope, replace))
-      case r: UnresolvedRelation => replace(r, scope, None).getOrElse(r)
+        e.copy(logicalPlan = walk(e.logicalPlan, scope, Nil))
+      case r: UnresolvedRelation =>
+        replace(r, scope, None, TimeRangeExtract.reaching(r.multipartIdentifier, carried))
+          .getOrElse(r)
       case other =>
-        other.mapChildren(rewriteScoped(_, scope, replace))
+        val down = TimeRangeExtract.pushDown(other, carried, timeCol)
+        other.withNewChildren(other.children.zip(down).map { case (c, cs) => walk(c, scope, cs) })
           .transformExpressionsDown {
-            case se: SubqueryExpression =>
-              se.withNewPlan(rewriteScoped(se.plan, scope, replace))
+            case se: SubqueryExpression => se.withNewPlan(walk(se.plan, scope, Nil))
           }
     }
+    walk(plan, Set.empty, Nil)
+  }
 }

@@ -1,25 +1,32 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedStar}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical._
 
 /**
- * Time-range extraction from a parsed Catalyst plan.
+ * The time-predicate pass over a parsed Catalyst plan.
  *
- * Replaces the reference's 16 regex patterns
- * (/root/reference/querier/queryClient.go:185-337): instead of string
- * surgery we parse the SQL with Spark's ANTLR parser and walk the
- * Filter expressions for conjunctive comparisons against the time
- * column. Covers every reference form — bare literal, `cast(… as
- * timestamp)`, `epoch_ns('…'::TIMESTAMP)`, `epoch_ns(cast(…))`,
- * equality, BETWEEN — plus anything else that parses to a comparison
- * with a literal-valued operand.
+ * Replaces the reference's 16 regex patterns and its FROM-clause string
+ * surgery (reference querier/queryClient.go:185-337, 849-856): the
+ * SQL is parsed with Spark's ANTLR parser, and one matcher, [[timeCmp]],
+ * normalizes every comparison of the time column against a
+ * literal-valued operand — either operand order, equality, BETWEEN, and
+ * every reference literal form (bare string, `cast(… as timestamp)`,
+ * `epoch_ns('…'::TIMESTAMP)`, `epoch_ns(cast(…))`). Its three readers
+ * are [[extract]] (scan bounds), [[isExactTimeRange]] (the metadata
+ * count's proof obligation) and [[rewriteTimeLiterals]] (the int64-ns
+ * literal rewrite).
  *
- * Extraction is used ONLY for scan pruning; the original WHERE always
- * executes afterwards, so a missed pattern costs performance, never
- * correctness (reference quirk §2.3-7).
+ * Pruning attribution is per relation occurrence, along that
+ * occurrence's own path: `Engine.rewriteScoped` walks the plan once,
+ * asking [[pushDown]] which time conjuncts each node hands to each
+ * child, and splices the pruned scan at each lake-table position with
+ * the conjuncts that [[reaching]] lets through. A conjunct passes only
+ * nodes that commute with a filter on the raw column, so pruning can
+ * never change a result; the original WHERE still executes afterwards
+ * (reference quirk §2.3-7).
  */
 object TimeRangeExtract {
 
@@ -28,214 +35,226 @@ object TimeRangeExtract {
     def isEmpty: Boolean = start.isEmpty && end.isEmpty
     def asTuple: Option[(Long, Long)] =
       if (isEmpty) None else Some((start.getOrElse(Long.MinValue), end.getOrElse(Long.MaxValue)))
+    /** Both ranges at once: the tighter bound on each side. */
+    def and(o: TimeRange): TimeRange =
+      TimeRange(Seq(start, o.start).flatten.maxOption, Seq(end, o.end).flatten.minOption)
+  }
+  object TimeRange {
+    def of(cmps: Seq[TimeCmp]): TimeRange =
+      cmps.map(_.range).foldLeft(TimeRange(None, None))(_ and _)
   }
 
-  /** The plan plus every (nested) subquery plan hanging off its
-    * expressions — `plan.collect` alone never descends into
-    * EXISTS/IN/scalar-subquery plans, so a lake table referenced only
-    * inside a subquery would otherwise be invisible. */
-  def withSubqueryPlans(plan: LogicalPlan): Seq[LogicalPlan] =
-    plan +: plan.collect { case p => p }
-      .flatMap(_.expressions.flatMap(_.collect {
-        case s: org.apache.spark.sql.catalyst.expressions.SubqueryExpression => s.plan
-      }))
-      .flatMap(withSubqueryPlans)
+  /** One side of a time comparison: the literal-ish operand, and whether
+    * the bound excludes it. */
+  case class Bound(value: Expression, strict: Boolean) {
+    lazy val ns: Option[Long] = lit(value)
+  }
 
-  /** Every `db.table` (or bare table) relation referenced by the plan
-    * (including subqueries), in occurrence order, deduplicated. */
-  def findRelations(plan: LogicalPlan): Seq[Seq[String]] =
-    withSubqueryPlans(plan)
-      .flatMap(_.collect { case r: UnresolvedRelation => r.multipartIdentifier })
-      .distinct
+  /**
+   * A `time`-vs-literal comparison, normalized: the time attribute as
+   * written (casts stripped) and a bound on each side. `at` is the
+   * qualifier the comparison carries at the current plan position —
+   * the attribute's own qualifier where it was harvested, re-qualified
+   * by the walk as it passes aliases and projections.
+   */
+  case class TimeCmp(attr: UnresolvedAttribute, lo: Option[Bound], hi: Option[Bound],
+                     at: Seq[String]) {
+    /** Inclusive ns range; strict bounds saturate at the Long extremes —
+      * a wrap-around would invert the bound and prune everything. */
+    def range: TimeRange = TimeRange(
+      lo.flatMap(b => b.ns.map(x => if (b.strict && x != Long.MaxValue) x + 1 else x)),
+      hi.flatMap(b => b.ns.map(x => if (b.strict && x != Long.MinValue) x - 1 else x)))
+    /** The range REPRESENTS the comparison, not merely bounds it: every
+      * bound evaluates, and no strict bound saturated. */
+    def isExact: Boolean = Seq(lo, hi).flatten.forall(b =>
+      b.ns.exists(x => !b.strict || (x != Long.MinValue && x != Long.MaxValue)))
+    /** The same comparison over the bare column, with each evaluable
+      * bound as an epoch-ns long literal. */
+    def asNsComparison: Expression = {
+      def v(b: Bound): Expression = b.ns.map(Literal(_)).getOrElse(b.value)
+      if (lo.isDefined && lo == hi) EqualTo(attr, v(lo.get))
+      else Seq(
+        lo.map(b => if (b.strict) GreaterThan(attr, v(b)) else GreaterThanOrEqual(attr, v(b))),
+        hi.map(b => if (b.strict) LessThan(attr, v(b)) else LessThanOrEqual(attr, v(b)))
+      ).flatten.reduce(And)
+    }
+  }
 
-  /** The first relation referenced by the plan. */
-  def findRelation(plan: LogicalPlan): Option[Seq[String]] =
-    findRelations(plan).headOption
+  /** The one matcher: `e` as a comparison of `timeCol` against another
+    * operand — `time op v`, `v op time`, `time = v` or
+    * `time BETWEEN v AND w` (the parser leaves BETWEEN as an unresolved
+    * function call). Whether a bound evaluates is the reader's concern. */
+  def timeCmp(e: Expression, timeCol: String): Option[TimeCmp] = {
+    def isTime(x: Expression): Option[UnresolvedAttribute] = x match {
+      case a: UnresolvedAttribute if a.nameParts.last.equalsIgnoreCase(timeCol) => Some(a)
+      case Cast(c, _, _, _) => isTime(c)
+      case _ => None
+    }
+    def cmp(x: Expression, lo: Option[Bound], hi: Option[Bound]): Option[TimeCmp] =
+      isTime(x).map(a => TimeCmp(a, lo, hi, a.nameParts.dropRight(1)))
+    def incl(v: Expression) = Some(Bound(v, strict = false))
+    def excl(v: Expression) = Some(Bound(v, strict = true))
+    e match {
+      case GreaterThanOrEqual(l, r) => cmp(l, incl(r), None).orElse(cmp(r, None, incl(l)))
+      case GreaterThan(l, r) => cmp(l, excl(r), None).orElse(cmp(r, None, excl(l)))
+      case LessThanOrEqual(l, r) => cmp(l, None, incl(r)).orElse(cmp(r, incl(l), None))
+      case LessThan(l, r) => cmp(l, None, excl(r)).orElse(cmp(r, excl(l), None))
+      case EqualTo(l, r) => cmp(l, incl(r), incl(r)).orElse(cmp(r, incl(l), incl(l)))
+      case f: UnresolvedFunction
+          if f.nameParts.last.equalsIgnoreCase("between") && f.arguments.size == 3 =>
+        cmp(f.arguments.head, incl(f.arguments(1)), incl(f.arguments(2)))
+      case _ => None
+    }
+  }
+
+  private def conjuncts(cond: Expression): Seq[Expression] = cond match {
+    case And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case other => Seq(other)
+  }
 
   def parse(spark: SparkSession, sql: String): LogicalPlan =
     spark.sessionState.sqlParser.parsePlan(sql)
 
+  /** Bounds for `timeCol` from the conjunctive time comparisons of every
+    * Filter in the plan, unattributed: for a plan that reads one
+    * relation through one filter (the metadata count's shape). */
+  def extract(plan: LogicalPlan, timeCol: String = "time"): TimeRange =
+    TimeRange.of(plan.collect { case Filter(cond, _) => conjuncts(cond) }.flatten
+      .flatMap(timeCmp(_, timeCol)))
+
   /**
-   * Alias-aware extraction for multi-relation plans: returns the time
-   * range per relation name, attributing `alias.time` predicates
-   * through `SubqueryAlias` wrappers (`FROM mydb.meas m ... m.time >= …`
-   * tightens only `meas`). Unqualified `time` predicates are
-   * attributed only when the plan references a single relation —
-   * with several, an unqualified column can't be attributed before
-   * resolution, and mis-attributed pruning would drop rows.
-   *
-   * A table that occurs MORE THAN ONCE in the plan (UNION ALL branches,
-   * a self-join with per-alias windows, or an outer query plus a
-   * subquery over the same table) gets NO pruning: all occurrences
-   * share one temp view, so the only sound per-view range would be the
-   * UNION of the occurrences' windows — and intersecting them (the
-   * naive fold) silently drops rows for disjoint branches. Filters
-   * inside subquery expressions are never harvested either: a
-   * `NOT EXISTS (… t.time > X)` pruned by `time > X` would invert the
-   * result. Pruning stays a strict optimization (quirk §2.3-7).
+   * True iff `cond` is a conjunction of time comparisons whose bounds
+   * all evaluate, so the extracted TimeRange REPRESENTS the condition,
+   * not merely bounds it. A single other conjunct returns false: the
+   * metadata count fast path must not treat a broader condition as its
+   * time-range projection.
    */
-  /** alias → relation-name map (lowercased; bare table name and
-    * `db.table` both alias the table; a subquery alias maps to the
-    * first relation under it). Shared by per-relation pruning and the
-    * alias-scoped literal rewrite. */
-  def aliasMap(plan: LogicalPlan): Map[String, String] = {
-    val aliasToTable = scala.collection.mutable.Map[String, String]()
-    withSubqueryPlans(plan).foreach(_.foreach {
-      case org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias(ident, child) =>
-        child.collectFirst { case r: UnresolvedRelation =>
-          aliasToTable(ident.name.toLowerCase) = r.multipartIdentifier.last.toLowerCase
-        }
-      case r: UnresolvedRelation =>
-        val t = r.multipartIdentifier.last.toLowerCase
-        aliasToTable.getOrElseUpdate(t, t)
-        // db.table used as qualifier too
-        aliasToTable.getOrElseUpdate(r.multipartIdentifier.mkString(".").toLowerCase, t)
-      case _ => ()
+  def isExactTimeRange(cond: Expression, timeCol: String): Boolean =
+    conjuncts(cond).forall(c => timeCmp(c, timeCol).exists(_.isExact))
+
+  // ---- the per-occurrence walk -------------------------------------------
+
+  /** `q` names `name` the way a column qualifier may: a non-empty
+    * suffix (`meas` or `mydb.meas` for `mydb.meas`). */
+  private def qualifies(q: Seq[String], name: Seq[String]): Boolean =
+    q.nonEmpty && name.takeRight(q.size).corresponds(q)(_ equalsIgnoreCase _)
+
+  /** Column-bearing leaves: an unqualified column is attributable only
+    * when exactly one of them lies below. */
+  private def relationCount(p: LogicalPlan): Int =
+    p.collectLeaves().count(!_.isInstanceOf[OneRowRelation])
+
+  /** Where a projection's `time` output comes from, as the qualifier the
+    * conjuncts above it take on: a lone bare (or same-named aliased)
+    * attribute, or a lone star, passes the input column through; a
+    * computed, ambiguous or absent `time` yields None. An unaliased
+    * expression over `time` counts as computed `time` (Spark names
+    * `cast(time AS …)` after its child). A window function makes every
+    * row depend on the rows a filter would drop, so it yields None too. */
+  private def timeSource(list: Seq[Expression], timeCol: String): Option[Seq[String]] = {
+    def isT(a: UnresolvedAttribute) = a.nameParts.last.equalsIgnoreCase(timeCol)
+    val windowed = list.exists(_.exists {
+      case _: WindowExpression | _: UnresolvedWindowExpression => true
+      case _ => false
     })
-    aliasToTable.toMap
+    val named = list.filter {
+      case a: UnresolvedAttribute => isT(a)
+      case Alias(_, n) => n.equalsIgnoreCase(timeCol)
+      case _: UnresolvedStar => false
+      case e => e.exists { case a: UnresolvedAttribute => isT(a); case _ => false }
+    }
+    val stars = list.collect { case s: UnresolvedStar => s }
+    def passed(e: Expression): Option[UnresolvedAttribute] = e match {
+      case a: UnresolvedAttribute => Some(a)
+      case Alias(a: UnresolvedAttribute, _) if isT(a) => Some(a)
+      case _ => None
+    }
+    (named, stars) match {
+      case _ if windowed => None
+      case (Seq(e), Seq()) => passed(e).map(_.nameParts.dropRight(1))
+      case (Seq(), Seq(star)) => Some(star.target.getOrElse(Nil))
+      case _ => None
+    }
   }
 
   /**
-   * Per-ALIAS ranges for multi-occurrence tables: when one table is
-   * referenced several times under DISTINCT, statement-unique aliases
-   * (`FROM meas a JOIN meas b`), each alias's QUALIFIED predicates
-   * (`a.time >= …`) can soundly prune that occurrence's scan even
-   * though the per-table attribution (extractPerRelation) must give
-   * up. Aliases whose name appears more than once across the
-   * statement, and unaliased occurrences, are excluded — no range.
+   * The time conjuncts `node` hands to each of its children, given the
+   * ones `carried` into it from above. A conjunct passes only nodes that
+   * commute with a filter on the raw column:
+   *  - Filter adds its own conjuncts — an unqualified one only when
+   *    exactly one relation lies below;
+   *  - SubqueryAlias re-qualifies its own name away and drops conjuncts
+   *    naming anything else;
+   *  - Sort passes everything;
+   *  - Join passes the qualified ones to both sides, where each
+   *    SubqueryAlias or relation keeps only its own — the harvested
+   *    comparisons reject NULLs, so outer joins are safe, and nothing
+   *    above a semi or anti join can name its right side. An
+   *    unqualified one cannot be attributed to a side, so it stops;
+   *  - a Project passes them when it passes `time` through, bare or by
+   *    a star.
+   * Any other node (Aggregate, Limit, Offset, Window, Generate, Sample,
+   * Union, Distinct, column-renaming aliases, …) hands down nothing, and
+   * so does a Project computing `time` or a window function.
    */
-  def extractPerAlias(plan: LogicalPlan,
-                      timeCol: String = "time"): Map[String, TimeRange] = {
-    val aliasCounts = scala.collection.mutable.Map[String, Int]()
-    withSubqueryPlans(plan).foreach(_.foreach {
-      case org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias(ident, _) =>
-        val a = ident.name.toLowerCase
-        aliasCounts(a) = aliasCounts.getOrElse(a, 0) + 1
-      case _ => ()
-    })
-    aliasCounts.collect { case (a, 1) =>
-      a -> extract(plan, timeCol, qualifierFilter = Some { parts =>
-        parts.size >= 2 && parts.dropRight(1).mkString(".").toLowerCase == a
-      })
-    }.toMap
+  def pushDown(node: LogicalPlan, carried: Seq[TimeCmp], timeCol: String): Seq[Seq[TimeCmp]] = {
+    def each(cs: Seq[TimeCmp]) = node.children.map(_ => cs)
+    node match {
+      case Filter(cond, child) =>
+        val attributable = relationCount(child) == 1
+        each(carried ++ conjuncts(cond).flatMap(timeCmp(_, timeCol))
+          .filter(c => !c.range.isEmpty && (c.at.nonEmpty || attributable)))
+      case SubqueryAlias(ident, _) =>
+        each(carried.flatMap { c =>
+          if (c.at.isEmpty) Some(c)
+          else if (qualifies(c.at, ident.qualifier :+ ident.name)) Some(c.copy(at = Nil))
+          else None
+        })
+      case _: Sort => each(carried)
+      case _: Join => each(carried.filter(_.at.nonEmpty))
+      case Project(list, _) =>
+        each(timeSource(list, timeCol).toSeq.flatMap(q => carried.map(_.copy(at = q))))
+      case _ => each(Nil)
+    }
   }
 
+  /** The carried conjuncts that apply to a relation named `name`: the
+    * unqualified ones and those qualified by its name. */
+  def reaching(name: Seq[String], carried: Seq[TimeCmp]): Seq[TimeCmp] =
+    carried.filter(c => c.at.isEmpty || qualifies(c.at, name))
+
+  /** One relation occurrence the walk reached outside CTE scope, with
+    * its FROM-clause alias and the range of the conjuncts reaching it. */
+  case class Occurrence(name: Seq[String], alias: Option[String], range: TimeRange)
+
+  def occurrences(plan: LogicalPlan, timeCol: String): Seq[Occurrence] = {
+    val found = Seq.newBuilder[Occurrence]
+    Engine.rewriteScoped(plan, timeCol, (r, scope, alias, cmps) => {
+      val name = r.multipartIdentifier
+      if (!(name.size == 1 && scope.contains(name.head.toLowerCase)))
+        found += Occurrence(name, alias, TimeRange.of(cmps))
+      None
+    })
+    found.result()
+  }
+
+  /** Per-table view of [[occurrences]], keyed by lowercase table name. A
+    * table that occurs more than once gets no range here (each
+    * occurrence still prunes by its own path in the engine). */
   def extractPerRelation(plan: LogicalPlan,
-                         timeCol: String = "time"): Map[String, TimeRange] = {
-    val aliasToTable = aliasMap(plan)
-    val tables = scala.collection.mutable.ListBuffer[String]()
-    withSubqueryPlans(plan).foreach(_.foreach {
-      case r: UnresolvedRelation => tables += r.multipartIdentifier.last.toLowerCase
-      case _ => ()
-    })
-    val counts = tables.groupBy(identity).view.mapValues(_.size).toMap
-    val single = tables.size == 1
-    tables.distinct.map { t =>
-      if (counts(t) > 1) t -> TimeRange(None, None) // multi-occurrence: no pruning
-      else t -> extract(plan, timeCol, qualifierFilter = Some { parts =>
-        if (parts.size >= 2)
-          aliasToTable.get(parts.dropRight(1).mkString(".").toLowerCase).contains(t)
-        else single // unqualified: only attributable with one relation
-      })
-    }.toMap
-  }
+                         timeCol: String = "time"): Map[String, TimeRange] =
+    occurrences(plan, timeCol).groupBy(_.name.last.toLowerCase).map {
+      case (t, Seq(o)) => t -> o.range
+      case (t, _) => t -> TimeRange(None, None)
+    }
 
-  /** Extract bounds for `timeCol` from every Filter in the plan.
-    * `qualifierFilter`: when set, only attribute comparisons whose
-    * attribute name-parts pass the predicate (alias attribution). */
-  def extract(plan: LogicalPlan, timeCol: String = "time",
-              qualifierFilter: Option[Seq[String] => Boolean] = None): TimeRange = {
-    var lo: Option[Long] = None
-    var hi: Option[Long] = None
-    def tighten(newLo: Option[Long], newHi: Option[Long]): Unit = {
-      newLo.foreach(v => lo = Some(lo.fold(v)(math.max(_, v))))
-      newHi.foreach(v => hi = Some(hi.fold(v)(math.min(_, v))))
+  /** Per-alias view of [[occurrences]]: the range of each occurrence
+    * whose FROM-clause alias is unique in the statement. */
+  def extractPerAlias(plan: LogicalPlan,
+                      timeCol: String = "time"): Map[String, TimeRange] =
+    occurrences(plan, timeCol).groupBy(_.alias).collect {
+      case (Some(a), Seq(o)) => a -> o.range
     }
-    def isTime(e: Expression): Boolean = e match {
-      case a: UnresolvedAttribute =>
-        a.nameParts.lastOption.exists(_.equalsIgnoreCase(timeCol)) &&
-          qualifierFilter.forall(_(a.nameParts))
-      case Cast(c, _, _, _) => isTime(c)
-      case _ => false
-    }
-    // strict→inclusive normalization saturates at the Long extremes —
-    // a wrap-around would invert the bound and prune everything
-    def inc(v: Option[Long]): Option[Long] =
-      v.map(x => if (x == Long.MaxValue) x else x + 1)
-    def dec(v: Option[Long]): Option[Long] =
-      v.map(x => if (x == Long.MinValue) x else x - 1)
-    def walk(e: Expression): Unit = e match {
-      case And(l, r) => walk(l); walk(r)
-      case GreaterThanOrEqual(a, v) if isTime(a) => tighten(lit(v), None)
-      case GreaterThan(a, v) if isTime(a) => tighten(inc(lit(v)), None)
-      case LessThanOrEqual(a, v) if isTime(a) => tighten(None, lit(v))
-      case LessThan(a, v) if isTime(a) => tighten(None, dec(lit(v)))
-      case EqualTo(a, v) if isTime(a) => tighten(lit(v), lit(v))
-      // mirrored operand order: '2023-…' <= time
-      case GreaterThanOrEqual(v, a) if isTime(a) => tighten(None, lit(v))
-      case GreaterThan(v, a) if isTime(a) => tighten(None, dec(lit(v)))
-      case LessThanOrEqual(v, a) if isTime(a) => tighten(lit(v), None)
-      case LessThan(v, a) if isTime(a) => tighten(inc(lit(v)), None)
-      case EqualTo(v, a) if isTime(a) => tighten(lit(v), lit(v))
-      case Between(a, lower, upper, _) if isTime(a) =>
-        tighten(lit(lower), lit(upper))
-      // the parser leaves BETWEEN as an unresolved function call
-      case f: UnresolvedFunction
-          if f.nameParts.lastOption.exists(_.equalsIgnoreCase("between")) &&
-            f.arguments.size == 3 && isTime(f.arguments.head) =>
-        tighten(lit(f.arguments(1)), lit(f.arguments(2)))
-      case _ => () // OR / NOT / unrelated predicates: no pruning info
-    }
-    plan.foreach {
-      case Filter(cond, _) => walk(cond)
-      case _ => ()
-    }
-    TimeRange(lo, hi)
-  }
-
-  /**
-   * True iff `cond` is a conjunction of EXACTLY the comparison forms
-   * `extract` tightens — time-vs-evaluable-literal comparisons (all
-   * mirrored variants, equality, BETWEEN) joined by AND — so the
-   * extracted TimeRange REPRESENTS the condition, not merely bounds
-   * it. A single unrecognized or unevaluable conjunct returns false:
-   * callers (the metadata count fast path) must not treat a broader
-   * condition as if it were its time-range projection.
-   */
-  def isExactTimeRange(cond: Expression, timeCol: String): Boolean = {
-    def isTime(e: Expression): Boolean = e match {
-      case a: UnresolvedAttribute =>
-        a.nameParts.lastOption.exists(_.equalsIgnoreCase(timeCol))
-      case Cast(c, _, _, _) => isTime(c)
-      case _ => false
-    }
-    // strict comparisons at the Long extremes saturate during
-    // normalization (extract would represent `time > MaxValue` as
-    // `>= MaxValue`) — sound for pruning, NOT an exact representation
-    def strictOk(v: Expression): Boolean =
-      lit(v).exists(x => x != Long.MinValue && x != Long.MaxValue)
-    def ok(e: Expression): Boolean = e match {
-      case And(l, r) => ok(l) && ok(r)
-      case GreaterThanOrEqual(a, v) if isTime(a) => lit(v).isDefined
-      case GreaterThan(a, v) if isTime(a) => strictOk(v)
-      case LessThanOrEqual(a, v) if isTime(a) => lit(v).isDefined
-      case LessThan(a, v) if isTime(a) => strictOk(v)
-      case EqualTo(a, v) if isTime(a) => lit(v).isDefined
-      case GreaterThanOrEqual(v, a) if isTime(a) => lit(v).isDefined
-      case GreaterThan(v, a) if isTime(a) => strictOk(v)
-      case LessThanOrEqual(v, a) if isTime(a) => lit(v).isDefined
-      case LessThan(v, a) if isTime(a) => strictOk(v)
-      case EqualTo(v, a) if isTime(a) => lit(v).isDefined
-      case Between(a, lower, upper, _) if isTime(a) =>
-        lit(lower).isDefined && lit(upper).isDefined
-      case f: UnresolvedFunction
-          if f.nameParts.lastOption.exists(_.equalsIgnoreCase("between")) &&
-            f.arguments.size == 3 && isTime(f.arguments.head) =>
-        lit(f.arguments(1)).isDefined && lit(f.arguments(2)).isDefined
-      case _ => false
-    }
-    ok(cond)
-  }
 
   /**
    * Analog of the reference's timestamp-literal rewrite (O9,
@@ -246,59 +265,18 @@ object TimeRangeExtract {
    * Catalyst plan transform, not string surgery.
    *
    * `attributable` scopes the rewrite to attributes that belong to a
-   * LongType-time relation (alias attribution, same map as pruning):
-   * in a join between an int64-ns lake table and a TimestampType-time
-   * table, the timestamp side's literals must NOT be rewritten to ns
-   * longs — that would be a silently wrong comparison.
+   * LongType-time relation: in a join between an int64-ns lake table
+   * and a TimestampType-time table, the timestamp side's literals must
+   * NOT be rewritten to ns longs — that would be a silently wrong
+   * comparison.
    */
   def rewriteTimeLiterals(plan: LogicalPlan, timeCol: String,
                           attributable: Seq[String] => Boolean = _ => true): LogicalPlan = {
-    def isTime(e: Expression): Boolean = e match {
-      case a: UnresolvedAttribute =>
-        a.nameParts.lastOption.exists(_.equalsIgnoreCase(timeCol)) &&
-          attributable(a.nameParts)
-      case Cast(c, _, _, _) => isTime(c)
-      case _ => false
-    }
-    def bare(e: Expression): Expression = e match {
-      case a: UnresolvedAttribute => a
-      case Cast(c, _, _, _) => bare(c)
-      case other => other
-    }
-    def asNs(e: Expression): Option[Expression] = e match {
-      case _: Literal | _: Cast | _: UnresolvedFunction =>
-        lit(e).map(ns => Literal(ns))
-      case _ => None
-    }
-    val rules: PartialFunction[Expression, Expression] = {
-      case GreaterThanOrEqual(a, v) if isTime(a) && asNs(v).isDefined =>
-        GreaterThanOrEqual(bare(a), asNs(v).get)
-      case GreaterThan(a, v) if isTime(a) && asNs(v).isDefined =>
-        GreaterThan(bare(a), asNs(v).get)
-      case LessThanOrEqual(a, v) if isTime(a) && asNs(v).isDefined =>
-        LessThanOrEqual(bare(a), asNs(v).get)
-      case LessThan(a, v) if isTime(a) && asNs(v).isDefined =>
-        LessThan(bare(a), asNs(v).get)
-      case EqualTo(a, v) if isTime(a) && asNs(v).isDefined =>
-        EqualTo(bare(a), asNs(v).get)
-      case GreaterThanOrEqual(v, a) if isTime(a) && asNs(v).isDefined =>
-        LessThanOrEqual(bare(a), asNs(v).get)
-      case GreaterThan(v, a) if isTime(a) && asNs(v).isDefined =>
-        LessThan(bare(a), asNs(v).get)
-      case LessThanOrEqual(v, a) if isTime(a) && asNs(v).isDefined =>
-        GreaterThanOrEqual(bare(a), asNs(v).get)
-      case LessThan(v, a) if isTime(a) && asNs(v).isDefined =>
-        GreaterThan(bare(a), asNs(v).get)
-      case Between(a, lo, hi, repl) if isTime(a) &&
-          (asNs(lo).isDefined || asNs(hi).isDefined) =>
-        Between(bare(a), asNs(lo).getOrElse(lo), asNs(hi).getOrElse(hi), repl)
-      case f: UnresolvedFunction
-          if f.nameParts.lastOption.exists(_.equalsIgnoreCase("between")) &&
-            f.arguments.size == 3 && isTime(f.arguments.head) &&
-            (asNs(f.arguments(1)).isDefined || asNs(f.arguments(2)).isDefined) =>
-        f.copy(arguments = Seq(bare(f.arguments.head),
-          asNs(f.arguments(1)).getOrElse(f.arguments(1)),
-          asNs(f.arguments(2)).getOrElse(f.arguments(2))))
+    val rule: PartialFunction[Expression, Expression] = Function.unlift { (e: Expression) =>
+      timeCmp(e, timeCol)
+        .filter(c => attributable(c.attr.nameParts) &&
+          Seq(c.lo, c.hi).flatten.exists(_.ns.isDefined))
+        .map(_.asNsComparison)
     }
     // apply inside subquery plans too — `transformAllExpressions` alone
     // never reaches a Filter nested in an EXISTS/IN subquery expression.
@@ -307,12 +285,11 @@ object TimeRangeExtract {
     // time literal inside `WITH x AS (… WHERE time < '…')` stays a
     // string and the int64 comparison fails at runtime.
     plan.transformDownWithSubqueries {
-      case w: org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith =>
+      case w: UnresolvedWith =>
         w.copy(cteRelations = w.cteRelations.map { case (n, d, m) =>
-          (n, rewriteTimeLiterals(d, timeCol, attributable)
-            .asInstanceOf[org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias], m)
+          (n, rewriteTimeLiterals(d, timeCol, attributable).asInstanceOf[SubqueryAlias], m)
         })
-      case p => p.transformExpressions(rules)
+      case p => p.transformExpressions(rule)
     }
   }
 

@@ -192,8 +192,9 @@ object ContextLayout {
    * Round20OptSpec).
    *
    * `docs` must cover every node id (the [[inContextLayout]]
-   * contract — ids match); rows are inner-joined, so the ordinal
-   * counts exactly the docs being packed.
+   * contract — ids match): a walked id with no doc row fails the query
+   * (raise_error on the existing join) instead of silently dropping out
+   * of the ordinal.
    *
    * @return (id, component, ord, walked, seq_id, tok_start, tok_end)
    *         — one row per (doc, sequence) overlap, zero-weight docs
@@ -208,8 +209,13 @@ object ContextLayout {
     val walked = walkedFrame(nodes, idCol, edges, aCol, bCol, wCol,
       maxComponent, maxDegree, salt)
     val withW = walked.join(
-      docs.select(col(idCol).cast("long").as("id"),
-        col(weightCol).cast("long").as("__w")), Seq("id"))
+        docs.select(col(idCol).cast("long").as("id"),
+          col(weightCol).cast("long").as("__w"), lit(true).as("__doc")),
+        Seq("id"), "left")
+      .withColumn("__w", when(col("__doc"), col("__w")).otherwise(raise_error(concat(
+        lit("orderAndPackSequences: docs has no row for node id "),
+        col("id").cast("string")))))
+      .drop("__doc")
     val pre = Packing.prefixByKey2(withW.withColumn("__one", lit(1L)),
       Seq(col("comp_key"), col("comp"), col("third"), col("id")),
       "id", "__one", "__w", partitions)

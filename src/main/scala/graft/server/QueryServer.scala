@@ -14,7 +14,9 @@ import graft.encoders.ResultEncoder
  *  - `POST /query` body `{"query": "...", "db": "..."}`;
  *    `?db=` overrides body db, body db overrides default "mydb"
  *    (server.go:183-189); `?format=json|ndjson` (server.go:159-168);
- *  - errors as `{"error": "..."}` with appropriate status;
+ *  - errors as `{"error": "..."}`: 400 for SQL that does not parse or
+ *    resolve and for a missing query or non-JSON body; 500, with the
+ *    exception's class as `"exception"`, for any other failure;
  *  - CORS headers on all responses;
  *  - `GET /health` → `{"status":"ok","timestamp":…}`;
  *  - embedded UI at `/` unless `disableUi` (reference `DISABLE_UI`,
@@ -107,9 +109,15 @@ class QueryServer(engine: Engine, port: Int = 8080,
         }
       } catch {
         case e: Throwable =>
-          val msg = Option(e.getMessage).getOrElse(e.toString)
-          respond(ex, 400, mapper.writeValueAsString(
-            mapper.createObjectNode().put("error", msg)))
+          // the client's fault — SQL that does not parse or resolve, a
+          // body that is not JSON — is a 400; any other failure is ours,
+          // a 500 that names the exception
+          val clientError = e.isInstanceOf[org.apache.spark.sql.AnalysisException] ||
+            e.isInstanceOf[com.fasterxml.jackson.core.JsonProcessingException]
+          val body = mapper.createObjectNode()
+            .put("error", Option(e.getMessage).getOrElse(e.toString))
+          if (!clientError) body.put("exception", e.getClass.getName)
+          respond(ex, if (clientError) 400 else 500, mapper.writeValueAsString(body))
       } finally ex.close()
     })
 

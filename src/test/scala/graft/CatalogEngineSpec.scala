@@ -47,6 +47,15 @@ class CatalogEngineSpec extends AnyFunSuite with TempLakes {
   private lazy val catalog = new Catalog(root)
   private lazy val engine = new Engine(spark, catalog)
 
+  /** The files each spliced scan of `df` reads, in plan order. */
+  private def scannedFiles(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+    df.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation.asInstanceOf[
+          org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+          .location.inputFiles.toSeq
+    }
+
   test("databases / tables discovery") {
     assert(catalog.databases == Seq("mydb"))
     assert(catalog.tables("mydb") == Seq("meas"))
@@ -183,33 +192,46 @@ class CatalogEngineSpec extends AnyFunSuite with TempLakes {
     assert(df.count() == 24L * 24L) // day-1 rows × day-3 rows
     // AND each occurrence's scan is pruned by ITS OWN alias's window:
     // the a-side reads only day-1's file, the b-side only day-3's
-    val scans = df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation.asInstanceOf[
-          org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-          .location.inputFiles.toSeq
-    }
+    val scans = scannedFiles(df)
     assert(scans.size == 2)
     assert(scans.forall(_.size == 1), scans)
     assert(scans.flatten.exists(_.contains("date=2023-01-01")))
     assert(scans.flatten.exists(_.contains("date=2023-01-03")))
   }
 
-  test("engine: multi-occurrence without usable aliases stays unpruned but correct") {
-    // UNION ALL branches referencing the bare table: no statement-unique
-    // alias to attribute to → both occurrences read all 3 days; WHERE
-    // still filters (pruning is a strict optimization)
+  test("engine: UNION ALL branches over the bare table each prune by their own window") {
+    // each occurrence carries only the filter on its own path: the
+    // first branch reads day 1's file, the second day 3's
     val df = engine.query(
       "SELECT time FROM mydb.meas WHERE time < '2023-01-02T00:00:00Z' " +
         "UNION ALL SELECT time FROM mydb.meas WHERE time >= '2023-01-03T00:00:00Z'", "")
     assert(df.count() == 48L)
-    val scans = df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation.asInstanceOf[
-          org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-          .location.inputFiles.toSeq
+    val scans = scannedFiles(df)
+    assert(scans.map(_.size) == Seq(1, 1), scans)
+    assert(scans(0).head.contains("date=2023-01-01") && scans(1).head.contains("date=2023-01-03"))
+  }
+
+  test("engine: a pass-through subquery prunes; a computed time column does not") {
+    def run(sql: String) = {
+      val df = engine.query(sql, "")
+      (df.collect().head.getLong(0), scannedFiles(df).map(_.size))
     }
-    assert(scans.forall(_.size == 3), scans) // conservative: unpruned
+    // bare, starred and re-aliased pass-throughs read only day 3's file
+    Seq("SELECT count(*) AS n FROM (SELECT * FROM mydb.meas) WHERE time >= '2023-01-03T00:00:00Z'",
+        "SELECT count(*) AS n FROM (SELECT time, location FROM mydb.meas m) s " +
+          "WHERE s.time >= '2023-01-03T00:00:00Z'",
+        "SELECT count(*) AS n FROM (SELECT m.time AS time FROM mydb.meas m ORDER BY time) s " +
+          "WHERE '2023-01-03T00:00:00Z' <= s.time").foreach { sql =>
+      assert(run(sql) == ((24L, Seq(1))), sql)
+    }
+    // a shifted, aggregated or limited `time` is a different column:
+    // the scan stays whole and the answers match an unpruned scan
+    assert(run("SELECT count(*) AS n FROM (SELECT time + 86400000000000 AS time FROM mydb.meas) " +
+      "WHERE time >= '2023-01-03T00:00:00Z'") == ((48L, Seq(3))))
+    assert(run("SELECT count(*) AS n FROM (SELECT min(time) AS time FROM mydb.meas) " +
+      "WHERE time >= '2023-01-02T00:00:00Z'") == ((0L, Seq(3))))
+    assert(run("SELECT count(*) AS n FROM (SELECT * FROM mydb.meas ORDER BY time LIMIT 10) " +
+      "WHERE time >= '2023-01-02T00:00:00Z'") == ((0L, Seq(3))))
   }
 
   test("engine: multi-occurrence table disables pruning (extract level)") {

@@ -69,10 +69,12 @@ class ConcurrencySpec extends AnyFunSuite {
       val df = engine.query(daySql(d), "")
       // the pruned scan must contain exactly one file (zone maps applied)
       val scanned = df.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+          l.relation.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+            .location.inputFiles.length
       }
       assert(df.collect().head.getLong(0) == rowsInDay(d))
-      assert(scanned.nonEmpty)
+      assert(scanned == Seq(1), scanned)
     }
   }
 

@@ -163,4 +163,15 @@ class QueryServerSpec extends AnyFunSuite {
     assert(missing.statusCode() == 400 &&
       missing.body() == """{"error":"missing query"}""")
   }
+
+  test("error contract: a non-JSON body is a 400, a failure while running is a 500") {
+    val notJson = post("/query", """{"query": SELECT 1""")
+    assert(notJson.statusCode() == 400 && notJson.body().contains("\"error\""), notJson.body())
+    val unresolved = post("/query", """{"query":"SELECT nope FROM mydb.weather"}""")
+    assert(unresolved.statusCode() == 400, unresolved.body())
+    val failed = post("/query", """{"query":"SELECT raise_error('boom')"}""")
+    assert(failed.statusCode() == 500, failed.body())
+    assert(failed.body().contains("boom") &&
+      failed.body().contains("\"exception\":\"org.apache.spark."), failed.body())
+  }
 }

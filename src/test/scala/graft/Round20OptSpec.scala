@@ -117,6 +117,20 @@ class Round20OptSpec extends AnyFunSuite {
     assert(fused.nonEmpty && fused.exists(_._5 > 0)) // real multi-sequence case
   }
 
+  test("orderAndPackSequences fails loudly when docs misses a node id") {
+    import graft.operators.ContextLayout
+    val docs = (0L until 20L).map(id => (id, 1L + id % 7)).toDF("id", "w")
+    val edges = Seq((1L, 2L, 0.5), (2L, 3L, 0.5)).toDF("a", "b", "ew")
+    // node 13 is walked but has no doc row: the ordinal would silently
+    // skip it and diverge from the contextOrder -> packSequencesBy composition
+    val err = intercept[Exception] {
+      ContextLayout.orderAndPackSequences(docs.select(col("id")), "id", edges,
+        "a", "b", "ew", docs.filter(col("id") =!= 13L), "w", seqLen = 16).collect()
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("no row for node id 13")), err)
+  }
+
   test("tokenBudgetMix: binary-key two-phase sum == hex-key results") {
     val rnd = new scala.util.Random(5)
     val df = (0 until 400).map(i =>

@@ -61,11 +61,6 @@ class TimeRangeExtractSpec extends AnyFunSuite {
     assert(range("location = 'x'").isEmpty)
   }
 
-  test("relation extraction") {
-    val plan = TimeRangeExtract.parse(spark, "SELECT * FROM hep.hep_1 WHERE time > 5")
-    assert(TimeRangeExtract.findRelation(plan).contains(Seq("hep", "hep_1")))
-  }
-
   test("time literal formats (reference queryClient.go:241-293)") {
     import TimeRangeExtract.parseTimeLiteral
     assert(parseTimeLiteral("2023-01-01T00:00:00Z").contains(T0))
