@@ -199,7 +199,7 @@ class CatalogEngineSpec extends AnyFunSuite with TempLakes {
     assert(scans.flatten.exists(_.contains("date=2023-01-03")))
   }
 
-  test("engine: UNION ALL branches over the bare table each prune by their own window") {
+  test("engine: bare-table UNION ALL branches each prune by their own window") {
     // each occurrence carries only the filter on its own path: the
     // first branch reads day 1's file, the second day 3's
     val df = engine.query(
