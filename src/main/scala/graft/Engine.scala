@@ -22,6 +22,19 @@ import graft.TimeRangeExtract.TimeRange
  * builds a self-contained plan, so the engine is safe under the HTTP
  * server's concurrent dispatch.
  *
+ * Two plan profiles. The spliced plan is analyzed in the engine's
+ * session; then, if the files its scans read total at most the
+ * session's `spark.sql.files.openCostInBytes` (Spark's own estimate of
+ * what opening one file costs, 4 MB by default), it runs in the
+ * session's small-request clone ([[Engine.SmallProfile]]): one shuffle
+ * partition, no adaptive execution, no whole-stage code generation.
+ * Under that size a request's cost is Spark's fixed per-job, per-stage
+ * and per-compile cost, not its data: adaptive execution submits every
+ * query stage as its own job, a sort over several shuffle partitions
+ * adds a range-sampling job, and each new time window's literals cost
+ * a Janino compile of whole-stage code. A larger request plans in the
+ * engine's session, with its partitions and adaptive execution.
+ *
  * Differences from the reference, by design (documented quirk fixes):
  *  - an empty pruned file set yields an empty DataFrame with the
  *    table's schema instead of an error (quirk §2.3-6);
@@ -33,6 +46,9 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
 
   graft.functions.Compat.register(spark)
   Tables.configure(spark)
+  // cloned on the first small request, so after the registrations above;
+  // held here because the per-session memo holds it only weakly
+  private lazy val smallProfile = Engine.SmallProfile.of(spark)
 
   import TimeRangeExtract._
 
@@ -201,7 +217,16 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
       if (!timeIsLong.values.exists(identity)) spliced
       else rewriteTimeLiterals(spliced, timeCol, attributable = parts =>
         timeIsLong.getOrElse(parts.dropRight(1).mkString(".").toLowerCase, allLong))
-    org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(spark, wrap(finalPlan))
+    // analyzed here, so temp views and functions registered on this
+    // session after its small-profile clone was made still resolve
+    val analyzed = spark.sessionState.executePlan(finalPlan).analyzed
+    val session =
+      if (Engine.inputBytes(analyzed) <= spark.sessionState.conf.filesOpenCostInBytes)
+        smallProfile.session()
+      else spark
+    // a command wrapper analyzes its query itself, in the session it runs in
+    org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(session,
+      if (parsed == planOpt) analyzed else wrap(finalPlan))
   }
 }
 
@@ -215,6 +240,68 @@ object Engine {
   private[graft] case object MetaCount extends MetaAgg
   private[graft] case object MetaMinTime extends MetaAgg
   private[graft] case object MetaMaxTime extends MetaAgg
+
+  /** Bytes of the files that the plan's file scans read, subqueries included. */
+  private[graft] def inputBytes(plan: LogicalPlan): Long =
+    plan.collectWithSubqueries {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation match {
+        case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation => h.location.sizeInBytes
+        case _ => 0L
+      }
+    }.sum
+
+  /**
+   * The small-request plan profile of one session: a `cloneSession()`
+   * of it that plans with one shuffle partition, no adaptive execution
+   * and no whole-stage code generation. [[session]] first copies over
+   * every conf and experimental rule set on the parent since the last
+   * call, so the clone differs from its parent only in [[Overrides]].
+   */
+  private[graft] final class SmallProfile private (parent: SparkSession) {
+    private val small = org.apache.spark.sql.graftbridge.ColumnBridge.cloneSession(parent)
+    @volatile private var copied = Map.empty[String, String]
+
+    def session(): SparkSession = {
+      val confs = parent.sessionState.conf.getAllConfs
+      if (confs != copied) synchronized {
+        if (confs != copied) {
+          // override keys are never unset or flipped, so a concurrent
+          // small request always plans with the three overrides
+          val target = confs ++ SmallProfile.Overrides
+          val conf = small.sessionState.conf
+          val current = conf.getAllConfs
+          (current.keySet -- target.keySet).foreach(conf.unsetConf)
+          target.foreach { case (k, v) => if (!current.get(k).contains(v)) conf.setConfString(k, v) }
+          copied = confs
+        }
+      }
+      val (from, to) = (parent.experimental, small.experimental)
+      if (to.extraOptimizations ne from.extraOptimizations) to.extraOptimizations = from.extraOptimizations
+      if (to.extraStrategies ne from.extraStrategies) to.extraStrategies = from.extraStrategies
+      small
+    }
+  }
+
+  private[graft] object SmallProfile {
+    import org.apache.spark.sql.internal.SQLConf
+    val Overrides: Map[String, String] = Map(
+      SQLConf.SHUFFLE_PARTITIONS.key -> "1",
+      SQLConf.ADAPTIVE_EXECUTION_ENABLED.key -> "false",
+      SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false")
+
+    // one clone per parent, weakly on both sides: the clone holds its
+    // parent's session state, so a strong value would pin the key
+    private val memo = new java.util.WeakHashMap[SparkSession,
+      java.lang.ref.WeakReference[SmallProfile]]()
+
+    def of(parent: SparkSession): SmallProfile = memo.synchronized {
+      Option(memo.get(parent)).flatMap(r => Option(r.get)).getOrElse {
+        val p = new SmallProfile(parent)
+        memo.put(parent, new java.lang.ref.WeakReference(p))
+        p
+      }
+    }
+  }
 
   /**
    * Matches EXACTLY `SELECT <aggs> FROM <single relation>` — no WHERE,

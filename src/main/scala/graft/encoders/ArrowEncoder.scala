@@ -58,7 +58,7 @@ object ArrowEncoder {
     val writer = new ArrowStreamWriter(root, null, out)
     writer.start()
     try {
-      val it = df.toLocalIterator()
+      val it = ResultEncoder.rows(df)
       val buf = new scala.collection.mutable.ArrayBuffer[Row](batchRows)
       while (it.hasNext) {
         buf += it.next()

@@ -5,6 +5,7 @@ import java.time.format.DateTimeFormatter
 import java.time.ZoneOffset
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /**
  * Result encoders reproducing the reference's observable contract
@@ -20,7 +21,10 @@ import org.apache.spark.sql.types._
  *
  * Streaming: rows are pulled via toLocalIterator — bounded driver
  * memory even for large results (an improvement over the reference's
- * fully-materialized `[]map[string]any`).
+ * fully-materialized `[]map[string]any`). A local relation (metadata
+ * answers, SHOW) already holds its rows in memory and is collected
+ * instead: `toLocalIterator` would run a Spark job to hand back the
+ * same rows.
  */
 object ResultEncoder {
   private val RFC3339NANO = DateTimeFormatter.ofPattern(
@@ -74,12 +78,21 @@ object ResultEncoder {
     }.mkString("{", ",", "}")
   }
 
+  /** The frame's rows: a local relation's straight from memory
+    * (collecting a `LocalTableScanExec` runs no Spark job), any other
+    * frame's streamed through `toLocalIterator`. */
+  private[encoders] def rows(df: DataFrame): Iterator[Row] =
+    df.queryExecution.executedPlan match {
+      case _: org.apache.spark.sql.execution.LocalTableScanExec => df.collect().iterator
+      case _ => df.toLocalIterator().asScala
+    }
+
   /** `{"results":[…]}` (reference JsonFormatter shape). */
   def writeJson(df: DataFrame, out: Writer): Unit = {
     val cols = orderedColumns(df)
     out.write("{\"results\":[")
     var first = true
-    val it = df.toLocalIterator()
+    val it = rows(df)
     while (it.hasNext) {
       if (!first) out.write(",")
       out.write(encodeRow(it.next(), cols, df))
@@ -91,7 +104,7 @@ object ResultEncoder {
   /** One JSON object per line (reference NDJsonFormatter). */
   def writeNdjson(df: DataFrame, out: Writer): Unit = {
     val cols = orderedColumns(df)
-    val it = df.toLocalIterator()
+    val it = rows(df)
     while (it.hasNext) {
       out.write(encodeRow(it.next(), cols, df))
       out.write("\n")

@@ -52,6 +52,14 @@ class QueryServer(engine: Engine, port: Int = 8080,
       }.toMap
 
   def start(): Unit = {
+    // TCP_NODELAY on accepted sockets: the server writes the headers and
+    // the body as two segments, and with Nagle's algorithm on the body
+    // waits for the client's delayed ACK (about 40 ms per response).
+    // sun.net.httpserver.ServerConfig reads the property once per JVM,
+    // when the first server is created, so it is set before that and
+    // left alone if the JVM already sets it.
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
     server = HttpServer.create(new InetSocketAddress(port), 0)
 
     server.createContext("/query", (ex: HttpExchange) => {

@@ -36,4 +36,10 @@ object ColumnBridge {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `cloneSession()` is `private[sql]`: a new session over the same
+    * SparkContext that starts with copies of this one's confs, function
+    * registry, temp views and experimental rules. */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 }

@@ -298,6 +298,26 @@ class CatalogEngineSpec extends AnyFunSuite with TempLakes {
     assert(df.collect().head.getLong(0) == 48L)
   }
 
+  test("engine: metadata and SHOW answers run no Spark job, encoding included") {
+    import graft.encoders.{ArrowEncoder, ResultEncoder}
+    def encoded(df: org.apache.spark.sql.DataFrame): (String, String, Seq[Byte]) = {
+      val arrow = new java.io.ByteArrayOutputStream()
+      ArrowEncoder.writeStream(df, arrow)
+      (ResultEncoder.toJsonString(df), ResultEncoder.toNdjsonString(df), arrow.toByteArray.toSeq)
+    }
+    val tables = catalog.tables("mydb").map(t => s"""{"table_name":"$t"}""")
+    Seq("SELECT count(*) FROM mydb.meas" -> """{"results":[{"count(1)":"72"}]}""",
+        "SHOW TABLES" -> tables.mkString("{\"results\":[", ",", "]}")).foreach {
+      case (sql, json) =>
+        val (out, jobs) = SparkJobCounter(spark)(encoded(engine.query(sql, "")))
+        assert(jobs == 0, s"$sql: $jobs Spark job(s)")
+        assert(out._1 == json)
+        // the same rows from a frame that is not a local relation, so
+        // streamed through toLocalIterator: every encoding's bytes agree
+        assert(out == encoded(engine.query(sql, "").coalesce(1)), sql)
+    }
+  }
+
   test("engine: unfiltered count(*) is answered from metadata, zero files read") {
     import spark.implicits._
     val dir = tempDir("metacount")

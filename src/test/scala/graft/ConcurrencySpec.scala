@@ -8,6 +8,7 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 import graft.server.QueryServer
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -22,7 +23,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * query's pruned file set returns a wrong count — exactly the failure
  * mode of session-global `createOrReplaceTempView`.
  */
-class ConcurrencySpec extends AnyFunSuite {
+class ConcurrencySpec extends AnyFunSuite with TempLakes {
   private lazy val spark = GraftTestSession.spark
 
   private val dayNs = 86400000000000L
@@ -32,8 +33,7 @@ class ConcurrencySpec extends AnyFunSuite {
 
   private lazy val root: String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "conclake").toFile
+    val dir = tempDir("conclake")
     (0 until nDays).foreach { d =>
       val sub = new File(dir, f"mydb/events/date=2023-01-${d + 1}%02d")
       sub.mkdirs()
@@ -140,9 +140,77 @@ class ConcurrencySpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  /** A table whose one query reads more than one file's open cost: 7
+    * groups of random doubles, which parquet cannot compress. */
+  private val bigRows = 400000L
+  private lazy val bigRoot: String = {
+    val dir = tempDir("biglake")
+    spark.range(bigRows).select(
+      (col("id") * 1000L).as("time"), (col("id") % 7).as("g"),
+      rand(1).as("a"), rand(2).as("b"))
+      .coalesce(1).write.parquet(new File(dir, "mydb/big").getAbsolutePath)
+    dir.getAbsolutePath
+  }
+
+  private def isAdaptive(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.executedPlan
+      .isInstanceOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec]
+
+  test("a small and a large request at once each keep their own plan profile") {
+    val small = new Engine(spark, new Catalog(root))
+    val large = new Engine(spark, new Catalog(bigRoot))
+    val bigSql = "SELECT g, count(*) AS n FROM mydb.big GROUP BY g"
+    val bigDf = large.query(bigSql, "")
+    assert(Engine.inputBytes(bigDf.queryExecution.analyzed) >
+      spark.sessionState.conf.filesOpenCostInBytes)
+    val pool = Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val bigRun = Future((0 until 4).map { _ =>
+        val df = large.query(bigSql, "")
+        (df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, isAdaptive(df))
+      })
+      val smallRun = Future((0 until 12).map { i =>
+        val df = small.query(daySql(i % nDays), "")
+        (i % nDays, df.collect().head.getLong(0), isAdaptive(df))
+      })
+      val want = (0L until 7L).map(g => g -> (bigRows / 7 + (if (g < bigRows % 7) 1 else 0))).toMap
+      Await.result(bigRun, 5.minutes).foreach { case (counts, adaptive) =>
+        assert(counts == want)
+        assert(adaptive, "a large request must plan with adaptive execution")
+      }
+      Await.result(smallRun, 5.minutes).foreach { case (d, n, adaptive) =>
+        assert(n == rowsInDay(d))
+        assert(!adaptive, "a small request must plan without adaptive execution")
+      }
+    } finally pool.shutdown()
+  }
+
+  test("a conf set on the engine's session after the engine exists reaches small requests") {
+    val engine = new Engine(spark, new Catalog(root))
+    val (start, end) = (day0 + dayNs, day0 + 2 * dayNs - 1)
+    def window(t: String) = s"$t >= $start AND $t <= $end"
+    val joinSql = s"SELECT count(*) AS n FROM mydb.events a JOIN mydb.events b " +
+      s"ON a.k = b.k WHERE ${window("a.time")} AND ${window("b.time")}"
+    def joinPlan() = {
+      val df = engine.query(joinSql, "")
+      assert(df.sparkSession ne spark) // the small profile
+      assert(df.collect().head.getLong(0) == rowsInDay(1))
+      df.queryExecution.executedPlan.toString
+    }
+    assert(joinPlan().contains("BroadcastHashJoin")) // the clone exists from here on
+    GraftTestSession.withConf(
+      "spark.sql.ansi.enabled" -> "false", "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      assert(engine.query(s"SELECT sum(v) / 0 AS x FROM mydb.events WHERE ${window("time")}", "")
+        .collect().head.isNullAt(0))
+      val plan = joinPlan()
+      assert(plan.contains("SortMergeJoin") && !plan.contains("BroadcastHashJoin"), plan)
+    }
+    assert(joinPlan().contains("BroadcastHashJoin")) // and an unset one is unset there
+  }
+
   test("Tables.load: an in-place regeneration is seen by the next load") {
-    val dir = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "tabcache").toFile
+    val dir = tempDir("tabcache")
     import spark.implicits._
     def writeTable(rows: Seq[(Long, String)]): Unit = {
       val tmp = new File(dir, "stage")

@@ -16,4 +16,16 @@ object GraftTestSession {
     Tables.configure(s)
     s
   }
+
+  /** Runs `body` with session confs set on the shared session, then puts
+    * back each key's earlier setting (unset if it had none). */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val before = kvs.map { case (k, _) => k -> spark.sessionState.conf.getAllConfs.get(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

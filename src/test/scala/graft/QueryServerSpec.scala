@@ -3,18 +3,16 @@ package graft
 import java.io.File
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.nio.file.Files
 import graft.server.QueryServer
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end HTTP protocol surface (reference server.go contract). */
-class QueryServerSpec extends AnyFunSuite {
+class QueryServerSpec extends AnyFunSuite with TempLakes {
   private lazy val spark = GraftTestSession.spark
 
   private lazy val (server, port) = {
     import spark.implicits._
-    val dir = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "srvlake").toFile
+    val dir = tempDir("srvlake")
     val d = new File(dir, "mydb/weather"); d.mkdirs()
     Seq((1672531200000000000L, "sea", 11.5), (1672617600000000000L, "pdx", 7.25))
       .toDF("time", "location", "temperature")
@@ -36,6 +34,25 @@ class QueryServerSpec extends AnyFunSuite {
       URI.create(s"http://localhost:$port/health")).GET().build(),
       HttpResponse.BodyHandlers.ofString())
     assert(r.statusCode() == 200 && r.body().contains("\"status\":\"ok\""))
+  }
+
+  test("a response is not held back by Nagle's algorithm") {
+    // HttpURLConnection acknowledges the headers segment late (delayed
+    // ACK); without TCP_NODELAY the body segment waits for that ACK,
+    // about 40 ms per round trip
+    def roundTripMs(): Double = {
+      val t0 = System.nanoTime()
+      val c = URI.create(s"http://localhost:$port/health").toURL
+        .openConnection().asInstanceOf[java.net.HttpURLConnection]
+      assert(c.getResponseCode == 200)
+      val in = c.getInputStream
+      try in.readAllBytes() finally in.close()
+      (System.nanoTime() - t0) / 1e6
+    }
+    (0 until 5).foreach(_ => roundTripMs()) // connection and JIT warm-up
+    val ms = (0 until 20).map(_ => roundTripMs()).sorted
+    val median = (ms(9) + ms(10)) / 2
+    assert(median < 20.0, s"median /health round trip $median ms: ${ms.mkString(", ")}")
   }
 
   test("query with db.table + time filter; int64 rendered as string") {
@@ -123,9 +140,7 @@ class QueryServerSpec extends AnyFunSuite {
   }
 
   test("DISABLE_UI serves 404 at / while /query stays live (README.md:50)") {
-    val engine = new Engine(spark, new Catalog(
-      Files.createTempDirectory(new File("target").toPath.toAbsolutePath,
-        "nouilake").toFile.getAbsolutePath))
+    val engine = new Engine(spark, new Catalog(tempDir("nouilake").getAbsolutePath))
     val s = new QueryServer(engine, 0, disableUi = true)
     s.start()
     try {
@@ -142,9 +157,7 @@ class QueryServerSpec extends AnyFunSuite {
   }
 
   test("stop() shuts down the request executor") {
-    val engine = new Engine(spark, new Catalog(
-      Files.createTempDirectory(new File("target").toPath.toAbsolutePath,
-        "stoplake").toFile.getAbsolutePath))
+    val engine = new Engine(spark, new Catalog(tempDir("stoplake").getAbsolutePath))
     val s = new QueryServer(engine, 0)
     s.start()
     val r = client.send(HttpRequest.newBuilder(
