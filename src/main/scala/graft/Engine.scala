@@ -23,17 +23,30 @@ import graft.TimeRangeExtract.TimeRange
  * server's concurrent dispatch.
  *
  * Two plan profiles. The spliced plan is analyzed in the engine's
- * session; then, if the files its scans read total at most the
- * session's `spark.sql.files.openCostInBytes` (Spark's own estimate of
- * what opening one file costs, 4 MB by default), it runs in the
- * session's small-request clone ([[Engine.SmallProfile]]): one shuffle
- * partition, no adaptive execution, no whole-stage code generation.
- * Under that size a request's cost is Spark's fixed per-job, per-stage
- * and per-compile cost, not its data: adaptive execution submits every
- * query stage as its own job, a sort over several shuffle partitions
- * adds a range-sampling job, and each new time window's literals cost
- * a Janino compile of whole-stage code. A larger request plans in the
- * engine's session, with its partitions and adaptive execution.
+ * session. A query (not a command: the temp view or cached table a
+ * command makes belongs in the engine's session) whose leaves read at
+ * most the session's `spark.sql.files.openCostInBytes` (Spark's own
+ * estimate of what opening one file costs, 4 MB by default; see
+ * [[Engine.inputBytes]]) runs in the engine's small-request clone
+ * ([[Engine.SmallProfile]]): one shuffle partition, no adaptive
+ * execution, no whole-stage code generation. Under that size a
+ * request's cost is Spark's fixed per-job, per-stage and per-compile
+ * cost, not its data: adaptive execution submits every query stage as
+ * its own job, a sort over several shuffle partitions adds a
+ * range-sampling job, and each new time window's literals cost a
+ * Janino compile of whole-stage code. Above it the cost per row wins,
+ * and a row costs more without whole-stage code, so a larger request
+ * plans in the engine's session. `ProfileProbe` (test sources) timed
+ * both profiles over one file of 0.25 to 64 MB on a 4-core host. The
+ * crossover depends on the shape and on whether the window's literals
+ * were compiled before: a group-by breakdown crossed at 2-3 MB for a
+ * repeated window and at 6-8 MB for a new one; a raw-row export was
+ * slower in the clone for a repeated window at every size (by 7-40 ms
+ * up to 6 MB) and crossed at 2-4 MB for a new one. The mean of the four crossed at
+ * 3.5-4 MB, so one file's open cost sits at the crossover. At 64 MB the
+ * engine's session was 2.2x (breakdown) and 1.3x (export) faster.
+ * Tuning `openCostInBytes` moves this line as well as the packing of
+ * files into scan splits.
  *
  * Differences from the reference, by design (documented quirk fixes):
  *  - an empty pruned file set yields an empty DataFrame with the
@@ -46,9 +59,8 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
 
   graft.functions.Compat.register(spark)
   Tables.configure(spark)
-  // cloned on the first small request, so after the registrations above;
-  // held here because the per-session memo holds it only weakly
-  private lazy val smallProfile = Engine.SmallProfile.of(spark)
+  // cloned on the first small request, so after the registrations above
+  private lazy val smallProfile = new Engine.SmallProfile(spark)
 
   import TimeRangeExtract._
 
@@ -78,9 +90,10 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
       val all = catalog.prunedPaths(db, table, None)
       if (all.isEmpty) spark.emptyDataFrame
       else { // empty result with the table's real schema (quirk §2.3-6 fix),
-        // from memoized footers: no scan or listing of the whole table
+        // from memoized footers: no scan or listing of the whole table; a
+        // local relation, so its size (none) is known to the profile choice
         val schema = Tables.evolvingSchema(spark, all, Seq("ts", "time", timeCol).distinct)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
       }
     }
   }
@@ -220,10 +233,15 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
     // analyzed here, so temp views and functions registered on this
     // session after its small-profile clone was made still resolve
     val analyzed = spark.sessionState.executePlan(finalPlan).analyzed
-    val session =
-      if (Engine.inputBytes(analyzed) <= spark.sessionState.conf.filesOpenCostInBytes)
+    val session = analyzed match {
+      // a command's effects (a temp view, a cached table) belong to the
+      // engine's session; after analysis its query is no longer a child,
+      // so its input would count as nothing
+      case _: org.apache.spark.sql.catalyst.plans.logical.Command => spark
+      case q if Engine.inputBytes(q) <= spark.sessionState.conf.filesOpenCostInBytes =>
         smallProfile.session()
-      else spark
+      case _ => spark
+    }
     // a command wrapper analyzes its query itself, in the session it runs in
     org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(session,
       if (parsed == planOpt) analyzed else wrap(finalPlan))
@@ -241,23 +259,32 @@ object Engine {
   private[graft] case object MetaMinTime extends MetaAgg
   private[graft] case object MetaMaxTime extends MetaAgg
 
-  /** Bytes of the files that the plan's file scans read, subqueries included. */
-  private[graft] def inputBytes(plan: LogicalPlan): Long =
+  /**
+   * What the plan's leaves read, subqueries included: the listed bytes
+   * of a file scan's files, and Spark's own size estimate of any other
+   * leaf, which is `spark.sql.defaultSizeInBytes` (Long.MaxValue unless
+   * set) where the size is unknown, as for an RDD or a catalog table
+   * without statistics. A BigInt, so unknown sizes add up without
+   * overflow. A CTE reference counts nothing: its definition is counted.
+   */
+  private[graft] def inputBytes(plan: LogicalPlan): BigInt =
     plan.collectWithSubqueries {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation match {
-        case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation => h.location.sizeInBytes
-        case _ => 0L
-      }
+      case _: org.apache.spark.sql.catalyst.plans.logical.CTERelationRef => BigInt(0)
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation
+          if l.relation.isInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation] =>
+        BigInt(l.relation.asInstanceOf[
+          org.apache.spark.sql.execution.datasources.HadoopFsRelation].location.sizeInBytes)
+      case l: org.apache.spark.sql.catalyst.plans.logical.LeafNode => l.stats.sizeInBytes
     }.sum
 
   /**
-   * The small-request plan profile of one session: a `cloneSession()`
-   * of it that plans with one shuffle partition, no adaptive execution
+   * The small-request plan profile of an engine: a `cloneSession()` of
+   * the engine's session that plans with one shuffle partition, no adaptive execution
    * and no whole-stage code generation. [[session]] first copies over
    * every conf and experimental rule set on the parent since the last
    * call, so the clone differs from its parent only in [[Overrides]].
    */
-  private[graft] final class SmallProfile private (parent: SparkSession) {
+  private[graft] final class SmallProfile(parent: SparkSession) {
     private val small = org.apache.spark.sql.graftbridge.ColumnBridge.cloneSession(parent)
     @volatile private var copied = Map.empty[String, String]
 
@@ -288,19 +315,6 @@ object Engine {
       SQLConf.SHUFFLE_PARTITIONS.key -> "1",
       SQLConf.ADAPTIVE_EXECUTION_ENABLED.key -> "false",
       SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false")
-
-    // one clone per parent, weakly on both sides: the clone holds its
-    // parent's session state, so a strong value would pin the key
-    private val memo = new java.util.WeakHashMap[SparkSession,
-      java.lang.ref.WeakReference[SmallProfile]]()
-
-    def of(parent: SparkSession): SmallProfile = memo.synchronized {
-      Option(memo.get(parent)).flatMap(r => Option(r.get)).getOrElse {
-        val p = new SmallProfile(parent)
-        memo.put(parent, new java.lang.ref.WeakReference(p))
-        p
-      }
-    }
   }
 
   /**

@@ -420,6 +420,37 @@ class CatalogEngineSpec extends AnyFunSuite with TempLakes {
     assert(!text.toLowerCase.contains("unresolved"), text)
   }
 
+  test("engine: a command over a lake table runs in the engine's session") {
+    // its query reads three small files, but the view it makes must be
+    // registered where later queries look for it, not in the small clone
+    val df = engine.query("CREATE OR REPLACE TEMP VIEW meas_day2 AS SELECT location " +
+      "FROM mydb.meas WHERE time >= '2023-01-02T00:00:00Z' AND time < '2023-01-03T00:00:00Z'", "")
+    try {
+      assert(df.sparkSession eq spark)
+      assert(spark.catalog.tableExists("meas_day2"))
+    } finally spark.catalog.dropTempView("meas_day2")
+  }
+
+  test("engine: an input of unknown size plans in the engine's session") {
+    import org.apache.spark.sql.types._
+    val rows = spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row("loc2")), 1)
+    spark.createDataFrame(rows, StructType(Seq(StructField("location", StringType))))
+      .createOrReplaceTempView("rdd_locs")
+    try {
+      val lakeOnly = engine.query("SELECT count(*) FROM mydb.meas WHERE temperature > 0", "")
+      assert(lakeOnly.sparkSession ne spark) // three small files: the small profile
+      val joined = engine.query(
+        "SELECT count(*) FROM mydb.meas m JOIN rdd_locs r ON m.location = r.location", "")
+      assert(joined.sparkSession eq spark)
+      assert(joined.collect().head.getLong(0) == 24L)
+      // two unknown sizes add up past Long.MaxValue instead of wrapping
+      val twice = engine.query("SELECT count(*) FROM mydb.meas m " +
+        "JOIN rdd_locs a ON m.location = a.location JOIN rdd_locs b ON a.location = b.location", "")
+      assert(Engine.inputBytes(twice.queryExecution.analyzed) > BigInt(Long.MaxValue))
+      assert(twice.sparkSession eq spark)
+    } finally spark.catalog.dropTempView("rdd_locs")
+  }
+
   test("engine: CTE name shadows a same-named lake table") {
     val df = engine.query(
       "WITH meas AS (SELECT 42 AS v) SELECT v FROM meas", "mydb")

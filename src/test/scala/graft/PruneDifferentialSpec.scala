@@ -208,7 +208,8 @@ class PruneDifferentialSpec extends AnyFunSuite with TempLakes {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         l.relation.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
           .location.inputFiles.length < 3
-      case _: org.apache.spark.sql.execution.LogicalRDD => true // no file overlaps
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        l.data.isEmpty // no file overlaps
       case _ => false
     }
   }
