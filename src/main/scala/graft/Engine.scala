@@ -42,9 +42,10 @@ import graft.TimeRangeExtract.TimeRange
  * were compiled before: a group-by breakdown crossed at 2-3 MB for a
  * repeated window and at 6-8 MB for a new one; a raw-row export was
  * slower in the clone for a repeated window at every size (by 7-40 ms
- * up to 6 MB) and crossed at 2-4 MB for a new one. The mean of the four crossed at
- * 3.5-4 MB, so one file's open cost sits at the crossover. At 64 MB the
- * engine's session was 2.2x (breakdown) and 1.3x (export) faster.
+ * up to 6 MB), and for a new window about even up to 4 MB and slower
+ * above. The mean of the four crossed between 3.5 and 4.2 MB, so one
+ * file's open cost sits at the crossover. At 64 MB the engine's
+ * session was 2.2x (breakdown) and 1.3x (export) faster.
  * Tuning `openCostInBytes` moves this line as well as the packing of
  * files into scan splits.
  *
