@@ -81,9 +81,10 @@ object TimeRangeExtract {
   }
 
   /** The one matcher: `e` as a comparison of `timeCol` against another
-    * operand — `time op v`, `v op time`, `time = v` or
+    * operand — `time op v`, `v op time`, `time = v`,
     * `time BETWEEN v AND w` (the parser leaves BETWEEN as an unresolved
-    * function call). Whether a bound evaluates is the reader's concern. */
+    * function call) or `NOT` around a one-sided one. Whether a bound
+    * evaluates is the reader's concern. */
   def timeCmp(e: Expression, timeCol: String): Option[TimeCmp] = {
     def isTime(x: Expression): Option[UnresolvedAttribute] = x match {
       case a: UnresolvedAttribute if a.nameParts.last.equalsIgnoreCase(timeCol) => Some(a)
@@ -103,6 +104,13 @@ object TimeRangeExtract {
       case f: UnresolvedFunction
           if f.nameParts.last.equalsIgnoreCase("between") && f.arguments.size == 3 =>
         cmp(f.arguments.head, incl(f.arguments(1)), incl(f.arguments(2)))
+      // a negated one-sided bound is the flipped bound: NOT (time >= v)
+      // is time < v (both reject a NULL time); a negated equality or
+      // BETWEEN is two ranges and stays unmatched
+      case Not(inner) => timeCmp(inner, timeCol).collect {
+        case c @ TimeCmp(_, Some(b), None, _) => c.copy(lo = None, hi = Some(b.copy(strict = !b.strict)))
+        case c @ TimeCmp(_, None, Some(b), _) => c.copy(lo = Some(b.copy(strict = !b.strict)), hi = None)
+      }
       case _ => None
     }
   }

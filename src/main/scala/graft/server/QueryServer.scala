@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.Engine
-import graft.encoders.ResultEncoder
+import graft.encoders.{ArrowEncoder, ResultEncoder}
 
 /**
  * HTTP query endpoint — the reference's server surface
@@ -13,10 +13,16 @@ import graft.encoders.ResultEncoder
  *
  *  - `POST /query` body `{"query": "...", "db": "..."}`;
  *    `?db=` overrides body db, body db overrides default "mydb"
- *    (server.go:183-189); `?format=json|ndjson` (server.go:159-168);
+ *    (server.go:183-189); `?format=json|ndjson` (server.go:159-168),
+ *    or `arrow` for an Arrow IPC stream;
  *  - errors as `{"error": "..."}`: 400 for SQL that does not parse or
  *    resolve and for a missing query or non-JSON body; 500, with the
  *    exception's class as `"exception"`, for any other failure;
+ *  - every format streams through one [[QueryServer.ResponseBody]]: a
+ *    result that ends within its first 64 KB is sent with a
+ *    Content-Length, and an error before that point is still a clean
+ *    `{"error"}`; a larger result commits a chunked 200 and streams,
+ *    and an error after that aborts the connection;
  *  - CORS headers on all responses;
  *  - `GET /health` → `{"status":"ok","timestamp":…}`;
  *  - embedded UI at `/` unless `disableUi` (reference `DISABLE_UI`,
@@ -64,6 +70,7 @@ class QueryServer(engine: Engine, port: Int = 8080,
 
     server.createContext("/query", (ex: HttpExchange) => {
       cors(ex)
+      var aborted = false
       try {
         if (ex.getRequestMethod == "OPTIONS") respond(ex, 204, "")
         else if (ex.getRequestMethod != "POST")
@@ -91,31 +98,36 @@ class QueryServer(engine: Engine, port: Int = 8080,
                 org.apache.spark.sql.execution.FormattedMode)
               respond(ex, 200, mapper.writeValueAsString(
                 mapper.createObjectNode().put("plan", plan)))
-            } else params.getOrElse("format", "json") match {
-              case "ndjson" =>
-                respond(ex, 200, ResultEncoder.toNdjsonString(df), "application/x-ndjson")
-              case "arrow" => // Arrow IPC stream (FlightSQL data-plane bytes)
-                // Force PLANNING before committing the 200 (analysis/
-                // planning errors still surface as a clean {"error"}),
-                // then chunked-stream the batches — the driver never
-                // holds more than one record batch. Errors during
-                // EXECUTION (after headers) can only be signalled by
-                // aborting the connection — the client sees a truncated
-                // IPC stream — so the inner catch closes the exchange
-                // instead of letting the outer handler crash on a
-                // second sendResponseHeaders.
-                df.queryExecution.executedPlan // force planning errors here
-                ex.getResponseHeaders.add("Content-Type", "application/vnd.apache.arrow.stream")
-                ex.sendResponseHeaders(200, 0L) // 0 ⇒ chunked
-                val os = ex.getResponseBody
-                try { graft.encoders.ArrowEncoder.writeStream(df, os); os.close() }
-                catch { case _: Throwable => ex.close() } // mid-stream: abort
-              case _ =>
-                respond(ex, 200, ResultEncoder.toJsonString(df))
+            } else {
+              val format = params.getOrElse("format", "json")
+              df.queryExecution.executedPlan // planning errors answer a clean {"error"}
+              val body = new QueryServer.ResponseBody(ex, format match {
+                case "ndjson" => "application/x-ndjson"
+                case "arrow" => "application/vnd.apache.arrow.stream" // FlightSQL data-plane bytes
+                case _ => "application/json"
+              })
+              try {
+                format match {
+                  case "ndjson" => ResultEncoder.writeNdjson(df, body)
+                  case "arrow" => ArrowEncoder.writeStream(df, body)
+                  case _ => ResultEncoder.writeJson(df, body)
+                }
+                body.finish()
+              } catch {
+                // past the commit point the 200 is on the wire: only
+                // an abort tells the client the body is incomplete
+                case e: Throwable if body.committed => throw new QueryServer.Aborted(e)
+              }
             }
           }
         }
       } catch {
+        case a: QueryServer.Aborted =>
+          // thrown out of the handler, the server closes the connection
+          // without the chunked body's last chunk; closing the exchange
+          // would send it and make the truncated body look complete
+          aborted = true
+          throw a
         case e: Throwable =>
           // the client's fault — SQL that does not parse or resolve, a
           // body that is not JSON — is a 400; any other failure is ours,
@@ -126,7 +138,7 @@ class QueryServer(engine: Engine, port: Int = 8080,
             .put("error", Option(e.getMessage).getOrElse(e.toString))
           if (!clientError) body.put("exception", e.getClass.getName)
           respond(ex, if (clientError) 400 else 500, mapper.writeValueAsString(body))
-      } finally ex.close()
+      } finally if (!aborted) ex.close()
     })
 
     // minimal embedded browser UI (reference O20 — served inline
@@ -164,6 +176,54 @@ class QueryServer(engine: Engine, port: Int = 8080,
 
 /** CLI one-shot mode (reference main.go:22-57): --query … --db … */
 object QueryServer {
+  /** Bytes a response body holds before it commits its status. */
+  private val CommitBytes = 64 * 1024
+
+  /** A result failed after its 200 was sent. */
+  private final class Aborted(cause: Throwable)
+    extends java.io.IOException("response aborted mid-stream", cause)
+
+  /**
+   * A 200 response body for an encoder to write into. It holds the
+   * first [[CommitBytes]]: a result that ends inside them goes out with
+   * its Content-Length on [[finish]], and until then nothing is sent, so
+   * a failure can still be answered with an error status. The first
+   * write past them commits a chunked 200 and streams from then on.
+   */
+  private final class ResponseBody(ex: HttpExchange, ctype: String) extends java.io.OutputStream {
+    private val head = new Array[Byte](CommitBytes)
+    private var held = 0
+    private var out: java.io.OutputStream = _
+
+    def committed: Boolean = out != null
+
+    private def send(length: Long): Unit = {
+      ex.getResponseHeaders.add("Content-Type", ctype)
+      ex.sendResponseHeaders(200, length)
+      out = ex.getResponseBody
+      out.write(head, 0, held)
+    }
+
+    override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
+
+    override def write(b: Array[Byte], off: Int, len: Int): Unit =
+      if (out == null && held + len <= head.length) {
+        System.arraycopy(b, off, head, held, len)
+        held += len
+      } else {
+        if (out == null) send(0L) // 0 ⇒ chunked
+        out.write(b, off, len)
+        out.flush()
+      }
+
+    /** The result is complete: send what is held with its length (-1 ⇒
+      * an empty body), or end the chunked stream. */
+    def finish(): Unit = {
+      if (out == null) send(if (held == 0) -1L else held.toLong)
+      out.close()
+    }
+  }
+
   private[server] val UI_HTML: String =
     """<!doctype html><html><head><meta charset="utf-8"><title>graft query</title>
       |<style>body{font-family:monospace;margin:2rem;max-width:70rem}
@@ -228,9 +288,9 @@ object QueryServer {
       .getOrElse("/tmp/graft-lake")
     val engine = new Engine(spark, new graft.Catalog(root))
     argMap.get("query") match {
-      case Some(q) => // one-shot CLI mode
-        println(ResultEncoder.toJsonString(
-          engine.query(q, argMap.getOrElse("db", ""))))
+      case Some(q) => // one-shot CLI mode, streamed like a response
+        ResultEncoder.writeJson(engine.query(q, argMap.getOrElse("db", "")), System.out)
+        System.out.println()
         spark.stop()
       case None => // server mode
         // port precedence: --port arg > PORT env > 8080; DISABLE_UI

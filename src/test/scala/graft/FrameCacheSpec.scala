@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * contract (same rows, true reuse, key isolation) — the guard
   * against a stale- or cross-key-serving regression in the cache that
   * qA3/qA4/qAG/qAK/qAZ/qAP/qAU now ride. */
-class FrameCacheSpec extends AnyFunSuite {
+class FrameCacheSpec extends AnyFunSuite with TempLakes {
   private lazy val spark = GraftTestSession.spark
   import spark.implicits._
 
@@ -62,29 +62,22 @@ class FrameCacheSpec extends AnyFunSuite {
     // the medium-severity round-10 advice: dir-only keys served stale
     // signatures after a lake was rewritten in the same JVM. cachedOn
     // folds the input frame's (size, mtime) fingerprint into the key.
-    val lake = java.nio.file.Files.createTempDirectory("fcspec-lake").toFile
-    try {
-      val p = new java.io.File(lake, "t.parquet").getAbsolutePath
-      Seq((1L, "first")).toDF("id", "v").write.mode("overwrite").parquet(p)
-      val in1 = spark.read.parquet(p)
-      val a = FrameCache.cachedOn(spark, lake + "#art", in1)(
-        in1.select(col("v")))
-      assert(a.collect().map(_.getString(0)).toSeq == Seq("first"))
-      // regenerate the lake IN PLACE (same path, new content/mtimes);
-      // ensure the mtime actually moves even on coarse clocks
-      Thread.sleep(1100)
-      Seq((1L, "second")).toDF("id", "v").write.mode("overwrite").parquet(p)
-      val in2 = spark.read.parquet(p)
-      val b = FrameCache.cachedOn(spark, lake + "#art", in2)(
-        in2.select(col("v")))
-      assert(b.collect().map(_.getString(0)).toSeq == Seq("second"),
-        "regenerated lake was served the stale artifact")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(lake)
-    }
+    val lake = tempDir("fcspec-lake")
+    val p = new java.io.File(lake, "t.parquet").getAbsolutePath
+    Seq((1L, "first")).toDF("id", "v").write.mode("overwrite").parquet(p)
+    val in1 = spark.read.parquet(p)
+    val a = FrameCache.cachedOn(spark, lake + "#art", in1)(
+      in1.select(col("v")))
+    assert(a.collect().map(_.getString(0)).toSeq == Seq("first"))
+    // regenerate the lake IN PLACE (same path, new content/mtimes);
+    // ensure the mtime actually moves even on coarse clocks
+    Thread.sleep(1100)
+    Seq((1L, "second")).toDF("id", "v").write.mode("overwrite").parquet(p)
+    val in2 = spark.read.parquet(p)
+    val b = FrameCache.cachedOn(spark, lake + "#art", in2)(
+      in2.select(col("v")))
+    assert(b.collect().map(_.getString(0)).toSeq == Seq("second"),
+      "regenerated lake was served the stale artifact")
   }
 
   test("cached frame is checkpointed: no lineage back to the source plan") {

@@ -110,7 +110,7 @@ object ProfileProbe {
           val t = System.nanoTime()
           val df = org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(
             session, engine.query(sql(fresh), "mydb").queryExecution.analyzed)
-          graft.encoders.ResultEncoder.writeJson(df, java.io.Writer.nullWriter())
+          graft.encoders.ResultEncoder.writeJson(df, java.io.OutputStream.nullOutputStream())
           (System.nanoTime() - t) / 1e6
         }
         // the first size of a shape also warms the JIT up, as a gateway's warm-up does

@@ -183,6 +183,20 @@ class PruneDifferentialSpec extends AnyFunSuite with TempLakes {
     * `TIMESTAMP '…'` literals among the forms. */
   private val shadowMixedCases = samples(caseGen(Gen.oneOf(0, 10, 11), forms = 4), 36)
 
+  /** Negated bounds: `NOT` around a comparison or BETWEEN, alone or
+    * AND-ed with another predicate, under every wrapper, with all four
+    * literal forms. */
+  private val negatedCases = {
+    val negated = predGen(0, forms = 4).map(Not)
+    val pred = Gen.frequency(3 -> negated,
+      1 -> Gen.zip(negated, predGen(0, forms = 4)).map { case (n, p) => Bool("AND", n, p) })
+    samples(for {
+      c <- caseGen(Gen.choose(0, 11), forms = 4)
+      p1 <- pred
+      p2 <- pred
+    } yield c.copy(p1 = p1, p2 = p2), 48)
+  }
+
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(42L + i)))
 
@@ -233,6 +247,16 @@ class PruneDifferentialSpec extends AnyFunSuite with TempLakes {
     assert(pruned.exists(_.sql("mydb.meas", gateway = true).contains("TIMESTAMP '")))
   }
 
+  private def checkNegatedCases(parentProfile: Boolean): Unit = {
+    val pruned = prunedCases(negatedCases, parentProfile)
+    // a lone negated one-sided bound prunes by its flipped bound: in a
+    // wrapper that reads one relation through p1 alone
+    assert(pruned.exists(c => c.wrapper <= 3 && (c.p1 match {
+      case Not(Cmp(op, _, _)) => op != "="
+      case _ => false
+    })), s"no lone negated bound pruned among ${pruned.size} pruned cases")
+  }
+
   test("generated time predicates under generated wrappers match an unpruned scan") {
     checkWrapperCases(parentProfile = false)
   }
@@ -241,10 +265,15 @@ class PruneDifferentialSpec extends AnyFunSuite with TempLakes {
     checkShadowMixedCases(parentProfile = false)
   }
 
+  test("generated negated time bounds prune and match an unpruned scan") {
+    checkNegatedCases(parentProfile = false)
+  }
+
   test("the generated cases match through the engine session's plan profile too") {
     GraftTestSession.withConf("spark.sql.files.openCostInBytes" -> "1") {
       checkWrapperCases(parentProfile = true)
       checkShadowMixedCases(parentProfile = true)
+      checkNegatedCases(parentProfile = true)
     }
   }
 

@@ -187,4 +187,123 @@ class QueryServerSpec extends AnyFunSuite with TempLakes {
     assert(failed.body().contains("boom") &&
       failed.body().contains("\"exception\":\"org.apache.spark."), failed.body())
   }
+
+  test("a result under 64 KB goes out with its Content-Length in every format") {
+    Seq("json", "ndjson", "arrow").foreach { f =>
+      val r = client.send(HttpRequest.newBuilder(URI.create(s"http://localhost:$port/query?format=$f"))
+        .POST(HttpRequest.BodyPublishers.ofString(
+          """{"query":"SELECT time, location FROM mydb.weather ORDER BY time"}""")).build(),
+        HttpResponse.BodyHandlers.ofByteArray())
+      assert(r.statusCode() == 200, f)
+      assert(r.headers().firstValue("content-length").orElse("") == r.body().length.toString, f)
+      assert(r.headers().firstValue("transfer-encoding").isEmpty, f)
+    }
+  }
+
+  /** A server over its own engine, made after the row-gating UDFs are
+    * registered so that the engine's small-request session has them. */
+  private def withGateServer(body: Int => Unit): Unit = {
+    spark.udf.register("gate_at", (id: Long, at: Long) => {
+      if (id == at) QueryServerSpec.gate.await(120, java.util.concurrent.TimeUnit.SECONDS)
+      id
+    })
+    spark.udf.register("fail_at", (id: Long, at: Long) => {
+      if (id == at) throw new IllegalStateException(s"failed at row $id")
+      id
+    })
+    val s = new QueryServer(new Engine(spark, new Catalog(tempDir("gatelake").getAbsolutePath)), 0)
+    s.start()
+    try body(s.boundPort) finally s.stop()
+  }
+
+  /** 40,000 rows in 4 partitions of 10,000; `udf` applied at row 30,000,
+    * the first row of the last partition. Any format's first three
+    * partitions are more than 64 KB. */
+  private def gatedQuery(udf: String): String =
+    s"""{"query":"SELECT id, $udf(id, 30000) AS g FROM range(0, 40000, 1, 4)"}"""
+
+  /** POST over a raw socket, so that the test sees the bytes as they
+    * arrive and whether the chunked body ends. */
+  private def rawPost(port: Int, path: String, body: String): java.net.Socket = {
+    val sock = new java.net.Socket("localhost", port)
+    sock.setSoTimeout(120000)
+    val bytes = body.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val out = sock.getOutputStream
+    out.write((s"POST $path HTTP/1.1\r\nHost: localhost\r\nContent-Type: application/json\r\n" +
+      s"Content-Length: ${bytes.length}\r\nConnection: close\r\n\r\n").getBytes("US-ASCII"))
+    out.write(bytes)
+    out.flush()
+    sock
+  }
+
+  private def ascii(b: Array[Byte]): String = new String(b, java.nio.charset.StandardCharsets.ISO_8859_1)
+
+  /** Everything the server sends until it closes the connection. */
+  private def readToClose(in: java.io.InputStream, got: java.io.ByteArrayOutputStream): String = {
+    val buf = new Array[Byte](8192)
+    try {
+      var k = in.read(buf)
+      while (k >= 0) { got.write(buf, 0, k); k = in.read(buf) }
+    } catch { case _: java.net.SocketException => () } // a reset ends it too
+    ascii(got.toByteArray)
+  }
+
+  test("a large result streams: 200 and more than 64 KB arrive before the last partition runs") {
+    withGateServer { p =>
+      Seq("json", "ndjson", "arrow").foreach { f =>
+        QueryServerSpec.gate = new java.util.concurrent.CountDownLatch(1)
+        val sock = rawPost(p, s"/query?format=$f", gatedQuery("gate_at"))
+        try {
+          val in = sock.getInputStream
+          val got = new java.io.ByteArrayOutputStream()
+          val buf = new Array[Byte](8192)
+          while (got.size() < 96 * 1024) {
+            val k = in.read(buf)
+            assert(k > 0, s"$f: the stream ended after ${got.size()} bytes")
+            got.write(buf, 0, k)
+          }
+          // the last partition is still waiting on the gate
+          assert(QueryServerSpec.gate.getCount == 1)
+          assert(ascii(got.toByteArray).startsWith("HTTP/1.1 200"), f)
+          assert(ascii(got.toByteArray).toLowerCase.contains("transfer-encoding: chunked"), f)
+          QueryServerSpec.gate.countDown()
+          assert(readToClose(in, got).endsWith("\r\n0\r\n\r\n"), s"$f: the chunked body did not end")
+        } finally { QueryServerSpec.gate.countDown(); sock.close() }
+      }
+    }
+  }
+
+  test("a failure within the first 64 KB is a clean 500 {\"error\"} in every format") {
+    withGateServer { p =>
+      Seq("json", "ndjson", "arrow").foreach { f =>
+        val r = client.send(HttpRequest.newBuilder(URI.create(s"http://localhost:$p/query?format=$f"))
+          .POST(HttpRequest.BodyPublishers.ofString(
+            """{"query":"SELECT id, fail_at(id, 10) AS g FROM range(0, 100)"}""")).build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() == 500, s"$f: ${r.body()}")
+        assert(r.body().startsWith("{\"error\":") && r.body().contains("failed at row 10"), s"$f: ${r.body()}")
+        assert(r.headers().firstValue("content-type").orElse("") == "application/json", f)
+      }
+    }
+  }
+
+  test("a failure after the first 64 KB aborts the connection: no complete 200 body") {
+    withGateServer { p =>
+      Seq("json", "ndjson", "arrow").foreach { f =>
+        val sock = rawPost(p, s"/query?format=$f", gatedQuery("fail_at"))
+        val got = try readToClose(sock.getInputStream, new java.io.ByteArrayOutputStream())
+          finally sock.close()
+        assert(got.startsWith("HTTP/1.1 200") && got.length > 64 * 1024, s"$f: ${got.take(200)}")
+        assert(!got.endsWith("\r\n0\r\n\r\n"), s"$f: the aborted body ended like a complete one")
+        // the server lives on
+        assert(client.send(HttpRequest.newBuilder(URI.create(s"http://localhost:$p/health")).GET().build(),
+          HttpResponse.BodyHandlers.ofString()).statusCode() == 200)
+      }
+    }
+  }
+}
+
+object QueryServerSpec {
+  /** The gate `gate_at` waits on at its row. */
+  @volatile var gate = new java.util.concurrent.CountDownLatch(0)
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.io.File
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
  * null, compatible numeric types widen — and Hive `date=`/`hour=`
  * partition dirs prune natively below the catalog layer.
  */
-class SchemaEvolutionSpec extends AnyFunSuite {
+class SchemaEvolutionSpec extends AnyFunSuite with TempLakes {
   private lazy val spark = GraftTestSession.spark
 
   test("readEvolving: union by name with missing columns and int widening") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "evolve").toString
+    val dir = tempDir("evolve").toString
     // file 1: (time, temperature) — no humidity; int32 sensor_id
     Seq((1L, 20.5, 1)).toDF("time", "temperature", "sensor_id")
       .withColumn("sensor_id", col("sensor_id").cast("int"))
@@ -37,8 +35,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
 
   test("hive date=/hour= partition pruning under the catalog layer") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "hive").toString
+    val dir = tempDir("hive").toString
     Seq((1L, "a"), (2L, "b")).toDF("time", "v")
       .write.parquet(s"$dir/date=2023-01-01/hour=00")
     Seq((3L, "c")).toDF("time", "v")

@@ -24,12 +24,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * rows on all of them. If the driver regenerates testdata under yet
  * another annotation, this spec — not 16 production queries — fails.
  */
-class TsEncodingSpec extends AnyFunSuite {
+class TsEncodingSpec extends AnyFunSuite with TempLakes {
   private lazy val spark = GraftTestSession.spark
-
-  private def tmp(prefix: String): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory(
-      new java.io.File("target").toPath.toAbsolutePath, prefix)
 
   /** Baseline rows: the real lake file, normalized by Tables, then
     * truncated to µs-aligned ns ONCE — the µs encodings cannot carry
@@ -43,22 +39,22 @@ class TsEncodingSpec extends AnyFunSuite {
   // unmodified Tables.load path (cache, configure, normalizeTs) is on trial
   private lazy val dirs: Map[String, String] = {
     Tables.configure(spark)
-    val int64 = tmp("ts-int64")
+    val int64 = tempDir("ts-int64")
     base.coalesce(1).write.mode("overwrite")
       .parquet(s"$int64/events.parquet")
 
-    val usLtz = tmp("ts-usltz")
+    val usLtz = tempDir("ts-usltz")
     base.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$usLtz/events.parquet")
 
-    val usNtz = tmp("ts-usntz")
+    val usNtz = tempDir("ts-usntz")
     base.withColumn("ts",
         timestamp_micros(expr("ts div 1000")).cast("timestamp_ntz"))
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$usNtz/events.parquet")
 
-    val nanos = tmp("ts-nanos")
+    val nanos = tempDir("ts-nanos")
     writeNanosAnnotated(s"$nanos/events.parquet")
 
     Map("int64" -> int64.toString, "us_ltz" -> usLtz.toString,
@@ -129,7 +125,7 @@ class TsEncodingSpec extends AnyFunSuite {
     // in the same directory. readEvolving must normalize per schema
     // group BEFORE widening (widen(Long, Timestamp) is unwidenable)
     // and return the full union on the int64-ns contract.
-    val d = tmp("ts-mixed")
+    val d = tempDir("ts-mixed")
     base.filter(col("event_id") % 2 === 0).coalesce(1)
       .write.parquet(s"$d/part-int64")
     base.filter(col("event_id") % 2 === 1)
@@ -188,7 +184,7 @@ class TsEncodingSpec extends AnyFunSuite {
     val readings = base.select(col("ts").as("time"),
       col("event_type").as("kind"), col("value"))
     def mkLake(enc: String): String = {
-      val root = tmp(s"lake-$enc").toString
+      val root = tempDir(s"lake-$enc").toString
       val dst = s"$root/extdb/readings"
       enc match {
         case "int64" => readings.coalesce(1).write.parquet(dst)

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * including bounds that are not µs-aligned, where the ÷1000 rewrite
  * must round toward the correct side.
  */
-class TsPushdownSpec extends AnyFunSuite {
+class TsPushdownSpec extends AnyFunSuite with TempLakes {
   private lazy val spark = GraftTestSession.spark
 
   // µs-aligned instants 1 ms apart around an aligned pivot
@@ -21,8 +21,7 @@ class TsPushdownSpec extends AnyFunSuite {
 
   private def writeEncoded(cast: String): String = {
     Tables.configure(spark)
-    val dir = java.nio.file.Files.createTempDirectory(
-      new java.io.File("target").toPath.toAbsolutePath, s"push-$cast").toString
+    val dir = tempDir(s"push-$cast").toString
     import spark.implicits._
     tsNs.zipWithIndex.toDF("ts", "event_id")
       .withColumn("ts", timestamp_micros(expr("ts div 1000")).cast(cast))
