@@ -637,13 +637,14 @@ object Bench {
     // The FULL record (146 queries × two per-query maps ≈ 6 KB) exceeds
     // the driver's 2000-char stdout tail, so it goes to a COMMITTED file
     // (repo root — target/ is gitignored) where per-query numbers stay
-    // diffable round-over-round; stdout gets the full record first (for
-    // humans running bench by hand) and then a compact, parse-safe
-    // record (< 2000 chars: headline wall, slowest-12 both passes, sf)
-    // as the genuinely LAST line — small enough that the stored tail
-    // starts at or before the '{' and json.loads succeeds.
+    // diffable round-over-round, one file per host core count so a run
+    // on one host never overwrites another's record; stdout gets the
+    // full record first (for humans running bench by hand) and then a
+    // compact, parse-safe record (< 2000 chars: headline wall, slowest-12
+    // both passes, sf) as the genuinely LAST line — small enough that
+    // the stored tail starts at or before the '{' and json.loads succeeds.
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
-      "/root/repo/bench_full.json")
+      s"bench_full_c${Runtime.getRuntime.availableProcessors}.json")
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
         (fullRecord + "\n").getBytes("UTF-8"))

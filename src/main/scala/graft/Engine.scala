@@ -29,12 +29,23 @@ import graft.TimeRangeExtract.TimeRange
  * estimate of what opening one file costs, 4 MB by default; see
  * [[Engine.inputBytes]]) runs in the engine's small-request clone
  * ([[Engine.SmallProfile]]): one shuffle partition, no adaptive
- * execution, no whole-stage code generation. Under that size a
+ * execution, no whole-stage code generation, no broadcast join, and
+ * each spliced lake table read as one partition. Under that size a
  * request's cost is Spark's fixed per-job, per-stage and per-compile
  * cost, not its data: adaptive execution submits every query stage as
  * its own job, a sort over several shuffle partitions adds a
  * range-sampling job, and each new time window's literals cost a
- * Janino compile of whole-stage code. Above it the cost per row wins,
+ * Janino compile of whole-stage code. A table read as one partition
+ * (a `Repartition(1, shuffle = false)` under its alias, which plans as
+ * `CoalesceExec(1)` and reports a single partition) satisfies every
+ * distribution an aggregate, a sort or a sort-merge join asks for, so
+ * the request plans no exchange: one stage and one task instead of
+ * three of each and shuffle files on disk. One task can read it all,
+ * since the input is at most one file's open cost. A broadcast join
+ * would run its build side as a job of its own; with broadcast off a
+ * join of two one-partition reads is a sort-merge join in the same
+ * stage. Coalescing moves no rows, and filters and column pruning
+ * still reach the parquet scan below it. Above it the cost per row wins,
  * and a row costs more without whole-stage code, so a larger request
  * plans in the engine's session. `ProfileProbe` (test sources) timed
  * both profiles over one file of 0.25 to 64 MB on a 4-core host. The
@@ -45,9 +56,15 @@ import graft.TimeRangeExtract.TimeRange
  * up to 6 MB), and for a new window about even up to 4 MB and slower
  * above. The mean of the four crossed between 3.5 and 4.2 MB, so one
  * file's open cost sits at the crossover. At 64 MB the engine's
- * session was 2.2x (breakdown) and 1.3x (export) faster.
- * Tuning `openCostInBytes` moves this line as well as the packing of
- * files into scan splits.
+ * session was 2.2x (breakdown) and 1.3x (export) faster. Timed again
+ * (0.25 to 8 MB) once the clone read each table as one partition, the
+ * clone won by more: a breakdown crossed at 4-6 MB for a repeated
+ * window and was still 28% faster in the clone at 8 MB for a new one;
+ * an export was 8-35 ms slower in the clone for a repeated window at
+ * every size, and faster for a new window up to 6 MB. The mean of the
+ * four now crosses at about 8 MB, so one file's open cost errs on the
+ * side of the engine's session. Tuning `openCostInBytes` moves this
+ * line as well as the packing of files into scan splits.
  *
  * Differences from the reference, by design (documented quirk fixes):
  *  - an empty pruned file set yields an empty DataFrame with the
@@ -104,15 +121,37 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
    * reference: explicit argument > default "mydb"
    * (/root/reference/querier/server.go:183-189).
    */
-  def query(sql0: String, db0: String = ""): DataFrame = {
+  def query(sql0: String, db0: String = ""): DataFrame = splice(sql0, db0) match {
+    case Left(answer) => answer
+    case Right(Engine.Spliced(analyzed, wrapped)) =>
+      val small = analyzed match {
+        // a command's effects (a temp view, a cached table) belong to the
+        // engine's session; after analysis its query is no longer a child,
+        // so its input would count as nothing
+        case _: org.apache.spark.sql.catalyst.plans.logical.Command => false
+        case q => Engine.inputBytes(q) <= spark.sessionState.conf.filesOpenCostInBytes
+      }
+      // a command wrapper analyzes its query itself, in the session it runs in
+      val plan = wrapped.getOrElse(if (small) Engine.SmallProfile.plan(analyzed) else analyzed)
+      org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(
+        if (small) smallProfile.session() else spark, plan)
+  }
+
+  /**
+   * Everything [[query]] does before it chooses a plan profile: the
+   * answer itself where no lake plan is needed (SHOW, metadata, SQL
+   * that reads no lake table), or the spliced plan analyzed in the
+   * engine's session.
+   */
+  private[graft] def splice(sql0: String, db0: String): Either[DataFrame, Engine.Spliced] = {
     val sql = sql0.trim.replaceAll("\\s+", " ")
     val db = if (db0.nonEmpty) db0 else defaultDb
     val upper = sql.toUpperCase.stripSuffix(";").trim
-    if (upper == "SHOW DATABASES") return showDatabases()
-    if (upper == "SHOW TABLES") return showTables(db)
+    if (upper == "SHOW DATABASES") return Left(showDatabases())
+    if (upper == "SHOW TABLES") return Left(showTables(db))
     // SHOW TABLES FROM|IN <db> — SQL-level alternative to the ?db= param
     if (upper.startsWith("SHOW TABLES FROM ") || upper.startsWith("SHOW TABLES IN "))
-      return showTables(sql.stripSuffix(";").trim.split("\\s+").last)
+      return Left(showTables(sql.stripSuffix(";").trim.split("\\s+").last))
 
     val parsed = scala.util.Try(parse(spark, sql)).toOption
     // EXPLAIN <q> / DESCRIBE [QUERY] <q> hold their query plan outside
@@ -174,18 +213,18 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
                 case (Engine.MetaMinTime, _) => mn
                 case (Engine.MetaMaxTime, _) => mx
               }
-              return spark.createDataFrame(
+              return Left(spark.createDataFrame(
                 java.util.Collections.singletonList(
                   org.apache.spark.sql.Row(values: _*): org.apache.spark.sql.Row),
                 org.apache.spark.sql.types.StructType(specs.map { case (_, nm) =>
                   org.apache.spark.sql.types.StructField(
                     nm, org.apache.spark.sql.types.LongType, nullable = false)
-                }))
+                })))
             }
           }
       }
 
-    if (planOpt.isEmpty) return spark.sql(sql) // unparseable: Spark reports it
+    if (planOpt.isEmpty) return Left(spark.sql(sql)) // unparseable: Spark reports it
     // One walk splices every lake-table occurrence (the reference's
     // FROM-clause splice, O8, done on the parsed plan instead of the SQL
     // text, so a 'mydb.meas' string literal or a column named `mydb` is
@@ -213,13 +252,15 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
           qualifiers.map(_.toLowerCase).foreach(k =>
             timeIsLong(k) = timeIsLong.getOrElse(k, true) && isLong)
         }
-        Some(org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias(
+        val read = org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias(
           org.apache.spark.sql.catalyst.AliasIdentifier(t.toLowerCase, Seq(d.toLowerCase)),
-          tableDf.queryExecution.analyzed))
+          tableDf.queryExecution.analyzed)
+        read.setTagValue(Engine.LakeRead, ())
+        Some(read)
       }
     })
     if (lakeTables == 0)
-      return spark.sql(sql) // table-free or non-lake SQL → pass-through (O10)
+      return Left(spark.sql(sql)) // table-free or non-lake SQL → pass-through (O10)
     // O9 analog: if any time column is int64 ns, rewrite time-vs-
     // string/timestamp literal comparisons to long-literal form —
     // qualifier-scoped so a TimestampType `time` on another relation in
@@ -233,19 +274,8 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
         timeIsLong.getOrElse(parts.dropRight(1).mkString(".").toLowerCase, allLong))
     // analyzed here, so temp views and functions registered on this
     // session after its small-profile clone was made still resolve
-    val analyzed = spark.sessionState.executePlan(finalPlan).analyzed
-    val session = analyzed match {
-      // a command's effects (a temp view, a cached table) belong to the
-      // engine's session; after analysis its query is no longer a child,
-      // so its input would count as nothing
-      case _: org.apache.spark.sql.catalyst.plans.logical.Command => spark
-      case q if Engine.inputBytes(q) <= spark.sessionState.conf.filesOpenCostInBytes =>
-        smallProfile.session()
-      case _ => spark
-    }
-    // a command wrapper analyzes its query itself, in the session it runs in
-    org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(session,
-      if (parsed == planOpt) analyzed else wrap(finalPlan))
+    Right(Engine.Spliced(spark.sessionState.executePlan(finalPlan).analyzed,
+      if (parsed == planOpt) None else Some(wrap(finalPlan))))
   }
 }
 
@@ -254,6 +284,13 @@ object Engine {
   import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
   import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
   import graft.TimeRangeExtract.TimeCmp
+
+  /** A lake query after the splice: its plan analyzed in the engine's
+    * session, and the EXPLAIN or DESCRIBE command around it, if any. */
+  private[graft] final case class Spliced(analyzed: LogicalPlan, wrapped: Option[LogicalPlan])
+
+  /** Marks the `SubqueryAlias` over each spliced lake-table read. */
+  private[graft] val LakeRead = org.apache.spark.sql.catalyst.trees.TreeNodeTag[Unit]("graft.lakeRead")
 
   private[graft] sealed trait MetaAgg
   private[graft] case object MetaCount extends MetaAgg
@@ -280,8 +317,10 @@ object Engine {
 
   /**
    * The small-request plan profile of an engine: a `cloneSession()` of
-   * the engine's session that plans with one shuffle partition, no adaptive execution
-   * and no whole-stage code generation. [[session]] first copies over
+   * the engine's session that plans with one shuffle partition, no
+   * adaptive execution, no whole-stage code generation and no broadcast
+   * join, over a plan whose lake-table reads [[SmallProfile.plan]] made
+   * one partition each. [[session]] first copies over
    * every conf and experimental rule set on the parent since the last
    * call, so the clone differs from its parent only in [[Overrides]].
    */
@@ -294,7 +333,7 @@ object Engine {
       if (confs != copied) synchronized {
         if (confs != copied) {
           // override keys are never unset or flipped, so a concurrent
-          // small request always plans with the three overrides
+          // small request always plans with the four overrides
           val target = confs ++ SmallProfile.Overrides
           val conf = small.sessionState.conf
           val current = conf.getAllConfs
@@ -311,11 +350,21 @@ object Engine {
   }
 
   private[graft] object SmallProfile {
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition}
     import org.apache.spark.sql.internal.SQLConf
     val Overrides: Map[String, String] = Map(
       SQLConf.SHUFFLE_PARTITIONS.key -> "1",
       SQLConf.ADAPTIVE_EXECUTION_ENABLED.key -> "false",
-      SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false")
+      SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false",
+      SQLConf.AUTO_BROADCASTJOIN_THRESHOLD.key -> "-1")
+
+    /** The analyzed plan of a small request with each spliced lake-table
+      * read coalesced to one partition, subqueries included; a read
+      * answered from memory is left as it is. */
+    def plan(analyzed: LogicalPlan): LogicalPlan = analyzed.transformUpWithSubqueries {
+      case a: SubqueryAlias if a.getTagValue(LakeRead).isDefined && !a.child.isInstanceOf[LocalRelation] =>
+        a.copy(child = Repartition(1, shuffle = false, a.child))
+    }
   }
 
   /**

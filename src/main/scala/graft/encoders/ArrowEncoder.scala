@@ -33,9 +33,10 @@ import scala.jdk.CollectionConverters._
  * to `out` before the next partition runs. Each column's setter is
  * chosen once: int64, int, double, float, boolean, well-formed UTF-8
  * strings and timestamps from 1900 to 9999 go straight from the row
- * into the typed vector; any other value is converted to its external
- * Scala value and set as the `Row` path set it, so the IPC bytes are
- * that path's for every type.
+ * into the typed vector; a BINARY value is set as the base64 text the
+ * JSON encoder writes for it; any other value is converted to its
+ * external Scala value and set as the `Row` path set it, so the IPC
+ * bytes are that path's for every other type.
  */
 object ArrowEncoder {
   private val TIME_FORCED = Set("time", "time_str", "time_int")
@@ -97,6 +98,9 @@ object ArrowEncoder {
         val u = r.getUTF8String(src)
         if (ResultEncoder.wellFormed(u)) v.setSafe(ri, u.getBytes) else slow(r, ri)
       }
+      // the base64 text JSON writes for the same value
+      case (v: VarCharVector, BinaryType) => (r, ri) =>
+        v.setSafe(ri, java.util.Base64.getEncoder.encode(r.getBinary(src)))
       case _ => slow
     }
   }

@@ -519,4 +519,78 @@ class CatalogEngineSpec extends AnyFunSuite with TempLakes {
         "AND time > (SELECT min(time) FROM mydb.meas)", "")
     assert(df.collect().head.getLong(0) == 24L)
   }
+
+  /** `sql` through the engine and the JSON encoder, as the gateway runs
+    * it, with what Spark ran for it; then its rows and executed plan. */
+  private def encoded(eng: Engine, sql: String)
+      : (SparkJobCounter.Counts, Seq[String], String) = {
+    val (df, counts) = SparkJobCounter.counts(spark) {
+      val df = eng.query(sql, "")
+      graft.encoders.ResultEncoder.writeJson(df, java.io.OutputStream.nullOutputStream())
+      df
+    }
+    (counts, df.collect().map(_.toSeq.mkString("|")).toSeq, df.queryExecution.executedPlan.toString)
+  }
+
+  private val OneTask = SparkJobCounter.Counts(jobs = 1, stages = 1, tasks = 1, shuffleBytes = 0)
+
+  private def assertOneTask(eng: Engine, sql: String, want: Seq[String]): String = {
+    val (counts, rows, plan) = encoded(eng, sql)
+    assert(rows == want, plan)
+    assert(counts == OneTask, plan)
+    assert(!plan.contains("Exchange") && plan.contains("Coalesce 1"), plan)
+    plan
+  }
+
+  private val Day2 = "time >= '2023-01-02T00:00:00Z' AND time < '2023-01-03T00:00:00Z'"
+
+  test("small profile: a GROUP BY … ORDER BY breakdown runs as one task") {
+    val plan = assertOneTask(engine, "SELECT location, count(*) AS n, sum(temperature) AS t " +
+      s"FROM mydb.meas WHERE $Day2 GROUP BY location ORDER BY location", Seq("loc2|24|5076.0"))
+    assert(plan.contains("PushedFilters: [IsNotNull(time), GreaterThanOrEqual(time,"), plan)
+  }
+
+  test("small profile: an ORDER BY … LIMIT runs as one task") {
+    assertOneTask(engine, s"SELECT location, temperature FROM mydb.meas WHERE $Day2 " +
+      "ORDER BY temperature DESC LIMIT 3", Seq("loc2|223.0", "loc2|222.0", "loc2|221.0"))
+  }
+
+  test("small profile: a window over three files runs as one task") {
+    val sql = "SELECT location, count(*) AS n FROM mydb.meas WHERE time >= '2023-01-01T12:00:00Z' " +
+      "AND time < '2023-01-03T12:00:00Z' GROUP BY location ORDER BY location"
+    assert(scannedFiles(engine.query(sql, "")).map(_.size) == Seq(3))
+    assertOneTask(engine, sql, Seq("loc1|12", "loc2|24", "loc3|12"))
+  }
+
+  test("small profile: a table with two footer schemas runs as one task") {
+    val dir = tempDir("twoschemas")
+    import spark.implicits._
+    Seq((T0, "loc1", 1.0)).toDF("time", "location", "temperature").coalesce(1)
+      .write.parquet(new File(dir, "mydb/evolve/date=2023-01-01").getAbsolutePath)
+    Seq((T0 + 24 * HOUR_NS, "loc2", 2.0, 50L)).toDF("time", "location", "temperature", "humidity")
+      .coalesce(1).write.parquet(new File(dir, "mydb/evolve/date=2023-01-02").getAbsolutePath)
+    val plan = assertOneTask(new Engine(spark, new Catalog(dir.getAbsolutePath)),
+      "SELECT location, count(*) AS n, sum(humidity) AS h FROM mydb.evolve " +
+        "GROUP BY location ORDER BY location", Seq("loc1|1|null", "loc2|1|50"))
+    assert(plan.contains("Union"), plan)
+  }
+
+  test("small profile: a self-join runs as one task, without a broadcast") {
+    val plan = assertOneTask(engine, "SELECT a.location, count(*) AS pairs " +
+      "FROM mydb.meas a JOIN mydb.meas b ON a.location = b.location " +
+      "WHERE a.time < '2023-01-02T00:00:00Z' AND b.time >= '2023-01-01T12:00:00Z' " +
+      "AND b.time < '2023-01-02T00:00:00Z' GROUP BY a.location ORDER BY a.location",
+      Seq("loc1|288"))
+    assert(plan.contains("SortMergeJoin") && !plan.contains("Broadcast"), plan)
+  }
+
+  test("engine session: the same breakdown still plans its exchange") {
+    GraftTestSession.withConf("spark.sql.files.openCostInBytes" -> "1") {
+      val (counts, rows, plan) = encoded(engine, "SELECT location, count(*) AS n, " +
+        s"sum(temperature) AS t FROM mydb.meas WHERE $Day2 GROUP BY location ORDER BY location")
+      assert(rows == Seq("loc2|24|5076.0"))
+      assert(plan.contains("Exchange") && !plan.contains("Coalesce 1"), plan)
+      assert(counts.shuffleBytes > 0, counts)
+    }
+  }
 }

@@ -2,19 +2,22 @@ package graft
 
 import java.io.File
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 
 /**
  * Times `Engine.query`'s two plan profiles against each other on one
  * input file per size: the engine's own session, and the small-request
  * clone (one shuffle partition, no adaptive execution, no whole-stage
- * code generation). Two request shapes of the gateway benchmark:
+ * code generation, no broadcast join) over the plan it ships,
+ * `Engine.SmallProfile.plan`, which reads each lake table as one
+ * partition. Two request shapes of the gateway benchmark:
  *
  *  - breakdown: `event_type, count(*), sum(value) … GROUP BY event_type
  *    ORDER BY event_type` over an events-like file, every row in the window;
  *  - export: `SELECT *` of an eighth of a lineitem-like file's rows.
  *
- * Each request runs `Engine.query`, plans its analyzed plan in the
+ * Each request runs `Engine.splice`, plans its analyzed plan in the
  * profile under test and encodes the rows as JSON to a null writer, so
  * the time covers what the gateway does minus HTTP. Profiles alternate
  * request by request. A `new` window gives every request time literals
@@ -89,8 +92,9 @@ object ProfileProbe {
         (name, gen, 200000.0 * (1 << 20) / bytes)
       }
       val engine = new Engine(spark, new Catalog(root.getAbsolutePath))
-      val profiles = Seq("engine" -> (() => spark), "small" -> (() => new Engine.SmallProfile(spark).session()))
-        .map { case (n, s) => (n, s()) }
+      val profiles: Seq[(String, SparkSession, LogicalPlan => LogicalPlan)] = Seq(
+        ("engine", spark, identity),
+        ("small", new Engine.SmallProfile(spark).session(), Engine.SmallProfile.plan))
       var literal = 0L // a fresh offset for every `new` request
       for ((shape, gen, rowsPerMb) <- shapes; mb <- sizesMb) {
         val table = s"${shape}_${(mb * 1000).toLong}"
@@ -106,19 +110,19 @@ object ProfileProbe {
             s"SELECT * FROM $table WHERE time >= $a AND time < ${a + DayNs / 8}"
           }
         }
-        def run(session: SparkSession, fresh: Boolean): Double = {
+        def run(session: SparkSession, plan: LogicalPlan => LogicalPlan, fresh: Boolean): Double = {
           val t = System.nanoTime()
-          val df = org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(
-            session, engine.query(sql(fresh), "mydb").queryExecution.analyzed)
+          val analyzed = engine.splice(sql(fresh), "mydb").toOption.get.analyzed
+          val df = org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(session, plan(analyzed))
           graft.encoders.ResultEncoder.writeJson(df, java.io.OutputStream.nullOutputStream())
           (System.nanoTime() - t) / 1e6
         }
         // the first size of a shape also warms the JIT up, as a gateway's warm-up does
         val warmups = if (mb == sizesMb.head) 30 else 3
         for (fresh <- Seq(false, true)) {
-          profiles.foreach { case (_, s) => (0 until warmups).foreach(_ => run(s, fresh)) }
-          val times = (0 until reps).flatMap(_ => profiles.map { case (n, s) => n -> run(s, fresh) })
-          profiles.foreach { case (n, _) =>
+          profiles.foreach { case (_, s, p) => (0 until warmups).foreach(_ => run(s, p, fresh)) }
+          val times = (0 until reps).flatMap(_ => profiles.map { case (n, s, p) => n -> run(s, p, fresh) })
+          profiles.foreach { case (n, _, _) =>
             val (q1, p50, q3) = quartiles(times.filter(_._1 == n).map(_._2))
             println(f"probe shape=$shape%-9s mb=${bytes / 1048576.0}%6.2f rows=$rows%9d " +
               f"window=${if (fresh) "new" else "repeat"}%-6s profile=$n%-6s " +

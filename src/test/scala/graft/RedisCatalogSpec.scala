@@ -3,7 +3,6 @@ package graft
 import java.io.{BufferedInputStream, BufferedOutputStream, File}
 import java.net.{ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
 import scala.collection.mutable
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -140,7 +139,7 @@ class FakeRedisServer {
  * metadata type) against the in-process fake server, including an
  * end-to-end Engine query whose file list comes from redis.
  */
-class RedisCatalogSpec extends AnyFunSuite {
+class RedisCatalogSpec extends AnyFunSuite with TempLakes {
   private lazy val spark = GraftTestSession.spark
   private val HOUR_NS = 3600L * 1000000000L
   private val T0 = 1672531200000000000L // 2023-01-01T00:00:00Z
@@ -268,8 +267,7 @@ class RedisCatalogSpec extends AnyFunSuite {
     val srv = new FakeRedisServer
     try {
       import spark.implicits._
-      val dir = Files.createTempDirectory(
-        new File("target").toPath.toAbsolutePath, "redislake").toFile
+      val dir = tempDir("redislake")
       def writeDay(day: Int): (String, Long, Long) = {
         val t0 = T0 + (day - 1) * 24 * HOUR_NS
         val rows = (0 until 24).map(h => (t0 + h * HOUR_NS, s"loc$day", day * 100.0 + h))

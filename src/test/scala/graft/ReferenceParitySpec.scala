@@ -3,7 +3,6 @@ package graft
 import java.io.File
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.nio.file.Files
 import graft.server.QueryServer
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,13 +14,12 @@ import org.scalatest.funsuite.AnyFunSuite
  * FlightSQL bug — deliberately not copied; quirk 9 is dead reference
  * code — nothing to assert.)
  */
-class ReferenceParitySpec extends AnyFunSuite {
+class ReferenceParitySpec extends AnyFunSuite with TempLakes {
   private lazy val spark = GraftTestSession.spark
 
   private lazy val (server, port) = {
     import spark.implicits._
-    val dir = Files.createTempDirectory(
-      new File("target").toPath.toAbsolutePath, "paritylake").toFile
+    val dir = tempDir("paritylake")
     val d = new File(dir, "mydb/weather"); d.mkdirs()
     Seq(
       (1672531200000000000L, "sea", 11.5, true),

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-5 operator family: decontamination, repetition stats,
   * bloom-gated except, embedding near-dup edges, shard packing. */
-class Round5OpsSpec extends AnyFunSuite {
+class Round5OpsSpec extends AnyFunSuite with TempLakes {
   private lazy val spark = GraftTestSession.spark
   import spark.implicits._
 
@@ -294,8 +294,7 @@ class Round5OpsSpec extends AnyFunSuite {
     val old = docs.filter(col("doc_id") < 250)
     val fresh = docs.filter(col("doc_id") >= 250)
     // signatures persisted and read back (the ingest-time artifact)
-    val sigDir = java.nio.file.Files.createTempDirectory(
-      new java.io.File("target").toPath.toAbsolutePath, "sigstore").toString
+    val sigDir = tempDir("sigstore").toString
     Dedup.signatures(old, "doc_id", "text").write.mode("overwrite").parquet(sigDir)
     checkDecomposition(old, fresh, spark.read.parquet(sigDir))
   }

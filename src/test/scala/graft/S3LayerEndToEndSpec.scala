@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * SQL plan splice, and `Layers.register`'s per-bucket credentials
  * reaching FileSystem initialization exactly as S3A propagates them.
  */
-class S3LayerEndToEndSpec extends AnyFunSuite {
+class S3LayerEndToEndSpec extends AnyFunSuite with TempLakes {
   private lazy val spark = GraftTestSession.spark
 
   private val day = 86400L * 1000000000L
@@ -22,7 +22,7 @@ class S3LayerEndToEndSpec extends AnyFunSuite {
   test("pruned SQL over an s3a lake through the registered scheme") {
     import spark.implicits._
     val hc = spark.sparkContext.hadoopConfiguration
-    val root = java.nio.file.Files.createTempDirectory("fake_s3").toString
+    val root = tempDir("fake_s3").toString
     hc.set("graft.fake.s3.root", root)
     hc.set("fs.s3a.impl", classOf[FakeS3AFileSystem].getName)
     // no FS-cache entry survives this spec, and the impl keys are

@@ -4,7 +4,7 @@ import graft.operators.{Dedup, IvfIndex, Skew}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class ScaleOperatorsSpec extends AnyFunSuite {
+class ScaleOperatorsSpec extends AnyFunSuite with TempLakes {
   private lazy val spark = GraftTestSession.spark
   import spark.implicits._
 
@@ -427,8 +427,7 @@ class ScaleOperatorsSpec extends AnyFunSuite {
     import graft.streaming.StreamingDedup
     val n = 150
     val cap = 20
-    val dir = java.nio.file.Files.createTempDirectory(
-      new java.io.File("target").toPath.toAbsolutePath, "satdedup").toString
+    val dir = tempDir("satdedup").toString
     (0L until n.toLong).map(i =>
         (i, "the same exact document text repeated over and over again verbatim"))
       .toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(dir)

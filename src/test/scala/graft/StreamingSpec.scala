@@ -5,14 +5,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming results must agree with their batch twins on a static dir. */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempLakes {
   private lazy val spark = GraftTestSession.spark
 
   /** readStream needs a directory — stage a testdata file into one,
     * `copies` times (part0..partN). */
   private def stage(table: String, copies: Int = 1): String = {
-    val d = java.nio.file.Files.createTempDirectory(
-      new java.io.File("target").toPath.toAbsolutePath, s"$table-stream")
+    val d = tempDir(s"$table-stream").toPath
     (0 until copies).foreach { i =>
       java.nio.file.Files.copy(
         java.nio.file.Path.of(s"/root/testdata/sf0.001/$table.parquet"),
@@ -268,8 +267,7 @@ class StreamingSpec extends AnyFunSuite {
         Multimodal.MediaRow(2 * s + 1,
           Multimodal.areaResizeGray(base, 27, 24, "bmp").get))
     } :+ Multimodal.MediaRow(999L, "not an image".getBytes)
-    val d = java.nio.file.Files.createTempDirectory(
-      new java.io.File("target").toPath.toAbsolutePath, "media-stream")
+    val d = tempDir("media-stream").toPath
     val (first, second) = rows.splitAt(rows.size / 2)
     first.toDS().write.parquet(d.resolve("batch0").toString)
     second.toDS().write.parquet(d.resolve("batch1").toString)
@@ -313,8 +311,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     val rows = (0L until 20L).flatMap(v =>
       (0 until 6).flatMap(f => Seq(frame(v, f, 1), frame(v, f, 2))))
-    val d = java.nio.file.Files.createTempDirectory(
-      new java.io.File("target").toPath.toAbsolutePath, "video-stream")
+    val d = tempDir("video-stream").toPath
     val (first, second) = rows.splitAt(rows.size / 2)
     first.toDS().write.parquet(d.resolve("batch0").toString)
     second.toDS().write.parquet(d.resolve("batch1").toString)
@@ -493,8 +490,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.StreamingDrift
     import spark.implicits._
     val batch = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-    val d = java.nio.file.Files.createTempDirectory(
-      new java.io.File("target").toPath.toAbsolutePath, "drift-stream").toString
+    val d = tempDir("drift-stream").toString
     // inject an EMPTY vector (label 2) and a wrong-dimension vector
     // (label 4): both must be rejected into n_bad without skewing the
     // running mean
@@ -584,8 +580,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.StreamingHeavyHitters
     val batchDocs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
     // four files -> four micro-batches, so the summary evolves
-    val d = java.nio.file.Files.createTempDirectory(
-      new java.io.File("target").toPath.toAbsolutePath, "hh-stream").toString
+    val d = tempDir("hh-stream").toString
     batchDocs.repartition(4).write.mode("overwrite").parquet(d)
     val truth = batchDocs.select(explode(graft.operators.TextAnalysis
         .tokens(col("text"))).as("g"))
@@ -650,8 +645,7 @@ class StreamingSpec extends AnyFunSuite {
         "embedding", dim = 64, shards = 5)
       .collect().map(r => (r.get(0).toString, r.getInt(1)) -> r.getDouble(2))
       .toMap
-    val d = java.nio.file.Files.createTempDirectory(
-      new java.io.File("target").toPath.toAbsolutePath, "mom-stream").toString
+    val d = tempDir("mom-stream").toString
     emb.repartition(4).write.mode("overwrite").parquet(d)
     val latest = new java.util.concurrent.ConcurrentHashMap[
       String, Seq[Double]]()
@@ -755,8 +749,7 @@ class StreamingSpec extends AnyFunSuite {
     val batch = Preference.lengthBias(pairs, "source")
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4)))).toMap
-    val d = java.nio.file.Files.createTempDirectory(
-      new java.io.File("target").toPath.toAbsolutePath, "lenbias").toString
+    val d = tempDir("lenbias").toString
     pairs.repartition(4).write.mode("overwrite").parquet(d)
     val latest = new java.util.concurrent.ConcurrentHashMap[
       String, (Long, Long, Double, Double)]()
@@ -800,8 +793,7 @@ class StreamingSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getString(0), r.getInt(1)) ->
         ((r.getLong(2), r.getDouble(3), r.getLong(4)))).toMap
-    val d = java.nio.file.Files.createTempDirectory(
-      new java.io.File("target").toPath.toAbsolutePath, "bestofn").toString
+    val d = tempDir("bestofn").toString
     resp.repartition(4).write.mode("overwrite").parquet(d)
     val latest = new java.util.concurrent.ConcurrentHashMap[
       (String, Int), (Long, Double, Long)]()
@@ -852,8 +844,7 @@ class StreamingSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getString(0), r.getInt(1)) ->
         ((r.getLong(2), r.getDouble(3)))).toMap
-    val d = java.nio.file.Files.createTempDirectory(
-      new java.io.File("target").toPath.toAbsolutePath, "bestofn-replay")
+    val d = tempDir("bestofn-replay").toPath
     // `_`-prefixed dirs are invisible to the file stream source, so
     // the staging dir can stay in place
     resp.coalesce(1).write.mode("overwrite").parquet(s"$d/__stage")
@@ -909,8 +900,7 @@ class StreamingSpec extends AnyFunSuite {
         if (r.isNullAt(4)) None else Some(r.getDouble(4)), r.getInt(5))
     val batch = Preference.passAtK(graded, "prompt_id", "passed", k = 3)
       .collect().map(r => r.getLong(0).toString -> row(r)).toMap
-    val d = java.nio.file.Files.createTempDirectory(
-      new java.io.File("target").toPath.toAbsolutePath, "passatk").toString
+    val d = tempDir("passatk").toString
     graded.repartition(4).write.mode("overwrite").parquet(d)
     val latest = new java.util.concurrent.ConcurrentHashMap[
       String, (Long, Long, Double, Option[Double], Int)]()
@@ -946,8 +936,7 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3), r.getBoolean(4))))
       .toMap
-    val d = java.nio.file.Files.createTempDirectory(
-      new java.io.File("target").toPath.toAbsolutePath, "judgeagr").toString
+    val d = tempDir("judgeagr").toString
     judged.repartition(4).write.mode("overwrite").parquet(d)
     val latest = new java.util.concurrent.ConcurrentHashMap[
       String, (Long, Long, Double, Boolean)]()
@@ -989,8 +978,7 @@ class StreamingSpec extends AnyFunSuite {
     val batch = Preference.calibrationBins(graded, "pct", "correct")
       .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getDouble(2),
         r.getDouble(3), r.getDouble(4)))).toMap
-    val d = java.nio.file.Files.createTempDirectory(
-      new java.io.File("target").toPath.toAbsolutePath, "calbins").toString
+    val d = tempDir("calbins").toString
     graded.repartition(4).write.mode("overwrite").parquet(d)
     val latest = new java.util.concurrent.ConcurrentHashMap[
       Int, (Long, Double, Double, Double)]()
@@ -1035,8 +1023,7 @@ class StreamingSpec extends AnyFunSuite {
         "correct")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2),
         r.getDouble(3), r.getDouble(4), r.getString(5)))).toMap
-    val d = java.nio.file.Files.createTempDirectory(
-      new java.io.File("target").toPath.toAbsolutePath, "carto").toString
+    val d = tempDir("carto").toString
     trace.repartition(4).write.mode("overwrite").parquet(d)
     val latest = new java.util.concurrent.ConcurrentHashMap[
       Long, (Long, Double, Double, Double, String)]()
@@ -1073,8 +1060,7 @@ class StreamingSpec extends AnyFunSuite {
     val batch = Preference.sprtMonitor(verdicts, "source", "win")
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),
         r.getLong(3), r.getDouble(4), r.getString(5)))).toMap
-    val d = java.nio.file.Files.createTempDirectory(
-      new java.io.File("target").toPath.toAbsolutePath, "sprt").toString
+    val d = tempDir("sprt").toString
     verdicts.repartition(4).write.mode("overwrite").parquet(d)
     val latest = new java.util.concurrent.ConcurrentHashMap[
       String, (Long, Long, Long, Double, String)]()
@@ -1111,8 +1097,7 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getDouble(6),
         r.getBoolean(7)))).toMap
-    val d = java.nio.file.Files.createTempDirectory(
-      new java.io.File("target").toPath.toAbsolutePath, "mcnemar").toString
+    val d = tempDir("mcnemar").toString
     graded.repartition(4).write.mode("overwrite").parquet(d)
     val latest = new java.util.concurrent.ConcurrentHashMap[
       String, (Long, Long, Long, Long, Long, Double, Boolean)]()
@@ -1153,8 +1138,7 @@ class StreamingSpec extends AnyFunSuite {
         "score_a", "score_b", p = 50)
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),
         r.getLong(3), r.getDouble(4), r.getBoolean(5)))).toMap
-    val d = java.nio.file.Files.createTempDirectory(
-      new java.io.File("target").toPath.toAbsolutePath, "perm").toString
+    val d = tempDir("perm").toString
     pairs.repartition(4).write.mode("overwrite").parquet(d)
     val latest = new java.util.concurrent.ConcurrentHashMap[
       String, (Long, Long, Long, Double, Boolean)]()
@@ -1405,8 +1389,7 @@ class StreamingSpec extends AnyFunSuite {
         "truth")
       .collect().map(r => r.getString(0) ->
         r.toSeq.drop(1).toVector).toMap
-    val d = java.nio.file.Files.createTempDirectory(
-      new java.io.File("target").toPath.toAbsolutePath, "clsrep").toString
+    val d = tempDir("clsrep").toString
     graded.repartition(4).write.mode("overwrite").parquet(d)
     val latest = new java.util.concurrent.ConcurrentHashMap[
       String, Vector[Any]]()
