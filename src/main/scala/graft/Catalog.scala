@@ -1,7 +1,7 @@
 package graft
 
 import java.io.File
-import graft.CatalogBackend.{FileStat, isParquet, skipDir}
+import graft.CatalogBackend.{FileStat, skipDir}
 
 /**
  * Lake catalog: resolves `db.table` to a minimal list of parquet files
@@ -49,19 +49,18 @@ class Catalog(val root: String) extends CatalogBackend {
     * pruned when `range` is given — a folder whose sidecar bounds miss
     * the range is skipped without listing it. None for a missing table. */
   private def walk(db: String, table: String,
-                   range: Option[(Long, Long)]): Option[Seq[FileStat]] = {
-    def visit(dir: File): Seq[FileStat] = {
-      val sidecar = CatalogBackend.readSidecar(dir)
-      if (sidecar.exists(!_._1.overlaps(range))) return Nil // folder-level skip
-      val entries = sidecar.toSeq.flatMap(_._2).map(e => new File(e.path).getName -> e).toMap
-      val here = Option(dir.listFiles()).toSeq.flatten
-      here.filter(isParquet).map { f =>
-        entries.getOrElse(f.getName, FileStat("", None, None)).copy(path = f.getAbsolutePath)
-      }.filter(_.overlaps(range)) ++
-        here.filter(d => d.isDirectory && !skipDir(d.getName)).flatMap(visit)
+                   range: Option[(Long, Long)]): Option[Seq[FileStat]] =
+    Some(tableDir(db, table)).filter(_.isDirectory).map { dir =>
+      CatalogBackend.dataFolders(dir) { folder =>
+        val sidecar = CatalogBackend.readSidecar(folder)
+        if (sidecar.exists(!_._1.overlaps(range))) None // folder-level skip
+        else Some(sidecar.toSeq.flatMap(_._2).map(e => new File(e.path).getName -> e).toMap)
+      }.flatMap { case (_, entries, files) =>
+        files.map { f =>
+          entries.getOrElse(f.getName, FileStat("", None, None)).copy(path = f.getAbsolutePath)
+        }.filter(_.overlaps(range))
+      }
     }
-    Some(tableDir(db, table)).filter(_.isDirectory).map(visit)
-  }
 
   /** Parquet files of `db.table` with their zone-map stats, pruned to `range`. */
   def files(db: String, table: String,

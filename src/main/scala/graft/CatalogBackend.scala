@@ -101,6 +101,18 @@ object CatalogBackend {
     }
   }
 
+  // ---- the lake contract ----
+
+  /** Every lake table's time column, int64 epoch-ns (reference
+    * queryClient.go:32,314): written, zone-mapped, pruned and put first. */
+  val TimeCol = "time"
+
+  /** The database of a query that names none (reference server.go:183-189). */
+  val DefaultDb = "mydb"
+
+  /** The size the compactor rewrites a folder's files toward. */
+  val TargetFileBytes: Long = 128L * 1024 * 1024
+
   /** Directories no lake walk enters: `tmp/` holds half-written data
     * (reference convention, queryClient.go:496-499); `_`/`.` prefixes
     * are hidden sidecars (Hadoop convention — Spark's own FileIndex
@@ -109,6 +121,21 @@ object CatalogBackend {
     name == "tmp" || name.startsWith("_") || name.startsWith(".")
 
   def isParquet(f: File): Boolean = f.isFile && f.getName.endsWith(".parquet")
+
+  /** The one listing of a table's data: every folder under `tableDir`
+    * that [[skipDir]] lets a walk into and that holds parquet files, with
+    * those files. `enter` sees each folder before it is listed: None
+    * skips the folder and everything below it, `Some(a)` lists it and
+    * hands `a` back beside its files. Nil for a missing directory. */
+  def dataFolders[A](tableDir: File)(enter: File => Option[A]): Seq[(File, A, Seq[File])] = {
+    def visit(dir: File): Seq[(File, A, Seq[File])] = enter(dir).toSeq.flatMap { a =>
+      val here = Option(dir.listFiles()).toSeq.flatten
+      val files = here.filter(isParquet)
+      (if (files.isEmpty) Nil else Seq((dir, a, files))) ++
+        here.filter(d => d.isDirectory && !skipDir(d.getName)).flatMap(visit)
+    }
+    if (tableDir.isDirectory) visit(tableDir) else Nil
+  }
 
   // ---- zone-map JSON: sidecar file entries and redis stats-hash values ----
 
@@ -163,10 +190,10 @@ object CatalogBackend {
     * [[LakeWriter.catalogPath]]s; a file whose time values are ALL
     * NULL gets no bounds (kept unpruned) instead of an NPE after its
     * data is already on disk. */
-  def fileStats(df: DataFrame, timeCol: String): Seq[FileStat] =
-    df.select(col(timeCol), input_file_name().as("file"))
+  def fileStats(df: DataFrame): Seq[FileStat] =
+    df.select(col(TimeCol), input_file_name().as("file"))
       .groupBy(col("file"))
-      .agg(min(timeCol), max(timeCol), count(lit(1)))
+      .agg(min(TimeCol), max(TimeCol), count(lit(1)))
       .collect().toSeq.map { r =>
         def opt(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
         FileStat(LakeWriter.catalogPath(r.getString(0)), opt(1), opt(2), Some(r.getLong(3)))

@@ -48,23 +48,16 @@ import graft.TimeRangeExtract.TimeRange
  * still reach the parquet scan below it. Above it the cost per row wins,
  * and a row costs more without whole-stage code, so a larger request
  * plans in the engine's session. `ProfileProbe` (test sources) timed
- * both profiles over one file of 0.25 to 64 MB on a 4-core host. The
+ * both profiles over one file of 0.25 to 8 MB on a 4-core host. The
  * crossover depends on the shape and on whether the window's literals
- * were compiled before: a group-by breakdown crossed at 2-3 MB for a
- * repeated window and at 6-8 MB for a new one; a raw-row export was
- * slower in the clone for a repeated window at every size (by 7-40 ms
- * up to 6 MB), and for a new window about even up to 4 MB and slower
- * above. The mean of the four crossed between 3.5 and 4.2 MB, so one
- * file's open cost sits at the crossover. At 64 MB the engine's
- * session was 2.2x (breakdown) and 1.3x (export) faster. Timed again
- * (0.25 to 8 MB) once the clone read each table as one partition, the
- * clone won by more: a breakdown crossed at 4-6 MB for a repeated
- * window and was still 28% faster in the clone at 8 MB for a new one;
- * an export was 8-35 ms slower in the clone for a repeated window at
- * every size, and faster for a new window up to 6 MB. The mean of the
- * four now crosses at about 8 MB, so one file's open cost errs on the
- * side of the engine's session. Tuning `openCostInBytes` moves this
- * line as well as the packing of files into scan splits.
+ * were compiled before: a group-by breakdown crossed at 4-6 MB for a
+ * repeated window and was still 28% faster in the clone at 8 MB for a
+ * new one; a raw-row export was 8-35 ms slower in the clone for a
+ * repeated window at every size, and faster for a new window up to
+ * 6 MB. The mean of the four crosses at about 8 MB, so one file's open
+ * cost errs on the side of the engine's session. Tuning
+ * `openCostInBytes` moves this line as well as the packing of files
+ * into scan splits.
  *
  * Differences from the reference, by design (documented quirk fixes):
  *  - an empty pruned file set yields an empty DataFrame with the
@@ -72,8 +65,7 @@ import graft.TimeRangeExtract.TimeRange
  *  - the plan-based time extraction replaces 16 regexes (O2) and the
  *    FROM-rewrite string surgery (O8) becomes a logical-plan splice.
  */
-class Engine(val spark: SparkSession, val catalog: CatalogBackend,
-             val defaultDb: String = "mydb", val timeCol: String = "time") {
+class Engine(val spark: SparkSession, val catalog: CatalogBackend) {
 
   graft.functions.Compat.register(spark)
   Tables.configure(spark)
@@ -81,6 +73,7 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
   private lazy val smallProfile = new Engine.SmallProfile(spark)
 
   import TimeRangeExtract._
+  import CatalogBackend.{DefaultDb, TimeCol}
 
   def showDatabases(): DataFrame = {
     import spark.implicits._
@@ -103,14 +96,14 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
       // the events `ts` drift fix) so the rewritten epoch-ns
       // comparisons analyze; NsTimeFilterPushdown then restores the
       // parquet pushdown for the range predicate.
-      Tables.readEvolving(spark, paths, Seq("ts", "time", timeCol).distinct)
+      Tables.readEvolving(spark, paths)
     } else {
       val all = catalog.prunedPaths(db, table, None)
       if (all.isEmpty) spark.emptyDataFrame
       else { // empty result with the table's real schema (quirk §2.3-6 fix),
         // from memoized footers: no scan or listing of the whole table; a
         // local relation, so its size (none) is known to the profile choice
-        val schema = Tables.evolvingSchema(spark, all, Seq("ts", "time", timeCol).distinct)
+        val schema = Tables.evolvingSchema(spark, all)
         spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
       }
     }
@@ -123,7 +116,7 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
    */
   def query(sql0: String, db0: String = ""): DataFrame = splice(sql0, db0) match {
     case Left(answer) => answer
-    case Right(Engine.Spliced(analyzed, wrapped)) =>
+    case Right(Engine.Spliced(analyzed, wrap)) =>
       val small = analyzed match {
         // a command's effects (a temp view, a cached table) belong to the
         // engine's session; after analysis its query is no longer a child,
@@ -131,8 +124,8 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
         case _: org.apache.spark.sql.catalyst.plans.logical.Command => false
         case q => Engine.inputBytes(q) <= spark.sessionState.conf.filesOpenCostInBytes
       }
-      // a command wrapper analyzes its query itself, in the session it runs in
-      val plan = wrapped.getOrElse(if (small) Engine.SmallProfile.plan(analyzed) else analyzed)
+      // EXPLAIN or DESCRIBE wraps the plan the profile chose: the one that runs
+      val plan = wrap(if (small) Engine.SmallProfile.plan(analyzed) else analyzed)
       org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(
         if (small) smallProfile.session() else spark, plan)
   }
@@ -145,7 +138,7 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
    */
   private[graft] def splice(sql0: String, db0: String): Either[DataFrame, Engine.Spliced] = {
     val sql = sql0.trim.replaceAll("\\s+", " ")
-    val db = if (db0.nonEmpty) db0 else defaultDb
+    val db = if (db0.nonEmpty) db0 else DefaultDb
     val upper = sql.toUpperCase.stripSuffix(";").trim
     if (upper == "SHOW DATABASES") return Left(showDatabases())
     if (upper == "SHOW TABLES") return Left(showTables(db))
@@ -174,7 +167,7 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
     // metadata.json carries row_count for exactly this). Command
     // wrappers (EXPLAIN/DESCRIBE) must show the real plan, so skip.
     if (parsed == planOpt) // not unwrapped from a command
-      planOpt.flatMap(Engine.metadataAggTarget(_, timeCol)).foreach {
+      planOpt.flatMap(Engine.metadataAggTarget).foreach {
         case (parts, specs, timeFiltered) =>
           val (d, t) =
             if (parts.size == 1) (db, parts.head)
@@ -190,7 +183,7 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
             val boundsTypeOk = !needBounds ||
               catalog.prunedPaths(d, t, None).headOption.forall { p =>
                 scala.util.Try(Tables.footerSchema(spark, p)).toOption
-                  .flatMap(_.fields.find(_.name.equalsIgnoreCase(timeCol)))
+                  .flatMap(_.fields.find(_.name.equalsIgnoreCase(TimeCol)))
                   .exists(_.dataType == org.apache.spark.sql.types.LongType)
               }
             val (metaCnt, metaBounds) =
@@ -198,7 +191,7 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
                 // specs are count-only here (matcher guarantees it);
                 // the WHERE is exactly a time range, represented
                 // inclusively by extract's normalization
-                val rangeCnt = extract(planOpt.get, timeCol).asTuple
+                val rangeCnt = extract(planOpt.get).asTuple
                   .flatMap(catalog.metadataRangeCount(d, t, _))
                 (rangeCnt, None)
               } else catalog.metadataStats(d, t)
@@ -237,7 +230,7 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
     // never gets the long-side rewrite applied to its timestamp side.
     val timeIsLong = scala.collection.mutable.Map[String, Boolean]()
     var lakeTables = 0
-    val spliced = Engine.rewriteScoped(planOpt.get, timeCol, (r, scope, alias, cmps) => {
+    val spliced = Engine.rewriteScoped(planOpt.get, (r, scope, alias, cmps) => {
       val parts = r.multipartIdentifier
       val (d, t) = if (parts.size == 1) (db, parts.head)
         else (parts.dropRight(1).mkString("."), parts.last)
@@ -245,7 +238,7 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
       else {
         lakeTables += 1
         val tableDf = readTable(d, t, TimeRange.of(cmps).asTuple)
-        tableDf.schema.fields.find(_.name.equalsIgnoreCase(timeCol)).foreach { f =>
+        tableDf.schema.fields.find(_.name.equalsIgnoreCase(TimeCol)).foreach { f =>
           val isLong = f.dataType == org.apache.spark.sql.types.LongType
           val qualifiers = alias.fold(Seq(t, s"$d.$t"))(Seq(_)) ++
             cmps.map(_.attr.nameParts.dropRight(1).mkString(".")).filter(_.nonEmpty)
@@ -270,12 +263,19 @@ class Engine(val spark: SparkSession, val catalog: CatalogBackend,
     val allLong = timeIsLong.values.forall(identity)
     val finalPlan =
       if (!timeIsLong.values.exists(identity)) spliced
-      else rewriteTimeLiterals(spliced, timeCol, attributable = parts =>
+      else rewriteTimeLiterals(spliced, attributable = parts =>
         timeIsLong.getOrElse(parts.dropRight(1).mkString(".").toLowerCase, allLong))
     // analyzed here, so temp views and functions registered on this
     // session after its small-profile clone was made still resolve
-    Right(Engine.Spliced(spark.sessionState.executePlan(finalPlan).analyzed,
-      if (parsed == planOpt) None else Some(wrap(finalPlan))))
+    val analyzed = spark.sessionState.executePlan(finalPlan).analyzed match {
+      // a temp view keeps the spliced plan, as `Dataset.createTempView`
+      // makes one: its SQL text names lake tables Spark's catalog lacks
+      case v: org.apache.spark.sql.execution.command.CreateViewCommand
+          if v.viewType != org.apache.spark.sql.catalyst.analysis.PersistedView =>
+        v.copy(originalText = None)
+      case p => p
+    }
+    Right(Engine.Spliced(analyzed, wrap))
   }
 }
 
@@ -286,8 +286,8 @@ object Engine {
   import graft.TimeRangeExtract.TimeCmp
 
   /** A lake query after the splice: its plan analyzed in the engine's
-    * session, and the EXPLAIN or DESCRIBE command around it, if any. */
-  private[graft] final case class Spliced(analyzed: LogicalPlan, wrapped: Option[LogicalPlan])
+    * session, and the EXPLAIN or DESCRIBE around a plan of it, if any. */
+  private[graft] final case class Spliced(analyzed: LogicalPlan, wrap: LogicalPlan => LogicalPlan)
 
   /** Marks the `SubqueryAlias` over each spliced lake-table read. */
   private[graft] val LakeRead = org.apache.spark.sql.catalyst.trees.TreeNodeTag[Unit]("graft.lakeRead")
@@ -370,13 +370,14 @@ object Engine {
   /**
    * Matches EXACTLY `SELECT <aggs> FROM <single relation>` — no WHERE,
    * no grouping, no DISTINCT/FILTER — where every projection is
-   * count(*|1), min(timeCol) or max(timeCol), and returns the
+   * count(*|1), min(time) or max(time), and returns the
    * relation's name parts plus (agg kind, output column name) per
    * projection (explicit alias, or Spark's auto-name). These are the
    * aggregates the catalog metadata can answer without a scan.
    */
-  private[graft] def metadataAggTarget(plan: LogicalPlan, timeCol: String)
+  private[graft] def metadataAggTarget(plan: LogicalPlan)
       : Option[(Seq[String], Seq[(MetaAgg, String)], Boolean)] = {
+    import graft.CatalogBackend.TimeCol
     import graft.TimeRangeExtract.isExactTimeRange
     import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedAttribute, UnresolvedFunction, UnresolvedStar}
     import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Literal}
@@ -394,12 +395,12 @@ object Engine {
           // resolved attribute would yield), not the query's case
           case (Seq("min"), Seq(a: UnresolvedAttribute))
               if a.nameParts.size == 1 &&
-                a.nameParts.head.equalsIgnoreCase(timeCol) =>
-            Some((MetaMinTime, s"min($timeCol)"))
+                a.nameParts.head.equalsIgnoreCase(TimeCol) =>
+            Some((MetaMinTime, s"min($TimeCol)"))
           case (Seq("max"), Seq(a: UnresolvedAttribute))
               if a.nameParts.size == 1 &&
-                a.nameParts.head.equalsIgnoreCase(timeCol) =>
-            Some((MetaMaxTime, s"max($timeCol)"))
+                a.nameParts.head.equalsIgnoreCase(TimeCol) =>
+            Some((MetaMaxTime, s"max($TimeCol)"))
           case _ => None
         }
       case _ => None
@@ -423,7 +424,7 @@ object Engine {
       // answer, via metadataRangeCount
       val (child, filtered) = child0 match {
         case org.apache.spark.sql.catalyst.plans.logical.Filter(cond, c)
-            if isExactTimeRange(cond, timeCol) => (c, true)
+            if isExactTimeRange(cond) => (c, true)
         case c => (c, false)
       }
       val rel = child match {
@@ -453,7 +454,7 @@ object Engine {
    * subquery expressions start with no carried conjuncts: a filter
    * outside them says nothing about their rows.
    */
-  private[graft] def rewriteScoped(plan: LogicalPlan, timeCol: String,
+  private[graft] def rewriteScoped(plan: LogicalPlan,
       replace: (UnresolvedRelation, Set[String], Option[String], Seq[TimeCmp]) =>
         Option[LogicalPlan]): LogicalPlan = {
     def walk(p: LogicalPlan, scope: Set[String], carried: Seq[TimeCmp]): LogicalPlan = p match {
@@ -475,7 +476,7 @@ object Engine {
         w.copy(child = walk(w.child, all, carried), cteRelations = newDefs)
       case sa @ SubqueryAlias(ident, r: UnresolvedRelation) =>
         val cmps = TimeRangeExtract.reaching(r.multipartIdentifier,
-          TimeRangeExtract.pushDown(sa, carried, timeCol).head)
+          TimeRangeExtract.pushDown(sa, carried).head)
         replace(r, scope, Some(ident.name.toLowerCase), cmps)
           .map(sub => sa.copy(child = sub)).getOrElse(sa)
       // DESCRIBE [QUERY] <q> / EXPLAIN <q> hold their query outside
@@ -489,7 +490,7 @@ object Engine {
         replace(r, scope, None, TimeRangeExtract.reaching(r.multipartIdentifier, carried))
           .getOrElse(r)
       case other =>
-        val down = TimeRangeExtract.pushDown(other, carried, timeCol)
+        val down = TimeRangeExtract.pushDown(other, carried)
         other.withNewChildren(other.children.zip(down).map { case (c, cs) => walk(c, scope, cs) })
           .transformExpressionsDown {
             case se: SubqueryExpression => se.withNewPlan(walk(se.plan, scope, Nil))

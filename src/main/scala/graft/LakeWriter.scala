@@ -39,11 +39,11 @@ object LakeWriter {
     }
   }
 
-  /** Write `df` (with an int64-ns time column) as a lake measurement.
-    * `hourPartitions=true` adds the reference's `hour=HH` level below
-    * `date=` (queryClient.go:597-607 layout). */
+  /** Write `df` (with the int64-ns [[CatalogBackend.TimeCol]]) as a lake
+    * measurement. `hourPartitions=true` adds the reference's `hour=HH`
+    * level below `date=` (queryClient.go:597-607 layout). */
   def write(root: String, db: String, table: String, df: DataFrame,
-            timeCol: String = "time", mode: SaveMode = SaveMode.Overwrite,
+            mode: SaveMode = SaveMode.Overwrite,
             hourPartitions: Boolean = false,
             bloomFilterCols: Seq[String] = Nil,
             zorderCols: Seq[String] = Nil,
@@ -51,7 +51,7 @@ object LakeWriter {
     val spark = df.sparkSession
     Tables.configure(spark)
     val tableDir = s"$root/$db/$table"
-    val ts = timestamp_micros(expr(s"$timeCol div 1000"))
+    val ts = timestamp_micros(expr(s"${CatalogBackend.TimeCol} div 1000"))
     val withDate = df.withColumn("date", date_format(ts, "yyyy-MM-dd"))
     val (partCols, toWrite) =
       if (hourPartitions)
@@ -72,21 +72,24 @@ object LakeWriter {
     }
     // Append is incremental: snapshot the file set before the write so
     // the stats/registration pass below covers ONLY the delta — an
-    // O(new files) pass, not an O(table) rescan of all history.
+    // O(new files) pass, not an O(table) rescan of all history. The
+    // listing is the catalog's: a file staged under `tmp/` (a compaction
+    // racing this write) or a `_` sidecar is no part of the delta.
     val local = isLocalUri(tableDir)
+    def listed(): Set[String] = CatalogBackend.dataFolders(localFile(tableDir))(_ => Some(()))
+      .flatMap(_._3).map(_.getAbsolutePath).toSet
     val before: Set[String] =
-      if (local && mode == SaveMode.Append) listParquet(localFile(tableDir))
-      else Set.empty
+      if (local && mode == SaveMode.Append) listed() else Set.empty
     writer.partitionBy(partCols: _*).parquet(tableDir)
     // zone maps: min/max time per newly written file. On a non-local
     // lake (no walkable listing) fall back to the whole-table scan;
     // register is idempotent by path, so that stays correct.
     val statsSource =
       if (local) {
-        val delta = (listParquet(localFile(tableDir)) -- before).toSeq.sorted
+        val delta = (listed() -- before).toSeq.sorted
         if (delta.isEmpty) None else Some(spark.read.parquet(delta: _*))
       } else Some(spark.read.parquet(tableDir))
-    val written = statsSource.map(CatalogBackend.fileStats(_, timeCol)).getOrElse(Nil)
+    val written = statsSource.map(CatalogBackend.fileStats).getOrElse(Nil)
     // publish to the active catalog backend too (same stats as the
     // zone maps) — a redis-indexed lake sees the new files without a
     // filesystem walk; the json backend's no-op register is covered by
@@ -120,14 +123,6 @@ object LakeWriter {
     * file:// root passed to `new File(string)` would resolve nothing
     * and the delta listing would silently come back empty. */
   private def localFile(p: String): File = new File(catalogPath(p))
-
-  private def listParquet(dir: File): Set[String] =
-    if (!dir.isDirectory) Set.empty
-    else Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
-      if (f.isDirectory) listParquet(f)
-      else if (CatalogBackend.isParquet(f)) Seq(f.getAbsolutePath)
-      else Nil
-    }.toSet
 
   /**
    * Write (or incrementally merge) a folder's `metadata.json` from

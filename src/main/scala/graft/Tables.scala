@@ -131,16 +131,18 @@ object Tables {
    * read exactly once, distributed.
    */
   def readEvolving(spark: SparkSession, paths: Seq[String],
-                   timeCols: Seq[String] = Seq("ts", "time")): DataFrame =
+                   timeCols: Seq[String] = LakeTimeCols): DataFrame =
     readGroups(spark, schemaGroups(spark, paths), timeCols)
 
-  /** The schema [[readEvolving]] gives `paths`, from the footer memo
-    * and one file per schema group: the full file set is never listed
-    * or scanned (the empty-window answer over a whole table). */
-  def evolvingSchema(spark: SparkSession, paths: Seq[String],
-                     timeCols: Seq[String]): StructType =
+  /** The lake's time column and the events table's `ts`. */
+  private val LakeTimeCols = Seq("ts", CatalogBackend.TimeCol)
+
+  /** The schema [[readEvolving]] gives `paths` by default, from the
+    * footer memo and one file per schema group: the full file set is
+    * never listed or scanned (the empty-window answer over a whole table). */
+  def evolvingSchema(spark: SparkSession, paths: Seq[String]): StructType =
     readGroups(spark, schemaGroups(spark, paths).map { case (s, ps) => (s, ps.take(1)) },
-      timeCols).schema
+      LakeTimeCols).schema
 
   /** `paths` grouped by memoized footer schema, path order kept within a group. */
   private def schemaGroups(spark: SparkSession,

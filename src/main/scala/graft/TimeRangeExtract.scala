@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedStar}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
+import graft.CatalogBackend.TimeCol
 
 /**
  * The time-predicate pass over a parsed Catalyst plan.
@@ -80,14 +81,14 @@ object TimeRangeExtract {
     }
   }
 
-  /** The one matcher: `e` as a comparison of `timeCol` against another
-    * operand — `time op v`, `v op time`, `time = v`,
+  /** The one matcher: `e` as a comparison of the [[TimeCol]] against
+    * another operand — `time op v`, `v op time`, `time = v`,
     * `time BETWEEN v AND w` (the parser leaves BETWEEN as an unresolved
     * function call) or `NOT` around a one-sided one. Whether a bound
     * evaluates is the reader's concern. */
-  def timeCmp(e: Expression, timeCol: String): Option[TimeCmp] = {
+  def timeCmp(e: Expression): Option[TimeCmp] = {
     def isTime(x: Expression): Option[UnresolvedAttribute] = x match {
-      case a: UnresolvedAttribute if a.nameParts.last.equalsIgnoreCase(timeCol) => Some(a)
+      case a: UnresolvedAttribute if a.nameParts.last.equalsIgnoreCase(TimeCol) => Some(a)
       case Cast(c, _, _, _) => isTime(c)
       case _ => None
     }
@@ -107,7 +108,7 @@ object TimeRangeExtract {
       // a negated one-sided bound is the flipped bound: NOT (time >= v)
       // is time < v (both reject a NULL time); a negated equality or
       // BETWEEN is two ranges and stays unmatched
-      case Not(inner) => timeCmp(inner, timeCol).collect {
+      case Not(inner) => timeCmp(inner).collect {
         case c @ TimeCmp(_, Some(b), None, _) => c.copy(lo = None, hi = Some(b.copy(strict = !b.strict)))
         case c @ TimeCmp(_, None, Some(b), _) => c.copy(lo = Some(b.copy(strict = !b.strict)), hi = None)
       }
@@ -123,12 +124,12 @@ object TimeRangeExtract {
   def parse(spark: SparkSession, sql: String): LogicalPlan =
     spark.sessionState.sqlParser.parsePlan(sql)
 
-  /** Bounds for `timeCol` from the conjunctive time comparisons of every
+  /** Time bounds from the conjunctive time comparisons of every
     * Filter in the plan, unattributed: for a plan that reads one
     * relation through one filter (the metadata count's shape). */
-  def extract(plan: LogicalPlan, timeCol: String = "time"): TimeRange =
+  def extract(plan: LogicalPlan): TimeRange =
     TimeRange.of(plan.collect { case Filter(cond, _) => conjuncts(cond) }.flatten
-      .flatMap(timeCmp(_, timeCol)))
+      .flatMap(timeCmp))
 
   /**
    * True iff `cond` is a conjunction of time comparisons whose bounds
@@ -137,8 +138,8 @@ object TimeRangeExtract {
    * metadata count fast path must not treat a broader condition as its
    * time-range projection.
    */
-  def isExactTimeRange(cond: Expression, timeCol: String): Boolean =
-    conjuncts(cond).forall(c => timeCmp(c, timeCol).exists(_.isExact))
+  def isExactTimeRange(cond: Expression): Boolean =
+    conjuncts(cond).forall(c => timeCmp(c).exists(_.isExact))
 
   // ---- the per-occurrence walk -------------------------------------------
 
@@ -159,15 +160,15 @@ object TimeRangeExtract {
     * expression over `time` counts as computed `time` (Spark names
     * `cast(time AS …)` after its child). A window function makes every
     * row depend on the rows a filter would drop, so it yields None too. */
-  private def timeSource(list: Seq[Expression], timeCol: String): Option[Seq[String]] = {
-    def isT(a: UnresolvedAttribute) = a.nameParts.last.equalsIgnoreCase(timeCol)
+  private def timeSource(list: Seq[Expression]): Option[Seq[String]] = {
+    def isT(a: UnresolvedAttribute) = a.nameParts.last.equalsIgnoreCase(TimeCol)
     val windowed = list.exists(_.exists {
       case _: WindowExpression | _: UnresolvedWindowExpression => true
       case _ => false
     })
     val named = list.filter {
       case a: UnresolvedAttribute => isT(a)
-      case Alias(_, n) => n.equalsIgnoreCase(timeCol)
+      case Alias(_, n) => n.equalsIgnoreCase(TimeCol)
       case _: UnresolvedStar => false
       case e => e.exists { case a: UnresolvedAttribute => isT(a); case _ => false }
     }
@@ -205,12 +206,12 @@ object TimeRangeExtract {
    * Union, Distinct, column-renaming aliases, …) hands down nothing, and
    * so does a Project computing `time` or a window function.
    */
-  def pushDown(node: LogicalPlan, carried: Seq[TimeCmp], timeCol: String): Seq[Seq[TimeCmp]] = {
+  def pushDown(node: LogicalPlan, carried: Seq[TimeCmp]): Seq[Seq[TimeCmp]] = {
     def each(cs: Seq[TimeCmp]) = node.children.map(_ => cs)
     node match {
       case Filter(cond, child) =>
         val attributable = relationCount(child) == 1
-        each(carried ++ conjuncts(cond).flatMap(timeCmp(_, timeCol))
+        each(carried ++ conjuncts(cond).flatMap(timeCmp)
           .filter(c => !c.range.isEmpty && (c.at.nonEmpty || attributable)))
       case SubqueryAlias(ident, _) =>
         each(carried.flatMap { c =>
@@ -221,7 +222,7 @@ object TimeRangeExtract {
       case _: Sort => each(carried)
       case _: Join => each(carried.filter(_.at.nonEmpty))
       case Project(list, _) =>
-        each(timeSource(list, timeCol).toSeq.flatMap(q => carried.map(_.copy(at = q))))
+        each(timeSource(list).toSeq.flatMap(q => carried.map(_.copy(at = q))))
       case _ => each(Nil)
     }
   }
@@ -235,9 +236,9 @@ object TimeRangeExtract {
     * its FROM-clause alias and the range of the conjuncts reaching it. */
   case class Occurrence(name: Seq[String], alias: Option[String], range: TimeRange)
 
-  def occurrences(plan: LogicalPlan, timeCol: String): Seq[Occurrence] = {
+  def occurrences(plan: LogicalPlan): Seq[Occurrence] = {
     val found = Seq.newBuilder[Occurrence]
-    Engine.rewriteScoped(plan, timeCol, (r, scope, alias, cmps) => {
+    Engine.rewriteScoped(plan, (r, scope, alias, cmps) => {
       val name = r.multipartIdentifier
       if (!(name.size == 1 && scope.contains(name.head.toLowerCase)))
         found += Occurrence(name, alias, TimeRange.of(cmps))
@@ -249,18 +250,16 @@ object TimeRangeExtract {
   /** Per-table view of [[occurrences]], keyed by lowercase table name. A
     * table that occurs more than once gets no range here (each
     * occurrence still prunes by its own path in the engine). */
-  def extractPerRelation(plan: LogicalPlan,
-                         timeCol: String = "time"): Map[String, TimeRange] =
-    occurrences(plan, timeCol).groupBy(_.name.last.toLowerCase).map {
+  def extractPerRelation(plan: LogicalPlan): Map[String, TimeRange] =
+    occurrences(plan).groupBy(_.name.last.toLowerCase).map {
       case (t, Seq(o)) => t -> o.range
       case (t, _) => t -> TimeRange(None, None)
     }
 
   /** Per-alias view of [[occurrences]]: the range of each occurrence
     * whose FROM-clause alias is unique in the statement. */
-  def extractPerAlias(plan: LogicalPlan,
-                      timeCol: String = "time"): Map[String, TimeRange] =
-    occurrences(plan, timeCol).groupBy(_.alias).collect {
+  def extractPerAlias(plan: LogicalPlan): Map[String, TimeRange] =
+    occurrences(plan).groupBy(_.alias).collect {
       case (Some(a), Seq(o)) => a -> o.range
     }
 
@@ -278,10 +277,10 @@ object TimeRangeExtract {
    * NOT be rewritten to ns longs — that would be a silently wrong
    * comparison.
    */
-  def rewriteTimeLiterals(plan: LogicalPlan, timeCol: String,
+  def rewriteTimeLiterals(plan: LogicalPlan,
                           attributable: Seq[String] => Boolean = _ => true): LogicalPlan = {
     val rule: PartialFunction[Expression, Expression] = Function.unlift { (e: Expression) =>
-      timeCmp(e, timeCol)
+      timeCmp(e)
         .filter(c => attributable(c.attr.nameParts) &&
           Seq(c.lo, c.hi).flatten.exists(_.ns.isDefined))
         .map(_.asNsComparison)
@@ -295,7 +294,7 @@ object TimeRangeExtract {
     plan.transformDownWithSubqueries {
       case w: UnresolvedWith =>
         w.copy(cteRelations = w.cteRelations.map { case (n, d, m) =>
-          (n, rewriteTimeLiterals(d, timeCol, attributable).asInstanceOf[SubqueryAlias], m)
+          (n, rewriteTimeLiterals(d, attributable).asInstanceOf[SubqueryAlias], m)
         })
       case p => p.transformExpressions(rule)
     }

@@ -7,7 +7,7 @@ import org.apache.arrow.vector.ipc.ArrowStreamWriter
 import org.apache.arrow.vector.types.{FloatingPointPrecision, TimeUnit => ArrowTimeUnit}
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ArrowSchema}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 
@@ -33,13 +33,13 @@ import scala.jdk.CollectionConverters._
  * to `out` before the next partition runs. Each column's setter is
  * chosen once: int64, int, double, float, boolean, well-formed UTF-8
  * strings and timestamps from 1900 to 9999 go straight from the row
- * into the typed vector; a BINARY value is set as the base64 text the
- * JSON encoder writes for it; any other value is converted to its
- * external Scala value and set as the `Row` path set it, so the IPC
- * bytes are that path's for every other type.
+ * into the typed vector; any other value is converted by
+ * [[ResultEncoder.toExternal]] and set as the `Row` path set it, so the
+ * IPC bytes are that path's for every type without a binary in it, and
+ * a binary, top-level or nested, is the base64 text JSON writes.
  */
 object ArrowEncoder {
-  private val TIME_FORCED = Set("time", "time_str", "time_int")
+  private val TIME_FORCED = Set(graft.CatalogBackend.TimeCol, "time_str", "time_int")
 
   private def arrowField(f: StructField): Field = {
     val t: ArrowType = f.dataType match {
@@ -81,8 +81,8 @@ object ArrowEncoder {
   }
 
   private def setter(f: StructField, src: Int, vec: FieldVector): Setter = {
-    val toScala = CatalystTypeConverters.createToScalaConverter(f.dataType)
-    val slow: Setter = (r, ri) => setExternal(vec, ri, toScala(r.get(src, f.dataType)))
+    val external = ResultEncoder.toExternal(f.dataType)
+    val slow: Setter = (r, ri) => setExternal(vec, ri, external(r.get(src, f.dataType)))
     (vec, f.dataType) match {
       case (v: TimeStampNanoTZVector, LongType) => (r, ri) => v.setSafe(ri, r.getLong(src))
       case (v: TimeStampNanoTZVector, TimestampType) => (r, ri) => {
@@ -98,9 +98,6 @@ object ArrowEncoder {
         val u = r.getUTF8String(src)
         if (ResultEncoder.wellFormed(u)) v.setSafe(ri, u.getBytes) else slow(r, ri)
       }
-      // the base64 text JSON writes for the same value
-      case (v: VarCharVector, BinaryType) => (r, ri) =>
-        v.setSafe(ri, java.util.Base64.getEncoder.encode(r.getBinary(src)))
       case _ => slow
     }
   }

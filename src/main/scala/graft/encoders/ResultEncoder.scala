@@ -35,18 +35,20 @@ import org.apache.spark.unsafe.types.UTF8String
  * written straight from the row. Every other value (float, short,
  * decimal, date, TIMESTAMP_NTZ, binary, arrays, maps, structs, an
  * earlier or later timestamp, a string that is not well-formed UTF-8)
- * is converted to its external Scala value and rendered by
- * [[encodeValue]], the encoder the `Row` path used, so the bytes are the
- * same as that path's for every type.
+ * is converted by [[toExternal]] and rendered by [[encodeValue]], the
+ * encoder the `Row` path used, so the bytes are the same as that path's
+ * for every type, but for a binary inside a map or struct: that is
+ * base64 text, where the `Row` path wrote the array's identity string.
  */
 object ResultEncoder {
   private val RFC3339NANO = DateTimeFormatter.ofPattern(
     "yyyy-MM-dd'T'HH:mm:ss.SSSSSSSSSXXX").withZone(ZoneOffset.UTC)
 
-  /** time first, rest alphabetical (reference flightsql.go:313-324). */
+  /** The lake's time column first, rest alphabetical (reference
+    * flightsql.go:313-324). */
   def orderedColumns(df: DataFrame): Seq[String] = {
     val names = df.schema.fieldNames.toSeq
-    val (time, rest) = names.partition(_.equalsIgnoreCase("time"))
+    val (time, rest) = names.partition(_.equalsIgnoreCase(graft.CatalogBackend.TimeCol))
     time ++ rest.sorted
   }
 
@@ -78,7 +80,6 @@ object ResultEncoder {
       "\"" + RFC3339NANO.format(t.toInstant) + "\""
     case i: java.time.Instant => "\"" + RFC3339NANO.format(i) + "\""
     case d: java.sql.Date => "\"" + d.toString + "\""
-    case b: Array[Byte] => "\"" + java.util.Base64.getEncoder.encodeToString(b) + "\""
     case s: scala.collection.Seq[_] =>
       s.map(x => encodeValue(x, field)).mkString("[", ",", "]")
     case other => "\"" + escape(other.toString) + "\""
@@ -144,14 +145,36 @@ object ResultEncoder {
     true
   }
 
+  /** A column's internal value as the external value an encoder renders
+    * without a writer of its own: the Scala value, with every byte array
+    * in it, at any depth, as its base64 text. */
+  private[encoders] def toExternal(dt: DataType): Any => Any = {
+    val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+    def hasBinary(t: DataType): Boolean = t match {
+      case BinaryType => true
+      case ArrayType(e, _) => hasBinary(e)
+      case MapType(k, v, _) => hasBinary(k) || hasBinary(v)
+      case StructType(fs) => fs.exists(f => hasBinary(f.dataType))
+      case _ => false
+    }
+    def base64(v: Any): Any = v match {
+      case b: Array[Byte] => java.util.Base64.getEncoder.encodeToString(b)
+      case s: scala.collection.Seq[_] => s.map(base64)
+      case m: scala.collection.Map[_, _] => m.map { case (k, x) => base64(k) -> base64(x) }
+      case r: org.apache.spark.sql.Row => org.apache.spark.sql.Row.fromSeq(r.toSeq.map(base64))
+      case other => other
+    }
+    if (hasBinary(dt)) v => base64(toScala(v)) else toScala
+  }
+
   /** Writes one non-null value of a column from an internal row. */
   private trait Put { def apply(row: InternalRow, i: Int, s: ByteSink): Unit }
 
-  /** The value converted to its external type and rendered by
-    * [[encodeValue]]: the `Row` path's bytes for any type. */
+  /** The value converted by [[toExternal]] and rendered by
+    * [[encodeValue]], as the `Row` path did. */
   private def converted(f: StructField): Put = {
-    val toScala = CatalystTypeConverters.createToScalaConverter(f.dataType)
-    (r, i, s) => s.bytes(encodeValue(toScala(r.get(i, f.dataType)), f).getBytes(UTF_8))
+    val external = toExternal(f.dataType)
+    (r, i, s) => s.bytes(encodeValue(external(r.get(i, f.dataType)), f).getBytes(UTF_8))
   }
 
   private val Null = "null".getBytes(UTF_8)

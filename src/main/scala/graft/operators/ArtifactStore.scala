@@ -335,6 +335,28 @@ object ArtifactStore {
     }
   }
 
+  /** Compact PLUS artifact-sidecar maintenance in one maintenance
+    * cycle: after the small-file pass ([[graft.LakeCompactor.compact]]),
+    * reclaim orphaned artifact families under the table's `_artifacts`
+    * sidecar with [[vacuumOrphans]] (a builder version bump strands the
+    * old name's generations forever otherwise — the per-artifact vacuum
+    * never sees sibling names). `artifactsLive` is the set of artifact
+    * names the CURRENT code builds; anything else under the sidecar is
+    * deleted once quiescent past the grace window.
+    * @return (compaction triple, orphaned artifact names removed) */
+  def compactWithArtifacts(spark: SparkSession, root: String, db: String,
+                           table: String, artifactsLive: Set[String],
+                           catalog: Option[graft.CatalogBackend] = None)
+      : ((Int, Int, Int), Seq[String]) = {
+    val c = graft.LakeCompactor.compact(spark, root, db, table, catalog)
+    val sidecar = new java.io.File(new java.io.File(new java.io.File(root, db), table), "_artifacts")
+    val removed =
+      if (!sidecar.isDirectory) Nil
+      else vacuumOrphans(spark, sidecar.getAbsolutePath, artifactsLive,
+        explicitRoot = Some(sidecar.getAbsolutePath))
+    (c, removed)
+  }
+
   /** Generations currently on disk for an artifact (test/ops probe). */
   def generations(spark: SparkSession, lakeDir: String, name: String,
                   explicitRoot: Option[String] = None): Seq[String] = {

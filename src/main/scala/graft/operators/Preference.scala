@@ -2377,7 +2377,7 @@ object Preference {
         sum(col("__w")).as("__den"))
       // TWO consumers (estimate + resample ranks) — without this the
       // corpus explode replays per consumer (the klDriftMatrix
-      // lesson, PlanAudit r17); the frame is (B+1)·|groups| rows
+      // lesson); the frame is (B+1)·|groups| rows
       .localCheckpoint(true)
     val est = drawn.filter(col("__r") === -1)
       .select(col("__g"), col("__den").as("n"),

@@ -6,13 +6,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming ingestion into the catalogued lake: attach a
- * [[LakeWriter]] sink to any streaming DataFrame with an int64-ns
- * time column. Each micro-batch APPENDS to `{root}/{db}/{table}` in
- * the reference's on-disk contract — `date=` partition folders,
- * per-folder `metadata.json` zone maps merged incrementally, and
- * (optionally) backend-catalog registration of exactly the batch's
- * new files — so data is time-prunable and queryable the moment its
- * batch commits. This closes the reference ecosystem's write path
+ * [[LakeWriter]] sink to any streaming DataFrame with the int64-ns
+ * [[CatalogBackend.TimeCol]]. Each micro-batch APPENDS to
+ * `{root}/{db}/{table}` in the reference's on-disk contract — `date=`
+ * partition folders, per-folder `metadata.json` zone maps merged
+ * incrementally, and (optionally) backend-catalog registration of
+ * exactly the batch's new files — so data is time-prunable and
+ * queryable the moment its batch commits. This closes the reference
+ * ecosystem's write path
  * (gigapi's ingestion/merge components live outside the querier;
  * SURVEY.md §0 module map) with Structured Streaming semantics.
  *
@@ -32,7 +33,7 @@ object LakeIngest {
                              shingleWords: Int = 3, k: Int = 64)
 
   def start(df: DataFrame, root: String, db: String, table: String,
-            checkpoint: String, timeCol: String = "time",
+            checkpoint: String,
             trigger: org.apache.spark.sql.streaming.Trigger =
               org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L),
             catalog: Option[CatalogBackend] = None,
@@ -43,8 +44,7 @@ object LakeIngest {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          LakeWriter.write(root, db, table, batch, timeCol,
-            mode = SaveMode.Append, catalog = catalog)
+          LakeWriter.write(root, db, table, batch, mode = SaveMode.Append, catalog = catalog)
           // keyed on batchId → an at-least-once replay OVERWRITES its
           // own previous attempt instead of double-appending signatures
           signatures.foreach(c => graft.SignatureStore.append(

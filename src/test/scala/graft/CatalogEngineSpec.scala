@@ -151,19 +151,19 @@ class CatalogEngineSpec extends AnyFunSuite with TempLakes {
     val plan = TimeRangeExtract.parse(spark,
       "SELECT * FROM mydb.meas m JOIN mydb.other o ON m.location = o.location " +
         "WHERE m.time >= '2023-01-02T00:00:00Z' AND o.time >= '2023-01-03T00:00:00Z'")
-    val per = TimeRangeExtract.extractPerRelation(plan, "time")
+    val per = TimeRangeExtract.extractPerRelation(plan)
     assert(per("meas").start.contains(T0 + 24 * HOUR_NS))
     assert(per("other").start.contains(T0 + 48 * HOUR_NS))
     // unqualified time with MULTIPLE relations attributes to neither
     val plan2 = TimeRangeExtract.parse(spark,
       "SELECT * FROM mydb.meas m JOIN mydb.other o ON m.location = o.location " +
         "WHERE time >= '2023-01-02T00:00:00Z'")
-    val per2 = TimeRangeExtract.extractPerRelation(plan2, "time")
+    val per2 = TimeRangeExtract.extractPerRelation(plan2)
     assert(per2("meas").isEmpty && per2("other").isEmpty)
     // unqualified with a single relation still attributes
     val plan3 = TimeRangeExtract.parse(spark,
       "SELECT * FROM mydb.meas WHERE time >= '2023-01-02T00:00:00Z'")
-    assert(TimeRangeExtract.extractPerRelation(plan3, "time")
+    assert(TimeRangeExtract.extractPerRelation(plan3)
       .apply("meas").start.contains(T0 + 24 * HOUR_NS))
   }
 
@@ -252,7 +252,7 @@ class CatalogEngineSpec extends AnyFunSuite with TempLakes {
     val plan = TimeRangeExtract.parse(spark,
       "SELECT * FROM mydb.meas WHERE time < '2023-01-02T00:00:00Z' " +
         "UNION ALL SELECT * FROM mydb.meas WHERE time >= '2023-01-03T00:00:00Z'")
-    assert(TimeRangeExtract.extractPerRelation(plan, "time")("meas").isEmpty)
+    assert(TimeRangeExtract.extractPerRelation(plan)("meas").isEmpty)
   }
 
   test("engine: db.table inside a string literal is not rewritten") {
@@ -445,6 +445,18 @@ class CatalogEngineSpec extends AnyFunSuite with TempLakes {
     } finally spark.catalog.dropTempView("meas_day2")
   }
 
+  test("engine: a temp view made over a lake table reads back through the engine") {
+    val select = "SELECT location, temperature FROM mydb.meas " +
+      "WHERE time >= '2023-01-02T00:00:00Z' AND time < '2023-01-03T00:00:00Z'"
+    engine.query(s"CREATE OR REPLACE TEMP VIEW meas_day2_rows AS $select", "")
+    try {
+      val back = engine.query("SELECT * FROM meas_day2_rows ORDER BY temperature", "")
+        .collect().toSeq
+      assert(back.size == 24)
+      assert(back == engine.query(s"$select ORDER BY temperature", "").collect().toSeq)
+    } finally spark.catalog.dropTempView("meas_day2_rows")
+  }
+
   test("engine: an input of unknown size plans in the engine's session") {
     import org.apache.spark.sql.types._
     val rows = spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row("loc2")), 1)
@@ -582,6 +594,14 @@ class CatalogEngineSpec extends AnyFunSuite with TempLakes {
       "AND b.time < '2023-01-02T00:00:00Z' GROUP BY a.location ORDER BY a.location",
       Seq("loc1|288"))
     assert(plan.contains("SortMergeJoin") && !plan.contains("Broadcast"), plan)
+  }
+
+  test("small profile: EXPLAIN prints the plan the request runs") {
+    val sql = s"SELECT location, count(*) AS n FROM mydb.meas WHERE $Day2 " +
+      "GROUP BY location ORDER BY location"
+    assertOneTask(engine, sql, Seq("loc2|24"))
+    val text = engine.query(s"EXPLAIN $sql", "").collect().map(_.getString(0)).mkString
+    assert(text.contains("Coalesce 1") && !text.contains("Exchange"), text)
   }
 
   test("engine session: the same breakdown still plans its exchange") {

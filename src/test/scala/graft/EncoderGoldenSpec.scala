@@ -168,6 +168,33 @@ class EncoderGoldenSpec extends AnyFunSuite with TempLakes {
     assert(ndjson(none).isEmpty)
   }
 
+  test("a binary nested in an array, map or struct is base64 in every format") {
+    val df = spark.sql("SELECT * FROM VALUES " +
+      "(1L, array(X'CAFE', NULL), map('k', X'CAFE'), named_struct('b', X'CAFE')), " +
+      "(2L, array(), map('k', CAST(NULL AS BINARY)), named_struct('b', CAST(NULL AS BINARY))) " +
+      "AS t(time, arr_b, map_b, st_b)")
+    assert(df.schema.map(_.dataType.simpleString) ==
+      Seq("bigint", "array<binary>", "map<string,binary>", "struct<b:binary>"))
+    val identity = "[B@".getBytes(UTF_8)
+    Seq[(String, DataFrame => Array[Byte])]("json" -> json, "ndjson" -> ndjson, "arrow" -> arrow)
+      .foreach { case (name, encode) =>
+        val bytes = encode(df)
+        assert(bytes.indexOfSlice(identity) < 0, s"$name: ${new String(bytes, UTF_8)}")
+        assert(encode(df).sameElements(bytes), s"$name: two encodes differ")
+      }
+    // 0xCAFE is "yv4=" in base64; an array of binaries keeps the bytes
+    // the Row path wrote
+    assert(new String(json(df), UTF_8) == """{"results":[""" +
+      """{"time":"1","arr_b":["yv4=",null],"map_b":"Map(k -> yv4=)","st_b":"[yv4=]"},""" +
+      """{"time":"2","arr_b":[],"map_b":"Map(k -> null)","st_b":"[null]"}]}""")
+    val arrays = df.select("arr_b")
+    assert(ResultEncoder.toJsonString(arrays) == RowPathEncoders.toJsonString(arrays))
+    Seq("arr_b", "map_b", "st_b").foreach { c =>
+      val texts = arrowStrings(df.select(c))
+      assert(texts.head.exists(_.contains("yv4=")), s"$c: $texts")
+    }
+  }
+
   test("a large result over several partitions and Arrow batches matches the Row-path bytes") {
     assert(json(large).length > 4 * 64 * 1024)
     assertGolden("large", large)

@@ -358,7 +358,7 @@ class LakeIngestSpec extends AnyFunSuite with TempLakes {
       val ownedSidecar = new File(tdir, "_artifacts")
       org.apache.commons.io.FileUtils.copyDirectory(
         new File(sidecar.get), ownedSidecar)
-      val (_, orphans) = LakeCompactor.compactWithArtifacts(spark, owned,
+      val (_, orphans) = ArtifactStore.compactWithArtifacts(spark, owned,
         "db", "t", artifactsLive = Set("thing-v2"))
       assert(orphans.toSet == Set("again-v1"),
         s"compactor sweep removed: $orphans")

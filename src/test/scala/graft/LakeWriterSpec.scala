@@ -160,6 +160,38 @@ class LakeWriterSpec extends AnyFunSuite with TempLakes {
     assert(c.files("mydb", "m5").size == firstFiles.size + appended.size)
   }
 
+  test("a file staged under tmp/ during an append stays out of the write's delta") {
+    import spark.implicits._
+    import org.apache.spark.sql.SaveMode
+    val root = tempDir("wlake9").toString
+    val t0 = 1705276800000000000L // 2024-01-15
+    LakeWriter.write(root, "mydb", "m9", Seq((t0, 1.0)).toDF("time", "v").coalesce(1))
+    val folder = new File(s"$root/mydb/m9/date=2024-01-15")
+    val part = folder.listFiles().find(CatalogBackend.isParquet).get
+    val staging = new File(folder, "tmp/compact-x")
+    val staged = new File(staging, "part-staged.parquet")
+    // runs in the append's own job, between the write's listings: a
+    // compaction staging a valid part file in the same folder meanwhile
+    val stage = udf { (t: Long) =>
+      if (!staged.exists()) {
+        staging.mkdirs()
+        Files.copy(part.toPath, staged.toPath)
+      }
+      t
+    }
+    val cat = new RecordingCatalog
+    LakeWriter.write(root, "mydb", "m9",
+      Seq((t0 + 3600L * 1000000000L, 2.0)).toDF("time", "v").coalesce(1)
+        .withColumn("time", stage(col("time"))),
+      mode = SaveMode.Append, catalog = Some(cat))
+    assert(staged.isFile)
+    assert(cat.registered.size == 1 && cat.registered.head.size == 1, cat.registered)
+    assert(!cat.registered.head.exists(_.contains("part-staged")), cat.registered)
+    assert(!new File(staging, "metadata.json").exists())
+    val meta = new String(Files.readAllBytes(new File(folder, "metadata.json").toPath))
+    assert(!meta.contains("part-staged") && meta.contains(""""row_count":2,"""), meta)
+  }
+
   test("file:// root still produces zone maps and registrations") {
     import spark.implicits._
     val bare = tempDir("wlake7").toString

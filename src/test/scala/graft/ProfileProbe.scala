@@ -112,8 +112,9 @@ object ProfileProbe {
         }
         def run(session: SparkSession, plan: LogicalPlan => LogicalPlan, fresh: Boolean): Double = {
           val t = System.nanoTime()
-          val analyzed = engine.splice(sql(fresh), "mydb").toOption.get.analyzed
-          val df = org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(session, plan(analyzed))
+          val spliced = engine.splice(sql(fresh), "mydb").toOption.get
+          val df = org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(session,
+            spliced.wrap(plan(spliced.analyzed)))
           graft.encoders.ResultEncoder.writeJson(df, java.io.OutputStream.nullOutputStream())
           (System.nanoTime() - t) / 1e6
         }

@@ -16,7 +16,7 @@ class TimeRangeExtractSpec extends AnyFunSuite {
   private def range(where: String) = {
     val plan = TimeRangeExtract.parse(spark,
       s"SELECT COUNT(*) AS value FROM hep.hep_1 WHERE $where")
-    TimeRangeExtract.extract(plan, "time")
+    TimeRangeExtract.extract(plan)
   }
 
   test("bare literals") {
